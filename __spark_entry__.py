@@ -233,7 +233,7 @@ def q_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12-scale skew lever): same 5 fixed supersteps as ``pagerank_5iter``
     but with ``salt_degree_threshold=10`` — at sf0.01 every part-side
     vertex (in-degree ≈ 30) splits its inbox across 4 salt replicas, so
-    the salted combine + recombine_sum merge path is what the oracle
+    the salted sum combine (fold, unsalt, re-fold) is what the oracle
     hash actually checks.  The oracle is the UNSALTED recurrence:
     salting must be a pure execution strategy, invisible in the result."""
     edges = edges_from_lineitem(spark, sf_dir)

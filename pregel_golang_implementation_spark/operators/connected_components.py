@@ -14,19 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_min,
-    combine_min_slim,
-    recombine_min,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 
 def cc_spec(max_supersteps: int = 100) -> AlgorithmSpec:
     def init_fn(vertices: DataFrame) -> DataFrame:
         return vertices.select("id", F.col("id").cast("double").alias("value"))
 
-    def msg_fn(value, weight, g):
+    def msg_fn(value, weight):
         return value
 
     def apply_fn(old, msg, g):
@@ -39,9 +34,7 @@ def cc_spec(max_supersteps: int = 100) -> AlgorithmSpec:
         name="connected_components",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_min,
-        combine_slim=combine_min_slim,
-        recombine=recombine_min,
+        combiner="min",
         apply_fn=apply_fn,
         active_fn=active_fn,
         use_frontier=True,

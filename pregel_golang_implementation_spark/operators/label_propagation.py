@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_mode,
-    salted_combine_mode,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
 
 
@@ -29,7 +25,7 @@ def lpa_spec(max_supersteps: int = 20) -> AlgorithmSpec:
     def init_fn(vertices: DataFrame) -> DataFrame:
         return vertices.select("id", F.col("id").cast("double").alias("value"))
 
-    def msg_fn(value, weight, g):
+    def msg_fn(value, weight):
         return value
 
     def apply_fn(old, msg, g):
@@ -40,10 +36,7 @@ def lpa_spec(max_supersteps: int = 20) -> AlgorithmSpec:
         name="label_propagation",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_mode,
-        # mode is not algebraic — hub salting carries (label, count)
-        # partials across the unsalt boundary instead of merging winners
-        salted_combine=salted_combine_mode,
+        combiner="mode",
         apply_fn=apply_fn,
         use_frontier=False,
         max_supersteps=max_supersteps,

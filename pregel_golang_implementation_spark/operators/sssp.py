@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_min,
-    combine_min_slim,
-    recombine_min,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 INF = float("inf")
 
@@ -42,7 +37,7 @@ def sssp_spec(source: int, max_supersteps: int = 200) -> AlgorithmSpec:
             (F.col("id") == source).alias("active"),
         )
 
-    def msg_fn(value, weight, g):
+    def msg_fn(value, weight):
         return value + weight
 
     def apply_fn(old, msg, g):
@@ -55,9 +50,7 @@ def sssp_spec(source: int, max_supersteps: int = 200) -> AlgorithmSpec:
         name="sssp",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_min,
-        combine_slim=combine_min_slim,
-        recombine=recombine_min,
+        combiner="min",
         apply_fn=apply_fn,
         active_fn=active_fn,
         use_frontier=True,

@@ -32,12 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_min,
-    combine_min_slim,
-    recombine_min,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 INF = float("inf")
 
@@ -50,7 +45,7 @@ def earliest_arrival_spec(source: int, max_supersteps: int = 64) -> AlgorithmSpe
             (F.col("id") == source).alias("active"),
         )
 
-    def msg_fn(value, weight, g):
+    def msg_fn(value, weight):
         # weight column carries the edge TIME; unusable edges ship +Inf,
         # which min-apply discards — same no-op as an unsent message
         return F.when(value <= weight, weight).otherwise(F.lit(INF))
@@ -65,9 +60,7 @@ def earliest_arrival_spec(source: int, max_supersteps: int = 64) -> AlgorithmSpe
         name="earliest_arrival",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_min,
-        combine_slim=combine_min_slim,
-        recombine=recombine_min,
+        combiner="min",
         apply_fn=apply_fn,
         active_fn=active_fn,
         use_frontier=True,

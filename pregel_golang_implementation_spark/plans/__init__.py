@@ -1,19 +1,15 @@
 from pregel_golang_implementation_spark.plans.spec import (
+    COMBINERS,
     AlgorithmSpec,
-    combine_max,
-    combine_min,
-    combine_mode,
-    combine_sum,
+    combine_messages,
 )
 from pregel_golang_implementation_spark.plans.runner import PregelRunner, PregelResult, SuperstepMetrics
 
 __all__ = [
     "AlgorithmSpec",
+    "COMBINERS",
     "PregelRunner",
     "PregelResult",
     "SuperstepMetrics",
-    "combine_min",
-    "combine_max",
-    "combine_sum",
-    "combine_mode",
+    "combine_messages",
 ]

@@ -31,63 +31,16 @@ import math
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_messages
 
 STATE_SCHEMA_DOC = "state(id: long, value: double, active: boolean, *static)"
 MAX_STEPS_PER_ACTION = 6  # in-block plan doubles per chained step
-
-
-class _MsgGlobalsUnavailable:
-    """Globals handed to msg_fn on chained steps 2..K of a block:
-    mid-job there IS no driver-side scalar to hand out, and the in-plan
-    broadcast globals only reach apply_fn.  Any access fails loudly
-    instead of silently scattering with stale values.  Deliberately NOT
-    a dict subclass: ``{**g}`` on a real dict subclass reads the empty
-    C-level storage directly and never calls ``keys()`` — a plain class
-    routes every read path (subscript, get, in, iteration, unpacking,
-    len, truthiness) through a raising method."""
-
-    def _raise(self, key="<globals>"):
-        raise RuntimeError(
-            f"msg_fn reads global {key!r}, which is unavailable on chained "
-            "supersteps (globals reach only apply_fn in-plan); run with "
-            "steps_per_action=1 for specs whose msg_fn depends on globals"
-        )
-
-    def __getitem__(self, key):  # noqa: D105
-        self._raise(key)
-
-    def get(self, key, default=None):  # noqa: D102
-        self._raise(key)
-
-    # every other read path a msg_fn could take — iteration, membership,
-    # keys()/values()/items(), len(), truthiness, {**g} — must raise too,
-    # or it sees an EMPTY dict and silently scatters without globals
-    def __contains__(self, key):  # noqa: D105
-        self._raise(key)
-
-    def __iter__(self):  # noqa: D105
-        self._raise()
-
-    def keys(self):  # noqa: D102
-        self._raise()
-
-    def values(self):  # noqa: D102
-        self._raise()
-
-    def items(self):  # noqa: D102
-        self._raise()
-
-    def __len__(self):  # noqa: D105
-        self._raise()
-
-    def __bool__(self):  # noqa: D105
-        self._raise()
 
 
 @dataclass
@@ -164,13 +117,11 @@ class PregelRunner:
         self.broadcast_frontier_threshold = broadcast_frontier_threshold
         # explicit skew splitting of hub inboxes (north_rule; SURVEY.md §4
         # P7 — the reference routes the whole inbox of a hub to one worker,
-        # Worker.go:821). Requires an algebraic spec.recombine and
+        # Worker.go:821). Every combiner kind has a salted form; requires
         # non-negative vertex ids (the salted key space is negative).
         self.salt_degree_threshold = salt_degree_threshold
         self.num_salts = num_salts
-        self._salting = bool(salt_degree_threshold) and (
-            spec.recombine is not None or spec.salted_combine is not None
-        )
+        self._salting = bool(salt_degree_threshold)
         self._edges_cached: DataFrame | None = None
         # chain K supersteps into ONE job (each still reports exact
         # metrics via its own Observation): the superstep barrier only
@@ -188,8 +139,7 @@ class PregelRunner:
         # see the A/B note in _one_superstep); each FURTHER chained step
         # computes the globals in-plan as a broadcast 1-row aggregate of
         # the previous step's frame, so the block still needs only one
-        # action. Globals are then only available to apply_fn — a msg_fn
-        # that reads them raises loudly (no current spec does).
+        # action (msg_fn never sees globals, so scatter needs none).
         #
         # WHEN TO CHAIN (measured, r4): chaining trades one driver
         # round-trip (~0.3s) for the in-block cost of sharing the
@@ -216,23 +166,15 @@ class PregelRunner:
             )
             steps_per_action = MAX_STEPS_PER_ACTION
         self.steps_per_action = max(1, steps_per_action)
-        # SLIM combine exchange (scale lever): when the spec provides a
-        # count-free combiner, the messages-sent counter (O21) rides a
-        # CollectMetrics Observation on the PRE-shuffle message frame and
-        # the msg_count partial is dropped from the exchange row —
-        # (id, msg, count) → (id, msg), 8 fewer bytes/row through the only
-        # per-superstep shuffle, with metrics still exact.  Eligible only
-        # unsalted (recombine merges count partials) and unchained: a
-        # CollectMetrics inside a chained step's lazy localCheckpoint
-        # belongs to an inner query execution and reports ZEROS (measured,
-        # r4) — so chained blocks keep the in-combine count.
-        # PREGEL_SLIM_SHUFFLE=0 forces the classic path for A/Bs.
-        self.slim_shuffle = (
-            os.environ.get("PREGEL_SLIM_SHUFFLE", "1") != "0"
-            and spec.combine_slim is not None
-            and not self._salting
-            and self.steps_per_action == 1
-        )
+        # SLIM combine exchange (scale lever): the messages-sent counter
+        # (O21) rides a CollectMetrics Observation on the PRE-shuffle
+        # message frame and the msg_count partial is dropped from the
+        # exchange row — (id, msg, count) → (id, msg), 8 fewer bytes/row
+        # through the only per-superstep shuffle, with metrics still
+        # exact.  Not in chained blocks: a CollectMetrics inside a chained
+        # step's lazy localCheckpoint belongs to an inner query execution
+        # and reports ZEROS (measured, r4) — so they count in the combine.
+        self.slim_shuffle = self.steps_per_action == 1
 
     # ----------------------------------------------------------------- setup
 
@@ -265,10 +207,12 @@ class PregelRunner:
             )
         # The layout is sorted within partitions so the cached edge order
         # is a function of the DATA, not of shuffle-fetch interleaving:
-        # every float message-sum downstream accumulates in edge order, so
-        # this is what makes two runs of the same graph (slim vs classic
-        # combine, chained vs unchained, resume vs cold) bit-identical
+        # every float message-sum accumulates map-side in edge order,
         # regardless of how the CALLER's prep plan happened to order rows.
+        # Bit-identical float runs of the same graph (chained vs
+        # unchained, resume vs cold) also need the reduce side to merge
+        # the partial sums in a fixed order, which holds in local mode
+        # only — tests pin float bit-identity there and nowhere else.
         # One per-partition sort, once per run, amortized over every
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
@@ -376,13 +320,12 @@ class PregelRunner:
         # the worker TCP mesh Worker.go:799-849). Aliased — state lineage can
         # derive from edges (vertices_from_edges), a classic ambiguous
         # self-join otherwise.
-        msg_g = _MsgGlobalsUnavailable() if inplan_globals else g
         msgs = (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.id") == F.col("e.src"), "inner")
             .select(
                 F.col("e.dst").alias("id"),
-                spec.msg_fn(F.col("f.value"), F.col("e.weight"), msg_g).alias("msg"),
+                spec.msg_fn(F.col("f.value"), F.col("e.weight")).alias("msg"),
             )
         )
         if msg_obs is not None:
@@ -391,33 +334,13 @@ class PregelRunner:
             # totalled, without shipping a count per combined row
             msgs = msgs.observe(msg_obs, F.count(F.lit(1)).alias("_msgs_sent"))
         # combine: sender-side partial agg + final agg — the exchange shuffle
+        unsalt = None
         if self._salting:
             from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
 
-            unsalt = lambda df: unsalt_ids(df, id_col="id", num_salts=self.num_salts)  # noqa: E731
-            if spec.salted_combine is not None:
-                # non-algebraic combiner (mode): the spec owns the whole
-                # salted combine, carrying count partials across unsalt
-                combined = spec.salted_combine(msgs, unsalt)
-            else:
-                # algebraic combiner: hub inboxes were split across
-                # num_salts reducer keys (negative id space); unsalt ALL
-                # ids (non-hub ids pass through unchanged) and re-merge in
-                # ONE second-level aggregate over ~V partial rows.  A
-                # filter/union formulation evaluates the first aggregate
-                # twice (one reduce stage per filter branch behind the
-                # ReusedExchange) and its union output loses hash
-                # partitioning, forcing the apply join to re-shuffle —
-                # measured 2-3× slower per superstep on the Zipf skew
-                # bench.  Here the recombine groupBy("id") output is
-                # hash-partitioned on id, so the apply join stays
-                # co-partitioned.
-                combined = spec.recombine(unsalt(spec.combine(msgs)))
-        elif msg_obs is not None:
-            combined = spec.combine_slim(msgs)
-        else:
-            combined = spec.combine(msgs)
-        has_count = "msg_count" in combined.columns
+            unsalt = partial(unsalt_ids, id_col="id", num_salts=self.num_salts)
+        counted = msg_obs is None
+        combined = combine_messages(msgs, spec.combiner, counted=counted, unsalt=unsalt)
 
         # apply: fold inbox into state (replaces Vertex.go:68-88); both
         # sides partitioned by id → shuffle-hash, no sort
@@ -439,28 +362,14 @@ class PregelRunner:
                 k: F.coalesce(F.col(f"_g_{k}"), F.lit(0.0))
                 for k in spec.global_aggs
             }
-        elif spec.global_aggs and os.environ.get("PREGEL_GLOBALS_MODE", "literal") == "column":
-            # alternative: globals as a broadcast 1-row frame (keeps the
-            # generated code value-independent). MEASURED SLOWER here: the
-            # per-step broadcast exchange + nested-loop join costs more
-            # than the codegen recompile that per-step literals cause
-            # (A/B on 19M edges, local[16]: literal ~3s/step steady vs
-            # column 5-33s/step). Kept as an escape hatch for real
-            # clusters where driver-side codegen compile is the scarcer
-            # resource.
-            gdf = self.spark.createDataFrame(
-                [tuple(float(g[k] or 0.0) for k in spec.global_aggs)],
-                schema=[f"_g_{k}" for k in spec.global_aggs],
-            )
-            joined = joined.join(F.broadcast(gdf))
-            gcols = {k: F.col(f"_g_{k}") for k in spec.global_aggs}
         else:
-            # per-superstep scalars as literals (default)
+            # per-superstep scalars as literals: measured faster than a
+            # broadcast 1-row frame despite recompiling codegen every
+            # superstep (A/B on 19M edges, local[16]: literal ~3s/step
+            # steady vs column 5-33s/step)
             gcols = {k: F.lit(float(g[k] or 0.0)) for k in spec.global_aggs}
         new_value = spec.apply_fn(F.col("value"), F.col("msg"), gcols)
-        nmsg = (
-            F.coalesce(F.col("msg_count"), F.lit(0)) if has_count else F.lit(0)
-        )
+        nmsg = F.coalesce(F.col("msg_count"), F.lit(0)) if counted else F.lit(0)
         out = joined.select(
             F.col("id"),
             *[F.col(c) for c in spec.static_cols],

@@ -3,14 +3,14 @@
 The reference's only extension point is the hand-written Go vertex program
 ``Compute()`` (/root/reference/Vertex.go:68-88) plus its scatter
 ``SendMessageToWorker()`` (Vertex.go:54-66).  Here an algorithm is a pure
-declarative 5-tuple — (init, msg, combine, apply, halt) — over DataFrame
+declarative 5-tuple — (init, msg, combiner kind, apply, halt) — over DataFrame
 columns, so Catalyst/Tungsten (codegen, partial aggregation, AQE) execute
 it; no per-row Python anywhere on the hot path.
 
 Semantics contract (mirrors the reference's superstep, minus its races —
 SURVEY.md §2.3, §7 "hard parts (f)"):
   msg       = msg_fn(value(src), weight(src→dst))       # scatter, Vertex.go:56-61
-  inbox(v)  = combine over all msgs targeting v         # fold, Vertex.go:71-80
+  inbox(v)  = fold(combiner) over all msgs targeting v  # fold, Vertex.go:71-80
   value'    = apply_fn(value(v), inbox(v), globals)     # relax, Vertex.go:74-77
   active'   = active_fn(value, value', inbox)           # vote-to-halt, Worker.go:707
   halt when no vertex is active                          # Master.go:1044-1063
@@ -24,67 +24,23 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# (src_value, edge_weight, globals as python floats) -> message value
-MsgFn = Callable[[Column, Column, dict], Column]
-# msgs DataFrame(id, msg) -> DataFrame(id, msg, msg_count); exactly one row per id
-CombineFn = Callable[[DataFrame], DataFrame]
-# (old_value, combined_msg_or_null, globals as COLUMNS) -> new value.
-# Globals reach apply as Column expressions: per-superstep F.lit()
-# literals BY DEFAULT — measured faster here despite recompiling codegen
-# every superstep — with a broadcast 1-row-frame column mode behind
-# PREGEL_GLOBALS_MODE=column for clusters where driver-side compilation
-# is the scarcer resource.  See the A/B note in runner._one_superstep
-# before "optimizing" either path away.
+# (src_value, edge_weight) -> message value
+MsgFn = Callable[[Column, Column], Column]
+# (old_value, combined_msg_or_null, globals) -> new value.  Globals reach
+# apply as Columns: per-superstep literals, or an in-plan broadcast
+# aggregate on chained steps 2..K (see runner._one_superstep).
 ApplyFn = Callable[[Column, Column, dict], Column]
 # (old_value, new_value, combined_msg_or_null) -> active boolean
 ActiveFn = Callable[[Column, Column, Column], Column]
-# state DataFrame -> scalar aggregate Column (computed once per superstep)
-GlobalAgg = Callable[[], Column]
+
+# The combiner kinds: algebraic folds (min for CC/SSSP, sum for PageRank)
+# and the mode vote (label propagation).
+FOLDS = {"min": F.min, "sum": F.sum}
+COMBINERS = (*FOLDS, "mode")
 
 
-def combine_min(msgs: DataFrame) -> DataFrame:
-    """min-combiner (SSSP/CC).  The reference folds min at the receiver only
-    (Vertex.go:71-80); Spark's partial+final hash aggregation gives the
-    sender-side combine the reference lacks (SURVEY.md §4 P2)."""
-    return msgs.groupBy("id").agg(
-        F.min("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
-
-
-# Slim combiners: same aggregate WITHOUT the msg_count column.  The count
-# exists only to feed the messages-sent counter (O21); when the runner can
-# take that count from an Observation on the pre-shuffle message frame
-# instead (steps_per_action=1 — see PregelRunner), dropping the count
-# partial cuts the exchange row from (id, msg, count) to (id, msg): 8
-# fewer bytes/row through the ONLY per-superstep shuffle.
-
-def combine_min_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.min("msg").alias("msg"))
-
-
-def combine_max_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.max("msg").alias("msg"))
-
-
-def combine_sum_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.sum("msg").alias("msg"))
-
-
-def combine_max(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(
-        F.max("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
-
-
-def combine_sum(msgs: DataFrame) -> DataFrame:
-    """sum-combiner (PageRank mass accumulation)."""
-    return msgs.groupBy("id").agg(
-        F.sum("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
-
-
-def _mode_argmax(counts: DataFrame) -> DataFrame:
-    """(id, msg, cnt) partial counts → (id, msg, msg_count): the winner
+def _mode_argmax(counts: DataFrame, counted: bool) -> DataFrame:
+    """(id, msg, cnt) partial counts → (id, msg [, msg_count]): the winner
     is max by (cnt, -msg), i.e. most frequent label with deterministic
     ties → smallest label, as ONE algebraic aggregate (struct ordering
     is field-lexicographic).  Replaces the earlier row_number window:
@@ -93,54 +49,57 @@ def _mode_argmax(counts: DataFrame) -> DataFrame:
     running max per map partition instead of a single-task sort of all
     its (label, count) rows — the window was the last reducer-skew
     point in the LPA plan."""
+    count = [F.sum("cnt").alias("msg_count")] if counted else []
     return (
         counts.groupBy("id").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("_neg"))).alias("_w"),
-            F.sum("cnt").alias("msg_count"),
+            *count,
         )
-        .select("id", (-F.col("_w._neg")).alias("msg"), "msg_count")
+        .select("id", (-F.col("_w._neg")).alias("msg"), *(["msg_count"] if counted else []))
     )
 
 
-def combine_mode(msgs: DataFrame) -> DataFrame:
-    """mode-combiner (label propagation): most frequent message value,
-    deterministic ties → smallest value.  Two chained algebraic
-    aggregates — count per (id, label), then argmax per id — both
-    map-side combinable, no window, no Python."""
-    counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
-    return _mode_argmax(counts)
+def combine_messages(
+    msgs: DataFrame,
+    kind: str,
+    counted: bool = True,
+    unsalt: Optional[Callable[[DataFrame], DataFrame]] = None,
+) -> DataFrame:
+    """Fold messages (id, msg) into exactly one (id, msg [, msg_count])
+    row per target id — the superstep's exchange.  Spark's partial+final
+    hash aggregation gives the sender-side combine the reference lacks
+    (it folds at the receiver only, Vertex.go:71-80; SURVEY.md §4 P2).
 
+    ``counted`` ships a msg_count partial that feeds the messages-sent
+    counter (O21).  The runner drops it whenever it can count on the
+    pre-shuffle message frame instead: (id, msg, count) → (id, msg) is 8
+    fewer bytes/row through the only per-superstep shuffle.
 
-def salted_combine_mode(msgs: DataFrame, unsalt) -> DataFrame:
-    """Hub-salted mode combine (LPA).  Mode winners can't be merged
-    across salt replicas — merging two groups' winners loses the counts
-    — so the salted path carries (label, count) PARTIALS across the
-    unsalt boundary, not winners:
-
-      1. count labels per SALTED key — the heavy message shuffle, with a
-         hub's inbox split across its salt replicas;
-      2. unsalt and re-sum counts per real (id, label) — cardinality is
-         distinct-labels-per-vertex, orders of magnitude below the inbox;
-      3. the same algebraic argmax as ``combine_mode``.
-
-    ``unsalt`` maps salted ids back (provided by the runner)."""
-    counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
-    merged = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
-    return _mode_argmax(merged)
-
-
-def recombine_min(partials: DataFrame) -> DataFrame:
-    """Algebraic merge of combine_min partials (salted-hub re-merge)."""
-    return partials.groupBy("id").agg(
-        F.min("msg").alias("msg"), F.sum("msg_count").alias("msg_count")
-    )
-
-
-def recombine_sum(partials: DataFrame) -> DataFrame:
-    """Algebraic merge of combine_sum partials (salted-hub re-merge)."""
-    return partials.groupBy("id").agg(
-        F.sum("msg").alias("msg"), F.sum("msg_count").alias("msg_count")
-    )
+    ``unsalt`` (hub salting) maps salted ids back to real ids.  The folds
+    combine per SALTED key — the heavy shuffle, a hub's inbox split
+    across its salt replicas — then unsalt every id (non-hub ids pass
+    through) and re-fold in ONE second-level aggregate over ~V partial
+    rows whose output stays hash-partitioned on id for the apply join.
+    (A filter/union formulation evaluated the first aggregate twice and
+    lost that partitioning: measured 2-3× slower per superstep on the
+    Zipf skew bench.)  Mode winners cannot be merged across replicas, so
+    mode carries (label, cnt) PARTIALS across the unsalt step instead and
+    re-sums them per real (id, label) — cardinality is distinct labels
+    per vertex, far below the inbox — before the argmax."""
+    if kind == "mode":
+        # count per (id, label), then argmax per id: both algebraic and
+        # map-side combinable, no window, no Python
+        counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
+        if unsalt is not None:
+            counts = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
+        return _mode_argmax(counts, counted)
+    fold = FOLDS[kind]
+    count = [F.count(F.lit(1)).alias("msg_count")] if counted else []
+    out = msgs.groupBy("id").agg(fold("msg").alias("msg"), *count)
+    if unsalt is not None:
+        recount = [F.sum("msg_count").alias("msg_count")] if counted else []
+        out = unsalt(out).groupBy("id").agg(fold("msg").alias("msg"), *recount)
+    return out
 
 
 def default_active(old: Column, new: Column, msg: Column) -> Column:
@@ -156,40 +115,30 @@ class AlgorithmSpec:
     ``init_fn`` takes the vertices DataFrame (at least column ``id``) and
     returns (id, value [, static columns...]).  Static columns listed in
     ``static_cols`` (e.g. a dangling flag for PageRank) are carried through
-    every superstep unchanged.
+    every superstep unchanged.  ``combiner`` names the fold over each
+    vertex's inbox, one of ``COMBINERS``; the runner derives the counted,
+    count-free and salted forms from it (``combine_messages``).
     """
 
     name: str
     init_fn: Callable[[DataFrame], DataFrame]
     msg_fn: MsgFn
-    combine: CombineFn
+    combiner: str
     apply_fn: ApplyFn
     active_fn: ActiveFn = default_active
     static_cols: tuple[str, ...] = ()
     # scatter only changed vertices (delta/frontier execution — SURVEY.md §4 P5).
-    # Must be False when combine needs messages from ALL neighbors every
-    # round (e.g. mode for LPA), not just changed ones.
+    # Must be False when the combiner needs messages from ALL neighbors
+    # every round (e.g. mode for LPA), not just changed ones.
     use_frontier: bool = True
     # name -> state aggregate recomputed each superstep, available to
-    # msg_fn/apply_fn via the globals dict (e.g. PageRank dangling mass).
+    # apply_fn via the globals dict (e.g. PageRank dangling mass).
     global_aggs: dict[str, Column] = field(default_factory=dict)
-    # Re-merge function for salted hub partials: DataFrame(id, msg,
-    # msg_count) with several rows per hub id -> one row per id.  Must be
-    # the algebraic merge of `combine` (min→min, sum→sum).  None ⇒ the
-    # combiner is not algebraic (e.g. mode); hub salting then requires
-    # `salted_combine` instead.
-    recombine: Optional[CombineFn] = None
-    # Count-free variant of `combine` returning (id, msg) only — lets the
-    # runner drop the msg_count partial from the exchange when the
-    # messages-sent counter can ride a pre-shuffle Observation instead
-    # (steps_per_action=1, unsalted).  Must aggregate identically to
-    # `combine` minus the count.  None ⇒ always ship the count.
-    combine_slim: Optional[CombineFn] = None
-    # Full replacement of the combine stage under salting, for combiners
-    # whose winners can't be merged (mode): (msgs-with-salted-ids,
-    # unsalt_fn) -> combined (id, msg, msg_count) on REAL ids, carrying
-    # whatever partials the combiner needs across the unsalt boundary
-    # (see salted_combine_mode).  Takes precedence over recombine.
-    salted_combine: Optional[Callable[[DataFrame, Callable], DataFrame]] = None
     max_supersteps: int = 200
     params: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.combiner not in COMBINERS:
+            raise ValueError(
+                f"unknown combiner {self.combiner!r}; expected one of {COMBINERS}"
+            )

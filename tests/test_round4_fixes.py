@@ -204,35 +204,6 @@ def test_pagerank_chained_convergence(spark):
     assert max(abs(a[i] - b[i]) for i in a) < 1e-6
 
 
-def test_msg_fn_reading_globals_raises_on_chained_steps(spark):
-    """A spec whose msg_fn depends on globals cannot chain — the guard
-    must raise a clear error instead of scattering stale values."""
-    from pregel_golang_implementation_spark.plans.runner import PregelRunner
-    from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_sum
-
-    def init_fn(v):
-        return v.select("id", F.lit(1.0).alias("value"))
-
-    def msg_fn(value, weight, g):
-        return value * F.lit(float(g.get("total", 1.0)))  # reads a global
-
-    spec = AlgorithmSpec(
-        name="needs_globals_in_msg",
-        init_fn=init_fn,
-        msg_fn=msg_fn,
-        combine=combine_sum,
-        apply_fn=lambda old, msg, g: F.coalesce(msg, old),
-        global_aggs={"total": F.sum("value")},
-        max_supersteps=4,
-    )
-    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    with pytest.raises(RuntimeError, match="msg_fn reads global"):
-        PregelRunner(spark, spec, steps_per_action=2).run(edges)
-    # one job per step still works for such specs
-    res = PregelRunner(spark, spec, steps_per_action=1).run(edges, max_supersteps=2)
-    assert res.supersteps == 2
-
-
 # ----------------------------------------------- degree-ordered triangles
 
 

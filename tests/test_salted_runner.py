@@ -35,6 +35,9 @@ def test_salted_cc_identical(spark):
     b = {r["id"]: r["value"] for r in salted.state.collect()}
     assert a == b
     assert salted.converged
+    assert [m.messages_sent for m in plain.metrics] == [
+        m.messages_sent for m in salted.metrics
+    ]
 
 
 def test_salted_sssp_identical(spark):
@@ -63,17 +66,60 @@ def test_salted_pagerank_allclose(spark):
     assert set(a) == set(b)
     for k in a:
         assert b[k] == pytest.approx(a[k], abs=1e-9)
+    assert [m.messages_sent for m in plain.metrics] == [
+        m.messages_sent for m in salted.metrics
+    ]
 
 
 def test_salting_enablement_rules(spark):
-    import dataclasses
-
     from pregel_golang_implementation_spark.operators.label_propagation import lpa_spec
+    from pregel_golang_implementation_spark.plans.spec import COMBINERS, AlgorithmSpec
 
-    # mode combine is not algebraic, but LPA now ships a salted_combine
-    # that carries (label, count) partials — salting is available
-    runner = PregelRunner(spark, lpa_spec(), salt_degree_threshold=50)
-    assert runner._salting is True
-    # a spec with NEITHER recombine NOR salted_combine cannot salt
-    bare = dataclasses.replace(lpa_spec(), recombine=None, salted_combine=None)
-    assert PregelRunner(spark, bare, salt_degree_threshold=50)._salting is False
+    # every combiner kind has a salted form, so any spec salts when asked
+    specs = [cc_spec(), pagerank_spec(10), lpa_spec()]
+    assert {spec.combiner for spec in specs} == set(COMBINERS)
+    for spec in specs:
+        assert PregelRunner(spark, spec, salt_degree_threshold=50)._salting is True
+        assert PregelRunner(spark, spec)._salting is False
+    # an unknown kind is rejected when the spec is built
+    with pytest.raises(ValueError, match="unknown combiner"):
+        AlgorithmSpec(
+            name="bad",
+            init_fn=lambda v: v,
+            msg_fn=lambda value, weight: value,
+            combiner="max",
+            apply_fn=lambda old, msg, g: msg,
+        )
+
+
+def test_combine_forms_agree(spark):
+    """Every form derived from a combiner kind — counted or count-free,
+    unsalted or salted — folds to the same inbox, and the counted forms
+    count every message (the salted ones across the unsalt step)."""
+    from functools import partial
+
+    from pregel_golang_implementation_spark.plans.spec import COMBINERS, combine_messages
+    from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
+
+    num_salts = 4
+    rows = [(0, float(i % 3)) for i in range(20)] + [(7, 5.0), (7, 2.0), (7, 2.0)]
+    # hub 0's inbox split across its salt replicas (negative key space)
+    salted_rows = [
+        (-(i % num_salts) - 1 if v == 0 else v, m) for i, (v, m) in enumerate(rows)
+    ]
+    plain = spark.createDataFrame(rows, "id long, msg double")
+    salted = spark.createDataFrame(salted_rows, "id long, msg double")
+    unsalt = partial(unsalt_ids, num_salts=num_salts)
+    # mode: labels 0 and 1 tie at 7 votes each → smallest label wins
+    want = {"min": {0: 0.0, 7: 2.0}, "sum": {0: 19.0, 7: 9.0}, "mode": {0: 0.0, 7: 2.0}}
+    assert set(want) == set(COMBINERS)
+    for kind in COMBINERS:
+        for counted in (True, False):
+            for msgs, un in ((plain, None), (salted, unsalt)):
+                out = combine_messages(msgs, kind, counted=counted, unsalt=un)
+                got = out.collect()
+                assert {r["id"]: r["msg"] for r in got} == want[kind]
+                if counted:
+                    assert {r["id"]: r["msg_count"] for r in got} == {0: 20, 7: 3}
+                else:
+                    assert out.columns == ["id", "msg"]

@@ -24,9 +24,6 @@ Usage:
   python tools/bench_scaling.py skew [N] [vertices] [degree] [steps] [zipf_a] [salt_thr]
       → Zipf in-degree graph (dst_skew=zipf_a), salted-vs-unsalted PageRank
         at local[N] and local[4N]; writes BENCH/scaling_skew_latest.json
-  python tools/bench_scaling.py ab [cores] [vertices] [degree] [steps] [repeats]
-      → shuffle-bytes lever A/B (slim row on/off × lz4/zstd) at ONE level;
-        writes BENCH/scaling_ab_latest.json
 
 Co-tenancy guard: the orchestrators REFUSE to start when the 1-min
 loadavg exceeds LOADAVG_MAX (anything co-running skews both levels and
@@ -148,7 +145,7 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
     n = vertices.count()
     # job selector: the skew benchmark measures salting on BOTH combine
     # families — algebraic (pagerank sum) and non-algebraic (lpa mode,
-    # which routes through spec.salted_combine's count-partial path)
+    # which carries count partials across the unsalt step)
     job = os.environ.get("PREGEL_SCALING_JOB", "pagerank")
     if job == "lpa":
         from pregel_golang_implementation_spark.operators.label_propagation import (
@@ -426,10 +423,6 @@ def skew_orchestrate(
                         "PREGEL_SCALING_GRAPH_DIR": graph_dir,
                         "PREGEL_SCALING_SALT": str(thr),
                         "PREGEL_SCALING_JOB": job,
-                        # isolate the salting variable: the salted path
-                        # cannot use the slim combine (recombine merges
-                        # count partials), so pin slim OFF for both sides
-                        "PREGEL_SLIM_SHUFFLE": "0",
                     },
                 )
                 runs.setdefault((cores, thr), []).append(r)
@@ -480,77 +473,8 @@ def skew_orchestrate(
     print(json.dumps({k: report[k] for k in ("best", "efficiency", "median_efficiency")}, indent=2))
 
 
-def ab_orchestrate(
-    cores: int,
-    num_vertices: int,
-    avg_degree: int,
-    supersteps: int,
-    repeats: int = 2,
-) -> None:
-    """One clean interleaved A/B of the two shuffle-BYTES levers (r4
-    verdict #1) at a single parallelism level: slim combine row on/off ×
-    shuffle codec lz4/zstd.  Interleaved within each repeat so box drift
-    hits all four configs equally; per-run loadavg stamped by _spawn.
-    Writes BENCH/scaling_ab_latest.json; the winning config is then used
-    for the gate orchestration."""
-    import statistics
-
-    _refuse_if_busy("ab_orchestrate")
-    prepare_graph(num_vertices, avg_degree)
-    configs = {
-        "classic_lz4": {"PREGEL_SLIM_SHUFFLE": "0"},
-        "slim_lz4": {"PREGEL_SLIM_SHUFFLE": "1"},
-        "classic_zstd": {
-            "PREGEL_SLIM_SHUFFLE": "0",
-            "PREGEL_BENCH_CONF": '{"spark.io.compression.codec":"zstd"}',
-        },
-        "slim_zstd": {
-            "PREGEL_SLIM_SHUFFLE": "1",
-            "PREGEL_BENCH_CONF": '{"spark.io.compression.codec":"zstd"}',
-        },
-    }
-    runs: dict[str, list[dict]] = {k: [] for k in configs}
-    for _ in range(repeats):
-        for name, env in configs.items():
-            r = _spawn(
-                ["worker", str(cores), str(num_vertices), str(avg_degree), str(supersteps)],
-                f"ab {name}",
-                env=env,
-            )
-            runs[name].append(r)
-            print(f"{name}: {r}")
-    report = {
-        "job": "pagerank_fixed_supersteps_config_ab",
-        "input": {
-            "cores": cores,
-            "n_vertices": num_vertices,
-            "avg_degree": avg_degree,
-            "supersteps": supersteps,
-        },
-        "runs": runs,
-        "median_edges_per_sec": {
-            k: round(statistics.median(r["edges_per_sec"] for r in v), 1)
-            for k, v in runs.items()
-        },
-        "best_edges_per_sec": {
-            k: max(r["edges_per_sec"] for r in v) for k, v in runs.items()
-        },
-    }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "scaling_ab_latest.json"), "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps({k: report[k] for k in ("median_edges_per_sec", "best_edges_per_sec")}, indent=2))
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "ab":
-        c = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-        v = int(sys.argv[3]) if len(sys.argv) > 3 else 8_000_000
-        d = int(sys.argv[4]) if len(sys.argv) > 4 else 20
-        s = int(sys.argv[5]) if len(sys.argv) > 5 else 8
-        reps = int(sys.argv[6]) if len(sys.argv) > 6 else 2
-        ab_orchestrate(c, v, d, s, repeats=reps)
-    elif len(sys.argv) > 1 and sys.argv[1] == "skew":
+    if len(sys.argv) > 1 and sys.argv[1] == "skew":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
         v = int(sys.argv[3]) if len(sys.argv) > 3 else 2_000_000
         d = int(sys.argv[4]) if len(sys.argv) > 4 else 16

@@ -237,12 +237,12 @@ def main() -> None:
     # 9. LPA mode combine: must plan as partial+final HashAggregate
     # pairs with NO Window (the r5 windowless argmax) — a window here
     # would reintroduce the per-id single-task sort on hub vertices.
-    from pregel_golang_implementation_spark.plans.spec import combine_mode
+    from pregel_golang_implementation_spark.plans.spec import combine_messages
 
     msgs = edges.select(F.col("dst").alias("id"), F.col("src").cast("double").alias("msg"))
-    mode_plan = grab(combine_mode(msgs))
-    assert "Window" not in mode_plan, "combine_mode must not plan a Window"
-    sections.append(("combine_mode (windowless algebraic argmax)", mode_plan))
+    mode_plan = grab(combine_messages(msgs, "mode"))
+    assert "Window" not in mode_plan, "the mode combiner must not plan a Window"
+    sections.append(("mode combiner (windowless algebraic argmax)", mode_plan))
 
     # 10. k-means assignment: the K centroids enter the plan as literal
     # arrays (the SRP/IVF/PQ discipline) — the per-point argmin over all
