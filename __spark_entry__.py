@@ -199,11 +199,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _runner(spark: SparkSession, spec) -> PregelRunner:
-    # steps_per_action=2: chained supersteps (one job per block) — exact
-    # for fixed-iteration runs, including globals-bearing PageRank since
-    # r4 (in-plan dangling mass); running the correctness gate chained
-    # keeps the production fast path itself under the oracle hash check
-    return PregelRunner(spark, spec, lineage_break_every=3, steps_per_action=2)
+    return PregelRunner(spark, spec, lineage_break_every=3)
 
 
 def _sssp_source(spark: SparkSession, sf_dir: str) -> int:
@@ -243,7 +239,6 @@ def q_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         pagerank_spec(n, damping=0.85, tol=1e-12),
         lineage_break_every=3,
-        steps_per_action=2,
         salt_degree_threshold=10,
         num_salts=4,
     )
@@ -397,12 +392,12 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="pregel_ckpt_contract_")
     try:
         first = PregelRunner(
-            spark, cc_spec(), lineage_break_every=3, steps_per_action=2,
+            spark, cc_spec(), lineage_break_every=3,
             checkpoint_dir=ckpt, checkpoint_every=2,
         )
         first.run(und, max_supersteps=2)
         resumed = PregelRunner(
-            spark, cc_spec(), lineage_break_every=3, steps_per_action=2,
+            spark, cc_spec(), lineage_break_every=3,
             checkpoint_dir=ckpt,
         )
         res = resumed.resume(und, max_supersteps=CC_ITERS - 2)
@@ -855,7 +850,6 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         outer_rounds=1,
         strict=True,
         lineage_break_every=3,
-        steps_per_action=2,
     )
 
 
@@ -958,7 +952,6 @@ def q_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior.state.select("id", "value"),
         max_supersteps=INC_PR_ITERS,
         lineage_break_every=3,
-        steps_per_action=2,
     )
     return res.state.select("id", F.round(F.col("value"), 6).alias("rank"))
 

@@ -54,8 +54,8 @@ def greedy_coloring(
     still uncolored after ``colors`` rounds.  Proper by construction —
     no edge joins two vertices of the same non-negative color.
 
-    ``make_runner(spec)`` lets callers inject runner config (chained
-    supersteps etc.); defaults to a plain PregelRunner.
+    ``make_runner(spec)`` lets callers inject runner config (partitions,
+    salting etc.); defaults to a plain PregelRunner.
     """
     if make_runner is None:
         make_runner = lambda spec: PregelRunner(spark, spec)  # noqa: E731

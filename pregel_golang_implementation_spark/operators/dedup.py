@@ -572,9 +572,7 @@ def _near_dup_clusters_body(
     near_edges = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     dup_graph = symmetrize(exact_edges.unionByName(near_edges))
     vertices = d.select(F.col("doc_id").alias("id"))
-    runner = PregelRunner(
-        spark, cc_spec(max_supersteps=max_supersteps), steps_per_action=2
-    )
+    runner = PregelRunner(spark, cc_spec(max_supersteps=max_supersteps))
     # runner.run is eager (the BSP barrier actions) and localCheckpoints
     # the result state, so by the time the caller's finally unpersists the
     # bands cache nothing the caller holds still references it

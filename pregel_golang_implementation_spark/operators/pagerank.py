@@ -40,8 +40,8 @@ def pagerank_spec(num_vertices: int, damping: float = 0.85, tol: float = 1e-6) -
         return value * weight
 
     def apply_fn(old, msg, g):
-        # g["dangling_mass"] arrives as a Column: a per-superstep literal,
-        # or an in-plan broadcast aggregate on chained steps 2..K
+        # g["dangling_mass"] arrives as a Column: the previous
+        # superstep's dangling mass as a literal
         dm = g.get("dangling_mass", F.lit(0.0))
         return F.lit((1.0 - d) / n) + F.lit(d) * (
             F.coalesce(msg, F.lit(0.0)) + dm / F.lit(n)

@@ -40,17 +40,14 @@ from pyspark.sql import functions as F
 from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_messages
 
 STATE_SCHEMA_DOC = "state(id: long, value: double, active: boolean, *static)"
-MAX_STEPS_PER_ACTION = 6  # in-block plan doubles per chained step
 
 
 @dataclass
 class SuperstepMetrics:
     """Per-superstep counters (north_rule: messages sent, active vertices,
     convergence delta; the reference only ever recorded total wall time —
-    Master.go:1052-1053).  Counters are exact per superstep (each step has
-    its own Observation) — ``wall_secs`` alone is the block wall divided
-    by the block's step count when ``steps_per_action > 1``, since chained
-    steps share one job and have no individual wall clock."""
+    Master.go:1052-1053).  Every superstep is its own barrier action, so
+    each counter and ``wall_secs`` belong to exactly one step."""
 
     superstep: int
     active_vertices: int
@@ -93,10 +90,8 @@ class PregelRunner:
         lineage_break_every: int = 2,  # plan doubles per step; truncate every K
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 0,
-        broadcast_frontier_threshold: int = 100_000,
         salt_degree_threshold: int | None = None,
         num_salts: int = 32,
-        steps_per_action: int = 1,
     ):
         self.spark = spark
         self.spec = spec
@@ -114,7 +109,6 @@ class PregelRunner:
         self.lineage_break_every = lineage_break_every
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        self.broadcast_frontier_threshold = broadcast_frontier_threshold
         # explicit skew splitting of hub inboxes (north_rule; SURVEY.md §4
         # P7 — the reference routes the whole inbox of a hub to one worker,
         # Worker.go:821). Every combiner kind has a salted form; requires
@@ -123,63 +117,12 @@ class PregelRunner:
         self.num_salts = num_salts
         self._salting = bool(salt_degree_threshold)
         self._edges_cached: DataFrame | None = None
-        # chain K supersteps into ONE job (each still reports exact
-        # metrics via its own Observation): the superstep barrier only
-        # needs an ACTION when the driver must read something between
-        # steps. At 1000 executors the per-job driver latency is the
-        # deep-iteration bottleneck; locally it is the small-graph floor
-        # (~1.5s/step). Convergence is still exact for frontier
-        # algorithms: steps chained past the fixed point are no-ops
-        # (empty frontier → no messages → no change) and are trimmed
-        # from the result.
-        #
-        # Specs WITH global_aggs (PageRank's dangling mass) chain too:
-        # the first step of each block reads the previous block's exact
-        # globals off its Observation (driver literals — the fast path,
-        # see the A/B note in _one_superstep); each FURTHER chained step
-        # computes the globals in-plan as a broadcast 1-row aggregate of
-        # the previous step's frame, so the block still needs only one
-        # action (msg_fn never sees globals, so scatter needs none).
-        #
-        # WHEN TO CHAIN (measured, r4): chaining trades one driver
-        # round-trip (~0.3s) for the in-block cost of sharing the
-        # intermediate state between its consumers (a lazy localCheckpoint
-        # write + reads). That wins when per-step wall sits near the
-        # driver floor (frontier algorithms whose steps shrink to ~1s;
-        # sf0.01-scale fixed-iteration runs; very large clusters where
-        # scheduling dominates) and LOSES when per-step work is tens of
-        # seconds: at 8M vertices / 156M edges on local[16], spa=2
-        # measured 5.6M edges/s vs spa=1's 8.4M. Default stays 1; callers
-        # opt in where their step wall is floor-bound.
-        if steps_per_action > MAX_STEPS_PER_ACTION:
-            # each chained step references the previous state twice, so the
-            # analyzed plan DOUBLES per step within a block — past ~6
-            # unbroken steps Catalyst analysis cost turns exponential (the
-            # same hazard lineage_break_every guards across blocks)
-            import warnings
-
-            warnings.warn(
-                f"steps_per_action={steps_per_action} exceeds the safe "
-                f"unbroken-plan depth; clamping to {MAX_STEPS_PER_ACTION} "
-                "(the in-block plan doubles per chained step)",
-                stacklevel=2,
-            )
-            steps_per_action = MAX_STEPS_PER_ACTION
-        self.steps_per_action = max(1, steps_per_action)
-        # SLIM combine exchange (scale lever): the messages-sent counter
-        # (O21) rides a CollectMetrics Observation on the PRE-shuffle
-        # message frame and the msg_count partial is dropped from the
-        # exchange row — (id, msg, count) → (id, msg), 8 fewer bytes/row
-        # through the only per-superstep shuffle, with metrics still
-        # exact.  Not in chained blocks: a CollectMetrics inside a chained
-        # step's lazy localCheckpoint belongs to an inner query execution
-        # and reports ZEROS (measured, r4) — so they count in the combine.
-        self.slim_shuffle = self.steps_per_action == 1
 
     # ----------------------------------------------------------------- setup
 
     EDGES_PER_PARTITION = 75_000  # adaptive floor: ≥75k edge rows per task
     MIN_PARTITIONS = 8
+    BROADCAST_FRONTIER_MAX = 100_000  # frontiers up to this size are broadcast
 
     def _prepare_edges(self, edges: DataFrame) -> DataFrame:
         cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
@@ -209,10 +152,10 @@ class PregelRunner:
         # is a function of the DATA, not of shuffle-fetch interleaving:
         # every float message-sum accumulates map-side in edge order,
         # regardless of how the CALLER's prep plan happened to order rows.
-        # Bit-identical float runs of the same graph (chained vs
-        # unchained, resume vs cold) also need the reduce side to merge
-        # the partial sums in a fixed order, which holds in local mode
-        # only — tests pin float bit-identity there and nowhere else.
+        # Bit-identical float runs of the same graph (resume vs cold)
+        # also need the reduce side to merge the partial sums in a fixed
+        # order, which holds in local mode only — tests pin float
+        # bit-identity there and nowhere else.
         # One per-partition sort, once per run, amortized over every
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
@@ -269,7 +212,7 @@ class PregelRunner:
         # joins re-shuffled the state it had JUST laid out — the persist
         # keeps the partitioning visible exactly like every later
         # superstep's state cache.  Materialization rides the next action
-        # (collect_globals or the first block's barrier); the loop
+        # (collect_globals or superstep 1's barrier); the loop
         # releases it as the zeroth `prev_cached`.
         return state.repartition(self.num_partitions, "id").persist()
 
@@ -289,20 +232,15 @@ class PregelRunner:
         edges: DataFrame,
         g: dict,
         prev_active: int,
-        inplan_globals: bool = False,
-        msg_obs: Observation | None = None,
+        msg_obs: Observation,
     ) -> DataFrame:
-        """One superstep's frame.  ``inplan_globals=True`` (chained steps
-        2..K of a block) computes ``spec.global_aggs`` as a broadcast
-        1-row aggregate of the INCOMING ``state`` frame instead of driver
-        literals — the state entering this step is mid-job, so its
-        aggregates cannot be driver scalars without breaking the chain.
-        ``msg_obs`` (slim-shuffle mode) counts messages on the pre-shuffle
-        frame so the combine can drop its msg_count partial."""
+        """One superstep's frame.  ``g`` holds the previous superstep's
+        ``spec.global_aggs`` values; ``msg_obs`` counts messages on the
+        pre-shuffle frame, so the combine ships no count partial."""
         spec = self.spec
         frontier = state.filter("active") if spec.use_frontier else state
         small_frontier = (
-            spec.use_frontier and 0 < prev_active <= self.broadcast_frontier_threshold
+            spec.use_frontier and 0 < prev_active <= self.BROADCAST_FRONTIER_MAX
         )
         if small_frontier:
             # small frontier: ship it to every edge partition instead of
@@ -328,54 +266,31 @@ class PregelRunner:
                 spec.msg_fn(F.col("f.value"), F.col("e.weight")).alias("msg"),
             )
         )
-        if msg_obs is not None:
-            # messages-sent observed HERE, map-side, before the partial agg
-            # collapses rows — exactly what the combine's count would have
-            # totalled, without shipping a count per combined row
-            msgs = msgs.observe(msg_obs, F.count(F.lit(1)).alias("_msgs_sent"))
+        # messages-sent observed HERE, map-side, before the partial agg
+        # collapses rows — no count rides the exchange (O21)
+        msgs = msgs.observe(msg_obs, F.count(F.lit(1)).alias("_msgs_sent"))
         # combine: sender-side partial agg + final agg — the exchange shuffle
         unsalt = None
         if self._salting:
             from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
 
             unsalt = partial(unsalt_ids, id_col="id", num_salts=self.num_salts)
-        counted = msg_obs is None
-        combined = combine_messages(msgs, spec.combiner, counted=counted, unsalt=unsalt)
+        combined = combine_messages(msgs, spec.combiner, unsalt=unsalt)
 
         # apply: fold inbox into state (replaces Vertex.go:68-88); both
         # sides partitioned by id → shuffle-hash, no sort
         joined = state.join(combined.hint("shuffle_hash"), "id", "left")
-        if spec.global_aggs and inplan_globals:
-            # chained step: globals of the incoming state as a 1-row
-            # aggregate cross-joined broadcast — the whole block stays one
-            # job.  The agg is a third consumer of the previous step's
-            # frame, but its join-input exchanges are deduped by
-            # ReuseExchange, so the extra cost is one more pass over the
-            # (already-shuffled) state rows, not an extra shuffle — far
-            # cheaper than the driver round-trip + codegen recompile that
-            # an action-per-step costs on a deep iteration.
-            gdf = state.agg(
-                *[c.alias(f"_g_{k}") for k, c in spec.global_aggs.items()]
-            )
-            joined = joined.join(F.broadcast(gdf))
-            gcols = {
-                k: F.coalesce(F.col(f"_g_{k}"), F.lit(0.0))
-                for k in spec.global_aggs
-            }
-        else:
-            # per-superstep scalars as literals: measured faster than a
-            # broadcast 1-row frame despite recompiling codegen every
-            # superstep (A/B on 19M edges, local[16]: literal ~3s/step
-            # steady vs column 5-33s/step)
-            gcols = {k: F.lit(float(g[k] or 0.0)) for k in spec.global_aggs}
+        # per-superstep scalars as literals: measured faster than a
+        # broadcast 1-row frame despite recompiling codegen every
+        # superstep (A/B on 19M edges, local[16]: literal ~3s/step
+        # steady vs column 5-33s/step)
+        gcols = {k: F.lit(float(g[k] or 0.0)) for k in spec.global_aggs}
         new_value = spec.apply_fn(F.col("value"), F.col("msg"), gcols)
-        nmsg = F.coalesce(F.col("msg_count"), F.lit(0)) if counted else F.lit(0)
         out = joined.select(
             F.col("id"),
             *[F.col(c) for c in spec.static_cols],
             F.col("value").alias("_prev"),
             new_value.cast("double").alias("value"),
-            nmsg.cast("long").alias("_nmsg"),
             F.col("msg").alias("_msg"),
         )
         out = out.withColumn(
@@ -390,6 +305,25 @@ class PregelRunner:
         )
         return out.drop("_msg")
 
+    @staticmethod
+    def _messages_sent(msg_obs: Observation) -> int:
+        try:
+            return int(msg_obs.get["_msgs_sent"] or 0)
+        except Py4JJavaError as exc:
+            # AQE empty-relation propagation: when the message frame is
+            # provably empty (e.g. the final frontier has no out-edges),
+            # the apply join's right subtree is folded away in the FINAL
+            # plan and its CollectMetrics never reaches observedMetrics —
+            # getRow then hands back a schema-less row whose toPyRow
+            # conversion fails its arity assert.  Pruning fires only for
+            # empty subtrees, and combined is empty iff msgs is empty, so
+            # the true count is exactly 0.  ONLY that signature is
+            # swallowed (ADVICE r5): any other metrics-retrieval failure
+            # is a real error, not a real zero-message superstep.
+            if "toPyRow" not in str(exc):
+                raise
+            return 0
+
     # ------------------------------------------------------------------ run
 
     def run(
@@ -402,9 +336,13 @@ class PregelRunner:
     ) -> PregelResult:
         """Run the BSP loop to convergence (no active vertices — the
         reference's all-workers-SEND_EMPTY condition, Master.go:1044-1063)
-        or to ``max_supersteps``."""
+        or to ``max_supersteps`` (``None`` ⇒ the spec's cap; 0 runs no
+        superstep)."""
         spec = self.spec
-        max_steps = max_supersteps or spec.max_supersteps
+        if max_supersteps is None:
+            max_supersteps = spec.max_supersteps
+        elif max_supersteps < 0:
+            raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
         if state is None and vertices is None and self._salting:
             # derive vertices from the UNSALTED edges — salting (below)
             # rewrites hub dst ids into a reserved negative key space that
@@ -421,7 +359,7 @@ class PregelRunner:
             vertices = self.vertices_from_edges(edges)
         try:
             return self._run_loop(
-                edges, vertices, state, start_superstep, max_steps
+                edges, vertices, state, start_superstep, max_supersteps
             )
         finally:
             # a long-lived session runs many jobs through many runners —
@@ -443,8 +381,8 @@ class PregelRunner:
         prev_cached = None  # the previous superstep's persisted new_state
         if state is None:
             state = self._init_state(vertices)
-            # the init persist is the zeroth block cache: released after
-            # the first block materializes, like every later new_state
+            # the init persist is the zeroth superstep cache: released
+            # after superstep 1 materializes, like every later new_state
             prev_cached = state
         g = self._collect_globals(state)
         prev_active = -1  # unknown → don't broadcast on step 1
@@ -457,75 +395,35 @@ class PregelRunner:
         # planner (localCheckpoint would erase it and force a re-shuffle
         # of state on every join). Metrics + global aggregates ride on
         # the SAME materializing action via the Observation API — one
-        # job per block of supersteps, no second pass over state (the
+        # barrier per superstep, no second pass over state (the
         # reference needs a whole master round-trip for this,
         # Master.go:958-967).
         agg_cols = [
             F.sum(F.col("active").cast("long")).alias("_active"),
-            F.sum("_nmsg").alias("_msgs"),
             F.max("_delta").alias("_maxdelta"),
             F.count(F.lit(1)).alias("_n"),
         ] + [c.alias(k) for k, c in spec.global_aggs.items()]
         while step - start_superstep < max_steps:
-            k_steps = min(
-                self.steps_per_action, max_steps - (step - start_superstep)
-            )
+            step += 1
             t0 = time.monotonic()
-            observations: list[Observation] = []
-            msg_observations: list[Observation | None] = []
-            cur = state
-            for j in range(k_steps):
-                obs = Observation(f"superstep_{step + j + 1}")
-                mobs = (
-                    Observation(f"msgs_{step + j + 1}")
-                    if self.slim_shuffle
-                    else None
-                )
-                msg_observations.append(mobs)
-                # step 1 of the block: exact globals off the previous
-                # block's Observation as driver literals (fast path);
-                # steps 2..K: globals in-plan from the incoming frame
-                full = self._one_superstep(
-                    cur,
-                    edges,
-                    g,
-                    prev_active if j == 0 else -1,
-                    inplan_globals=(j > 0),
-                    msg_obs=mobs,
-                )
-                if j < k_steps - 1:
-                    # LAZY localCheckpoint: pins the intermediate step to
-                    # ONE physical RDD, so its chained consumers (next
-                    # scatter, next apply probe, in-plan globals agg, the
-                    # per-step observe) share a single execution of this
-                    # step's apply join via stage-level dedup — still zero
-                    # actions, one job per block.  Without it each consumer
-                    # re-executed the join (exchanges were reused, joins
-                    # were not): measured 1.8× block cost on 8M vertices /
-                    # 156M edges at local[16].  A .repartition dedup point
-                    # gets optimizer-removed as redundant (state is already
-                    # id-partitioned); the lazy checkpoint preserves that
-                    # partitioning, so no extra exchange appears.  The
-                    # checkpoint must sit BELOW the observe: a CollectMetrics
-                    # captured inside the checkpointed RDD belongs to an
-                    # inner query execution whose metrics never reach this
-                    # block's action (observed: zeros → false convergence).
-                    full = full.localCheckpoint(eager=False)
-                full = full.observe(obs, *agg_cols)
-                observations.append(obs)
-                cur = full.select("id", *spec.static_cols, "value", "active")
-            new_state = cur.persist()
-            new_state.count()  # the BSP barrier action (one per block)
-            block_wall = time.monotonic() - t0
-            rows = [o.get for o in observations]
-            g = {k: rows[-1][k] for k in spec.global_aggs}
+            obs = Observation(f"superstep_{step}")
+            msg_obs = Observation(f"msgs_{step}")
+            full = self._one_superstep(state, edges, g, prev_active, msg_obs)
+            new_state = (
+                full.observe(obs, *agg_cols)
+                .select("id", *spec.static_cols, "value", "active")
+                .persist()
+            )
+            new_state.count()  # the BSP barrier action
+            wall = time.monotonic() - t0
+            row = obs.get
+            g = {k: row[k] for k in spec.global_aggs}
 
             if prev_cached is not None:
-                prev_cached.unpersist()  # previous block's blocks — now dead
+                prev_cached.unpersist()  # previous superstep's blocks — now dead
             prev_cached = new_state
             state = new_state
-            step += k_steps
-            if self.lineage_break_every and step % self.lineage_break_every < k_steps:
+            if self.lineage_break_every and step % self.lineage_break_every == 0:
                 # lineage break: every superstep references the previous
                 # state TWICE (frontier join + apply join), so the analyzed
                 # plan tree DOUBLES per step — Catalyst analysis cost grows
@@ -539,56 +437,21 @@ class PregelRunner:
                 prev_cached.unpersist()
                 prev_cached = None
 
-            for j, row in enumerate(rows):
-                if msg_observations[j] is not None:
-                    # slim mode: the exact count off the pre-shuffle
-                    # Observation (the combine shipped no counts)
-                    try:
-                        msgs_sent = int(
-                            msg_observations[j].get["_msgs_sent"] or 0
-                        )
-                    except Py4JJavaError as exc:
-                        # AQE empty-relation propagation: when the message
-                        # frame is provably empty (e.g. the final frontier
-                        # has no out-edges), the apply join's right subtree
-                        # is folded away in the FINAL plan and its
-                        # CollectMetrics never reaches observedMetrics —
-                        # getRow then hands back a schema-less row whose
-                        # toPyRow conversion fails its arity assert.
-                        # Pruning fires only for empty subtrees, and
-                        # combined is empty iff msgs is empty, so the true
-                        # count is exactly 0.  ONLY that signature is
-                        # swallowed (ADVICE r5): any other metrics-
-                        # retrieval failure is a real error, not a real
-                        # zero-message superstep — re-raise it.
-                        if "toPyRow" not in str(exc):
-                            raise
-                        msgs_sent = 0
-                else:
-                    msgs_sent = int(row["_msgs"] or 0)
-                m = SuperstepMetrics(
-                    superstep=step - k_steps + j + 1,
-                    active_vertices=int(row["_active"] or 0),
-                    messages_sent=msgs_sent,
-                    max_delta=float(row["_maxdelta"] or 0.0),
-                    num_vertices=int(row["_n"]),
-                    wall_secs=block_wall / k_steps,
-                    # each step's OWN observation row — not the block-final
-                    # globals — so chained metrics equal unchained exactly
-                    globals={k: row[k] for k in spec.global_aggs},
-                )
-                metrics.append(m)
-                if m.active_vertices == 0:
-                    # chained steps past the fixed point were no-ops (empty
-                    # frontier → no messages → identical state): report the
-                    # true convergence step and drop the no-op tail
-                    converged = True
-                    step = m.superstep
-                    break
-            prev_active = metrics[-1].active_vertices
+            m = SuperstepMetrics(
+                superstep=step,
+                active_vertices=int(row["_active"] or 0),
+                messages_sent=self._messages_sent(msg_obs),
+                max_delta=float(row["_maxdelta"] or 0.0),
+                num_vertices=int(row["_n"]),
+                wall_secs=wall,
+                globals=g,
+            )
+            metrics.append(m)
+            prev_active = m.active_vertices
+            converged = m.active_vertices == 0
 
             if self.checkpoint_dir and self.checkpoint_every and (
-                step % self.checkpoint_every < k_steps
+                step % self.checkpoint_every == 0
             ):
                 self._write_checkpoint(state, step, metrics)
                 last_ckpt_step = step
@@ -596,7 +459,9 @@ class PregelRunner:
             if converged:
                 break
 
-        if self.checkpoint_dir and last_ckpt_step != step:
+        # a run that made no superstep (e.g. a resume with 0 steps left)
+        # leaves the committed snapshot and its history as they were
+        if self.checkpoint_dir and metrics and last_ckpt_step != step:
             self._write_checkpoint(state, step, metrics)
         if prev_cached is not None:
             # detach the result from the loop's cached blocks (and from the

@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 # (src_value, edge_weight) -> message value
 MsgFn = Callable[[Column, Column], Column]
 # (old_value, combined_msg_or_null, globals) -> new value.  Globals reach
-# apply as Columns: per-superstep literals, or an in-plan broadcast
-# aggregate on chained steps 2..K (see runner._one_superstep).
+# apply as Column literals: the previous superstep's ``global_aggs``.
 ApplyFn = Callable[[Column, Column, dict], Column]
 # (old_value, new_value, combined_msg_or_null) -> active boolean
 ActiveFn = Callable[[Column, Column, Column], Column]
@@ -39,8 +38,8 @@ FOLDS = {"min": F.min, "sum": F.sum}
 COMBINERS = (*FOLDS, "mode")
 
 
-def _mode_argmax(counts: DataFrame, counted: bool) -> DataFrame:
-    """(id, msg, cnt) partial counts → (id, msg [, msg_count]): the winner
+def _mode_argmax(counts: DataFrame) -> DataFrame:
+    """(id, msg, cnt) partial counts → (id, msg): the winner
     is max by (cnt, -msg), i.e. most frequent label with deterministic
     ties → smallest label, as ONE algebraic aggregate (struct ordering
     is field-lexicographic).  Replaces the earlier row_number window:
@@ -49,31 +48,24 @@ def _mode_argmax(counts: DataFrame, counted: bool) -> DataFrame:
     running max per map partition instead of a single-task sort of all
     its (label, count) rows — the window was the last reducer-skew
     point in the LPA plan."""
-    count = [F.sum("cnt").alias("msg_count")] if counted else []
     return (
-        counts.groupBy("id").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("_neg"))).alias("_w"),
-            *count,
-        )
-        .select("id", (-F.col("_w._neg")).alias("msg"), *(["msg_count"] if counted else []))
+        counts.groupBy("id")
+        .agg(F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("_neg"))).alias("_w"))
+        .select("id", (-F.col("_w._neg")).alias("msg"))
     )
 
 
 def combine_messages(
     msgs: DataFrame,
     kind: str,
-    counted: bool = True,
     unsalt: Optional[Callable[[DataFrame], DataFrame]] = None,
 ) -> DataFrame:
-    """Fold messages (id, msg) into exactly one (id, msg [, msg_count])
-    row per target id — the superstep's exchange.  Spark's partial+final
-    hash aggregation gives the sender-side combine the reference lacks
-    (it folds at the receiver only, Vertex.go:71-80; SURVEY.md §4 P2).
-
-    ``counted`` ships a msg_count partial that feeds the messages-sent
-    counter (O21).  The runner drops it whenever it can count on the
-    pre-shuffle message frame instead: (id, msg, count) → (id, msg) is 8
-    fewer bytes/row through the only per-superstep shuffle.
+    """Fold messages (id, msg) into exactly one (id, msg) row per target
+    id — the superstep's exchange.  Spark's partial+final hash
+    aggregation gives the sender-side combine the reference lacks (it
+    folds at the receiver only, Vertex.go:71-80; SURVEY.md §4 P2).  No
+    message count rides the exchange: the runner counts on the
+    pre-shuffle message frame.
 
     ``unsalt`` (hub salting) maps salted ids back to real ids.  The folds
     combine per SALTED key — the heavy shuffle, a hub's inbox split
@@ -92,13 +84,11 @@ def combine_messages(
         counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
         if unsalt is not None:
             counts = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
-        return _mode_argmax(counts, counted)
+        return _mode_argmax(counts)
     fold = FOLDS[kind]
-    count = [F.count(F.lit(1)).alias("msg_count")] if counted else []
-    out = msgs.groupBy("id").agg(fold("msg").alias("msg"), *count)
+    out = msgs.groupBy("id").agg(fold("msg").alias("msg"))
     if unsalt is not None:
-        recount = [F.sum("msg_count").alias("msg_count")] if counted else []
-        out = unsalt(out).groupBy("id").agg(fold("msg").alias("msg"), *recount)
+        out = unsalt(out).groupBy("id").agg(fold("msg").alias("msg"))
     return out
 
 
@@ -116,8 +106,8 @@ class AlgorithmSpec:
     returns (id, value [, static columns...]).  Static columns listed in
     ``static_cols`` (e.g. a dangling flag for PageRank) are carried through
     every superstep unchanged.  ``combiner`` names the fold over each
-    vertex's inbox, one of ``COMBINERS``; the runner derives the counted,
-    count-free and salted forms from it (``combine_messages``).
+    vertex's inbox, one of ``COMBINERS``; the runner derives the plain and
+    salted forms from it (``combine_messages``).
     """
 
     name: str

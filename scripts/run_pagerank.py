@@ -33,11 +33,6 @@ def main() -> None:
     p.add_argument("--checkpoint-every", type=int, default=10)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--num-partitions", type=int, default=None)
-    p.add_argument(
-        "--steps-per-action", type=int, default=1,
-        help="chain K supersteps into one job (exact for combiner-only "
-        "algorithms; ignored by pagerank, which reads a global every step)",
-    )
     args = p.parse_args()
 
     spark = SparkSession.builder.appName(f"pregel-{args.algorithm}").getOrCreate()
@@ -57,8 +52,6 @@ def main() -> None:
     kw = {}
     if args.num_partitions:
         kw["num_partitions"] = args.num_partitions
-    if args.steps_per_action > 1:
-        kw["steps_per_action"] = args.steps_per_action
     if args.checkpoint_dir:
         kw["checkpoint_dir"] = args.checkpoint_dir
         kw["checkpoint_every"] = args.checkpoint_every

@@ -182,9 +182,10 @@ def test_edge_layout_order_is_deterministic(spark):
     partitions, so its row order is a function of the data alone — not of
     shuffle-fetch interleaving in the CALLER's prep plan.  Two
     independent prepares of the same lineage must agree partition by
-    partition, row by row; this is what keeps every float message-sum
-    downstream (slim vs classic combine, chained vs unchained, resume vs
-    cold) bit-identical across runs."""
+    partition, row by row, and equal the canonical layout of the known
+    edges: hash(src) partition, then (src, dst, weight) order.  This is
+    what keeps every float message-sum downstream (resume vs cold)
+    bit-identical across runs."""
     from pyspark.sql import functions as F
 
     from pregel_golang_implementation_spark.operators.pagerank import (
@@ -208,6 +209,17 @@ def test_edge_layout_order_is_deterministic(spark):
             .collect()
         ]
         e.unpersist()
-        return rows
+        return rows, runner.num_partitions
 
-    assert layout() == layout()  # exact order, not just multiset
+    first, num_partitions = layout()
+    assert layout() == (first, num_partitions)  # exact order, not just multiset
+    # hash partitioning on src is pmod(murmur3(src), P) — F.hash's function
+    # and seed — so the expectation is computed from the raw edge rows
+    known = pr_edges.select(
+        F.expr(f"pmod(hash(CAST(src AS BIGINT)), {num_partitions})").alias("p"),
+        F.col("src").cast("long"),
+        F.col("dst").cast("long"),
+        F.col("weight").cast("double"),
+    ).collect()
+    assert len(known) > num_partitions > 1
+    assert first == sorted(tuple(r) for r in known)

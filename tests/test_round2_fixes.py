@@ -270,42 +270,6 @@ def test_ann_candidates_cap(spark):
     assert len(report) == 1 and report[0]["n_vecs"] == 20
 
 
-# -------------------------------------------------- chained supersteps
-
-def test_chained_supersteps_identical(spark):
-    """steps_per_action>1 shares one job across supersteps but must be
-    bit-identical: same final state, same converged-step count, same
-    per-step metrics (each chained step reports via its own Observation).
-    Unchained runs count messages on the pre-shuffle frame, chained runs
-    in the combine, so this also pins both counting forms of the min and
-    mode combiners (PageRank pins sum in test_round4_fixes)."""
-    from pregel_golang_implementation_spark.operators.label_propagation import lpa_spec
-
-    edges = _chain_edges(spark, n=14)
-    # LPA capped short: on a path it oscillates until the cap
-    for make_spec in (cc_spec, lambda: lpa_spec(max_supersteps=6)):
-        r1 = PregelRunner(spark, make_spec()).run(edges)
-        r2 = PregelRunner(spark, make_spec(), steps_per_action=2).run(edges)
-        a = {r["id"]: r["value"] for r in r1.state.collect()}
-        b = {r["id"]: r["value"] for r in r2.state.collect()}
-        assert a == b
-        assert r1.supersteps == r2.supersteps and r1.converged == r2.converged
-        assert r2.converged == (make_spec is cc_spec)
-        m1 = [(m.superstep, m.active_vertices, m.messages_sent) for m in r1.metrics]
-        m2 = [(m.superstep, m.active_vertices, m.messages_sent) for m in r2.metrics]
-        assert m1 == m2
-        # fixed-iteration mode stops at exactly max_supersteps
-        f2 = PregelRunner(spark, make_spec(), steps_per_action=2).run(
-            edges, max_supersteps=3
-        )
-        assert f2.supersteps == 3
-    # specs with global aggregates chain too since r4 (in-plan globals for
-    # steps 2..K of a block — see test_round4_fixes for the equivalence)
-    from pregel_golang_implementation_spark.operators.pagerank import pagerank_spec
-
-    assert PregelRunner(spark, pagerank_spec(10), steps_per_action=2).steps_per_action == 2
-
-
 # ------------------------------------------------- personalized PageRank
 
 def test_ppr_uniform_teleport_equals_standard_pagerank(spark):

@@ -142,18 +142,6 @@ def test_ppr_rejects_missing_source(spark):
         personalized_pagerank(spark, edges, source_ids=[1, 999])
 
 
-def test_steps_per_action_clamped(spark):
-    from pregel_golang_implementation_spark.operators.connected_components import cc_spec
-    from pregel_golang_implementation_spark.plans.runner import (
-        MAX_STEPS_PER_ACTION,
-        PregelRunner,
-    )
-
-    with pytest.warns(UserWarning, match="clamping"):
-        r = PregelRunner(spark, cc_spec(), steps_per_action=10)
-    assert r.steps_per_action == MAX_STEPS_PER_ACTION
-
-
 def test_streaming_dedup_parquet_sink_across_restart(spark, tmp_path):
     """Production sink: first-ever docs land in parquet (per-epoch
     overwrite), and the dedup GroupState survives a full query RESTART via

@@ -152,58 +152,6 @@ def test_avg_k_skips_events_without_prop(spark):
     assert want == pytest.approx(6.0)
 
 
-# ------------------------------------------- chained supersteps with globals
-
-
-def test_pagerank_chained_supersteps_identical(spark):
-    """PageRank carries a per-superstep global (dangling mass); chained
-    blocks compute it in-plan for steps 2..K and must stay bit-identical
-    to the one-job-per-step run: same values, same per-step metrics, same
-    per-step dangling-mass observations.  Fixed 4-step runs so both
-    executions take exactly the same number of supersteps."""
-    from pregel_golang_implementation_spark.operators.pagerank import pagerank
-    from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
-
-    # hub-ish seeded digraph; synthetic graphs have dangling vertices, so
-    # the global aggregate is load-bearing (dangling_mass > 0)
-    edges = synthetic_edges(spark, num_vertices=400, avg_degree=3, seed=7)
-    r1 = pagerank(spark, edges, tol=0.0, max_supersteps=4)
-    r2 = pagerank(spark, edges, tol=0.0, max_supersteps=4, steps_per_action=2)
-    a = {r["id"]: r["value"] for r in r1.state.collect()}
-    b = {r["id"]: r["value"] for r in r2.state.collect()}
-    assert a == b  # bit-identical, not approx
-    assert r1.supersteps == r2.supersteps == 4
-    m1 = [
-        (m.superstep, m.active_vertices, m.messages_sent, m.globals["dangling_mass"])
-        for m in r1.metrics
-    ]
-    m2 = [
-        (m.superstep, m.active_vertices, m.messages_sent, m.globals["dangling_mass"])
-        for m in r2.metrics
-    ]
-    assert m1 == m2
-    # mass is conserved through the chained dangling redistribution
-    mass = sum(b.values())
-    assert mass == pytest.approx(1.0, abs=1e-9)
-
-
-def test_pagerank_chained_convergence(spark):
-    """To-convergence chained run converges to the same fixed point (the
-    trailing in-block refinements past the halt threshold are sub-tol by
-    construction, so values agree within tol)."""
-    from pregel_golang_implementation_spark.operators.pagerank import pagerank
-    from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
-
-    edges = synthetic_edges(spark, num_vertices=300, avg_degree=4, seed=11)
-    r1 = pagerank(spark, edges, tol=1e-6)
-    r2 = pagerank(spark, edges, tol=1e-6, steps_per_action=2)
-    assert r2.converged
-    assert abs(r1.supersteps - r2.supersteps) <= 1
-    a = {r["id"]: r["value"] for r in r1.state.collect()}
-    b = {r["id"]: r["value"] for r in r2.state.collect()}
-    assert max(abs(a[i] - b[i]) for i in a) < 1e-6
-
-
 # ----------------------------------------------- degree-ordered triangles
 
 

@@ -1,11 +1,9 @@
 """Round-5 fixes: the four r4 ADVICE items + the new contract queries'
-building blocks (salted PageRank under chaining, 4-iter LPA)."""
+building blocks (salted PageRank, 4-iter LPA)."""
 
 from __future__ import annotations
 
 import pytest
-
-from pregel_golang_implementation_spark.plans.runner import PregelRunner
 
 
 # --------------------------------------------- ADVICE: delta conflict match
@@ -144,7 +142,7 @@ def test_near_dup_clusters_still_resolves(spark):
     assert out[4] == 4
 
 
-# ------------------------------------------------- r5: slim combine shuffle
+# ------------------------------------------ r5: pre-shuffle message counting
 
 def _path_edges(spark, n=20):
     return spark.createDataFrame(
@@ -165,15 +163,3 @@ def test_slim_shuffle_empty_final_frontier_counts_zero(spark):
     assert res.total_messages == 20
 
 
-def test_slim_shuffle_ineligible_paths_fall_back(spark):
-    """Chained runners must not enable slim (a chained step's
-    CollectMetrics lands in an inner query execution and reports zeros);
-    salted runners count pre-shuffle like every unchained run."""
-    from pregel_golang_implementation_spark.operators.pagerank import pagerank_spec
-
-    spec = pagerank_spec(100)
-    assert PregelRunner(spark, spec, steps_per_action=2).slim_shuffle is False
-    assert PregelRunner(
-        spark, spec, salt_degree_threshold=5, num_salts=4
-    ).slim_shuffle is True
-    assert PregelRunner(spark, spec, steps_per_action=1).slim_shuffle is True

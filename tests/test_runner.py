@@ -1,0 +1,159 @@
+"""PregelRunner loop contract: one barrier per superstep, exact per-step
+metrics against hand-computed counts, and the ``max_supersteps`` cap
+(including 0) on both ``run`` and ``resume``."""
+
+from __future__ import annotations
+
+from collections import Counter, defaultdict
+
+import pytest
+
+from pregel_golang_implementation_spark.operators.connected_components import (
+    cc_spec,
+    symmetrize,
+)
+from pregel_golang_implementation_spark.operators.label_propagation import lpa_spec
+from pregel_golang_implementation_spark.operators.pagerank import (
+    pagerank_spec,
+    prepare_pagerank_graph,
+)
+from pregel_golang_implementation_spark.plans.runner import PregelRunner
+
+
+def _undirected(spark):
+    """A 12-vertex path plus a triangle, both directions of every edge."""
+    pairs = [(i, i + 1) for i in range(11)] + [(20, 21), (21, 22), (20, 22)]
+    raw = spark.createDataFrame(pairs, "src long, dst long")
+    edges = symmetrize(raw)
+    return edges, [(r["src"], r["dst"]) for r in edges.collect()]
+
+
+def _simulate(edge_list, combine, use_frontier, max_steps):
+    """Synchronous Pregel on a Python edge list: labels start at the vertex
+    id; per step the previous frontier scatters its label along its
+    out-edges (every vertex when ``use_frontier`` is False), each
+    inbox folds with ``combine`` and a vertex stays active iff its label
+    changed.  Returns per-step (messages, active) and the final labels."""
+    out = defaultdict(list)
+    for s, d in edge_list:
+        out[s].append(d)
+    labels = {v: float(v) for e in edge_list for v in e}
+    frontier = set(labels)
+    steps = []
+    while len(steps) < max_steps:
+        senders = frontier if use_frontier else labels
+        inbox = defaultdict(list)
+        for v in senders:
+            for d in out[v]:
+                inbox[d].append(labels[v])
+        new = {v: combine(labels[v], inbox[v]) if inbox[v] else labels[v] for v in labels}
+        frontier = {v for v in labels if new[v] != labels[v]}
+        steps.append((sum(len(out[v]) for v in senders), len(frontier)))
+        labels = new
+        if not frontier:
+            break
+    return steps, labels
+
+
+def _mode(old, msgs):
+    counts = Counter(msgs)
+    return min(counts, key=lambda m: (-counts[m], m))
+
+
+def _pagerank(edge_list, dangling, n, d, steps):
+    """Dense power iteration with uniform dangling redistribution; returns
+    per-step (dangling mass, ranks)."""
+    outdeg = Counter(s for s, _ in edge_list)
+    rank = {v: 1.0 / n for v in dangling}
+    dm = sum(rank[v] for v in rank if dangling[v])
+    out = []
+    for _ in range(steps):
+        inbox = defaultdict(float)
+        for s, t in edge_list:
+            inbox[t] += rank[s] / outdeg[s]
+        rank = {v: (1.0 - d) / n + d * (inbox[v] + dm / n) for v in rank}
+        dm = sum(rank[v] for v in rank if dangling[v])
+        out.append((dm, dict(rank)))
+    return out
+
+
+def _values(res):
+    return {r["id"]: r["value"] for r in res.state.collect()}
+
+
+def test_per_step_metrics_exact_for_min_mode_and_sum(spark):
+    """Each superstep's ``messages_sent`` is the out-degree sum over the
+    previous frontier (|E| when the spec scatters from every vertex), its
+    ``active_vertices`` the changed set, and every step has its own wall
+    time — for the min (CC), mode (LPA) and sum (PageRank) combiners."""
+    edges, edge_list = _undirected(spark)
+
+    # CC converges on this graph; LPA oscillates on the path until its cap
+    cases = [
+        (cc_spec(), lambda old, msgs: min([old, *msgs]), True, 100, True),
+        (lpa_spec(max_supersteps=6), _mode, False, 6, False),
+    ]
+    for spec, combine, frontier, cap, converges in cases:
+        want, labels = _simulate(edge_list, combine, frontier, cap)
+        res = PregelRunner(spark, spec).run(edges)
+        got = [(m.messages_sent, m.active_vertices) for m in res.metrics]
+        assert got == want, spec.name
+        assert [m.superstep for m in res.metrics] == list(range(1, len(want) + 1))
+        assert res.supersteps == len(want)
+        assert res.converged == converges == (want[-1][1] == 0)
+        assert _values(res) == labels
+        assert all(m.wall_secs > 0 for m in res.metrics)
+        # a fixed-iteration run stops at exactly the cap
+        capped = PregelRunner(spark, spec).run(edges, max_supersteps=3)
+        assert capped.supersteps == 3 and not capped.converged
+        assert [m.messages_sent for m in capped.metrics] == [w[0] for w in want[:3]]
+
+    raw = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)], "src long, dst long"
+    )
+    pr_edges, vertices = prepare_pagerank_graph(raw)
+    pr_list = [(r["src"], r["dst"]) for r in pr_edges.collect()]
+    dangling = {r["id"]: r["is_dangling"] for r in vertices.collect()}
+    n = len(dangling)
+    assert any(dangling.values())  # the dangling global is load-bearing
+    want = _pagerank(pr_list, dangling, n, 0.85, 4)
+    res = PregelRunner(spark, pagerank_spec(n, tol=0.0)).run(
+        pr_edges, vertices=vertices, max_supersteps=4
+    )
+    assert res.supersteps == 4
+    assert [m.messages_sent for m in res.metrics] == [len(pr_list)] * 4
+    assert all(m.wall_secs > 0 for m in res.metrics)
+    for m, (dm, _) in zip(res.metrics, want):
+        assert m.globals["dangling_mass"] == pytest.approx(dm, rel=1e-12)
+    got = _values(res)
+    assert got == pytest.approx(want[-1][1], rel=1e-12)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_max_supersteps_zero_runs_no_superstep(spark):
+    """An explicit 0 is a cap, not "use the spec's cap": the initial state
+    comes back untouched.  A negative cap is rejected."""
+    edges, _ = _undirected(spark)
+    res = PregelRunner(spark, cc_spec()).run(edges, max_supersteps=0)
+    assert res.supersteps == 0 and res.metrics == [] and not res.converged
+    assert all(r["value"] == r["id"] for r in res.state.collect())
+    with pytest.raises(ValueError, match="max_supersteps"):
+        PregelRunner(spark, cc_spec()).run(edges, max_supersteps=-1)
+
+
+def test_resume_with_no_steps_left_runs_no_superstep(spark, tmp_path):
+    """A crash exactly at the cap resumes with 0 steps left: the resume
+    returns the checkpointed state and leaves the checkpoint as written."""
+    edges, _ = _undirected(spark)
+    ck = str(tmp_path / "ck")
+    first = PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1).run(
+        edges, max_supersteps=2
+    )
+    assert first.supersteps == 2 and not first.converged
+    res = PregelRunner(spark, cc_spec(), checkpoint_dir=ck).resume(
+        edges, max_supersteps=0
+    )
+    assert res.supersteps == 0 and res.metrics == []
+    assert _values(res) == _values(first)
+    step, manifest = PregelRunner.latest_checkpoint(ck)
+    assert step == 2 and len(manifest["history"]) == 2

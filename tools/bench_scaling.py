@@ -164,17 +164,6 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
     # run-to-run otherwise; all raw step walls are reported).
     import statistics
 
-    # steps_per_action=1 at this input size — measured, not assumed: the
-    # r4 A/B at 8M vertices / 156M edges, local[16], same windows, gave
-    # chained spa=2 5.6M edges/s vs unchained 8.4M (and 3.8M before the
-    # lazy-checkpoint dedup of the intermediate state). With ~20s
-    # supersteps the ~0.3s driver round-trip chaining saves is noise,
-    # while any in-block dedup of the intermediate state (recompute or
-    # localCheckpoint) costs seconds per step. Chaining pays near the
-    # driver-latency floor (sub-2s steps: small graphs, or very large
-    # clusters where scheduling dominates) — not here.
-    # PREGEL_SCALING_SPA overrides for A/B (recorded in the JSON).
-    spa = int(os.environ.get("PREGEL_SCALING_SPA", "1"))
     # hub-salting A/B knob for the skew benchmark: in-degree threshold
     # above which a vertex's inbox splits across salt replicas (0 = off)
     salt_thr = int(os.environ.get("PREGEL_SCALING_SALT", "0"))
@@ -182,7 +171,6 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
         spark,
         spec,
         num_partitions=NUM_PARTITIONS,
-        steps_per_action=spa,
         salt_degree_threshold=salt_thr or None,
         num_salts=int(os.environ.get("PREGEL_SCALING_NUM_SALTS", "16")),
     )
@@ -207,7 +195,6 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
                 "supersteps_per_min": round(60.0 / med, 2),
                 "salt_degree_threshold": salt_thr,
                 "job": job,
-                "slim_shuffle": runner.slim_shuffle,
                 "extra_conf": extra,
             }
         )

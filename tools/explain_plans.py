@@ -56,62 +56,23 @@ def main() -> None:
     # action does — an unmaterialized cache makes AQE's initial plan
     # insert a defensive Exchange on the state side that execution
     # never runs
-    step = runner._one_superstep(state, e, {"dangling_mass": 0.0}, -1)
-    sections.append(("one PageRank superstep (scatter ⋈ + combine agg + apply ⋈)", grab(step)))
-
-    # 2b. two CHAINED supersteps in one job (steps_per_action=2, used for
-    # combiner-only algorithms): two combine exchanges, one action — the
-    # scheduler round-trip between them is gone
-    from pregel_golang_implementation_spark.operators.connected_components import (
-        cc_spec,
-    )
-
-    # num_partitions is resolved adaptively at _prepare_edges time (r6);
-    # this runner borrows the pagerank runner's prepared layout `e`, so
-    # adopt that resolved count explicitly instead of preparing twice
-    cc_runner = PregelRunner(
-        spark, cc_spec(), steps_per_action=2, num_partitions=runner.num_partitions
-    )
-    cc_state = cc_runner._init_state(runner.vertices_from_edges(e))
-    s1 = cc_runner._one_superstep(cc_state, e, {}, -1).select("id", "value", "active")
-    s2 = cc_runner._one_superstep(s1, e, {}, -1).select("id", "value", "active")
-    sections.append(("two chained supersteps, one job (steps_per_action=2)", grab(s2)))
-
-    # 2c. chained GLOBALS-bearing supersteps (r4): PageRank step 2 of a
-    # block reads the dangling mass as a broadcast 1-row aggregate of
-    # step 1's frame (BroadcastNestedLoopJoin of a single row) — one job
-    # for the block, no driver read between the steps
-    p1 = runner._one_superstep(state, e, {"dangling_mass": 0.0}, -1).select(
-        "id", "is_dangling", "value", "active"
-    )
-    p2 = runner._one_superstep(p1, e, {}, -1, inplan_globals=True)
-    chained_globals_plan = grab(p2)
-    assert "BroadcastNestedLoopJoin" in chained_globals_plan or "BroadcastExchange" in chained_globals_plan, (
-        "chained-globals superstep must broadcast the 1-row globals aggregate"
-    )
-    sections.append(
-        ("chained globals-bearing supersteps (in-plan dangling mass)", chained_globals_plan)
-    )
-
-    # 2d. SLIM superstep (r5): the messages-sent counter rides a
-    # CollectMetrics Observation on the PRE-shuffle message frame, so the
-    # combine drops its msg_count partial — the only per-superstep
-    # exchange ships (id, msg) instead of (id, msg, count): 8 fewer
-    # bytes/row through the shuffle, metrics still exact.
+    # the messages-sent counter rides a CollectMetrics Observation on the
+    # PRE-shuffle message frame, so the only per-superstep exchange ships
+    # (id, msg) rows with no count partial
     from pyspark.sql import Observation
 
-    slim_step = runner._one_superstep(
-        state, e, {"dangling_mass": 0.0}, -1, msg_obs=Observation("slim_msgs")
+    step = runner._one_superstep(
+        state, e, {"dangling_mass": 0.0}, -1, Observation("msgs")
     )
-    slim_plan = grab(slim_step)
-    assert "CollectMetrics" in slim_plan, (
-        "slim superstep must count messages via a pre-shuffle CollectMetrics"
+    step_plan = grab(step)
+    assert "CollectMetrics" in step_plan, (
+        "a superstep must count messages via a pre-shuffle CollectMetrics"
     )
-    assert "msg_count" not in slim_plan, (
-        "slim superstep must not ship a msg_count partial through the exchange"
+    assert "msg_count" not in step_plan, (
+        "a superstep must not ship a msg_count partial through the exchange"
     )
     sections.append(
-        ("slim superstep (pre-shuffle CollectMetrics, count-free exchange row)", slim_plan)
+        ("one PageRank superstep (scatter ⋈ + combine agg + apply ⋈)", step_plan)
     )
     e.unpersist()
 
