@@ -18,7 +18,6 @@ reordering; integer-valued results are exact.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -77,10 +76,6 @@ from pregel_golang_implementation_spark.operators.link_prediction import (
     common_neighbor_topk,
 )
 from pregel_golang_implementation_spark.operators.kmeans import kmeans_assign
-from pregel_golang_implementation_spark.operators.relational import (
-    docs_cube,
-    revenue_rollup,
-)
 from pregel_golang_implementation_spark.operators.scc import scc_fwbw
 from pregel_golang_implementation_spark.operators.bfs import (
     harmonic_centrality,
@@ -110,17 +105,9 @@ from pregel_golang_implementation_spark.operators.terms import (
     top_ngrams,
 )
 from pregel_golang_implementation_spark.operators.sssp import sssp_spec
-from pregel_golang_implementation_spark.operators.textstats import (
-    char_entropy,
-    fingerprint,
-    lang_id,
-    quality_score,
-    token_stats,
-)
 from pregel_golang_implementation_spark.operators.triangles import _triangle_rows
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
 from pregel_golang_implementation_spark.operators.coloring import greedy_coloring
-from pregel_golang_implementation_spark.operators.quantiles import exact_quantiles
 from pregel_golang_implementation_spark.operators.temporal import earliest_arrival_spec
 from pregel_golang_implementation_spark.operators.walks import random_walks
 from pregel_golang_implementation_spark.sources.graphs import (
@@ -160,7 +147,6 @@ SPAN_MIN_DOCS = 2
 HITS_ITERS = 3
 COLOR_ROUNDS = 3
 COLOR_INNER = 3
-QUANTILE_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
 WALK_LEN = 3
 TEMPORAL_ITERS = 4
 SCC_INNER = 14
@@ -171,7 +157,6 @@ HARMONIC_PIVOTS = 4
 HARMONIC_HOPS = 4
 COPURCHASE_MAX_BASKET = 40
 PACK_CAPACITY = 2048
-QUALITY_CUT_Q = 0.9
 BETWEEN_PIVOTS = 2
 BETWEEN_HOPS = 4
 WSAMPLE_K = 50
@@ -199,7 +184,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _runner(spark: SparkSession, spec) -> PregelRunner:
-    return PregelRunner(spark, spec, lineage_break_every=3)
+    return PregelRunner(spark, spec)
 
 
 def _sssp_source(spark: SparkSession, sf_dir: str) -> int:
@@ -238,7 +223,6 @@ def q_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     runner = PregelRunner(
         spark,
         pagerank_spec(n, damping=0.85, tol=1e-12),
-        lineage_break_every=3,
         salt_degree_threshold=10,
         num_salts=4,
     )
@@ -317,7 +301,6 @@ def q_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges,
         prior.state.select("id", "value"),
         max_supersteps=INC_CC_ITERS,
-        lineage_break_every=3,
     )
     return res.state.select("id", F.col("value").cast("long").alias("component"))
 
@@ -391,15 +374,9 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = symmetrize(edges_from_lineitem(spark, sf_dir))
     ckpt = tempfile.mkdtemp(prefix="pregel_ckpt_contract_")
     try:
-        first = PregelRunner(
-            spark, cc_spec(), lineage_break_every=3,
-            checkpoint_dir=ckpt, checkpoint_every=2,
-        )
+        first = PregelRunner(spark, cc_spec(), checkpoint_dir=ckpt, checkpoint_every=2)
         first.run(und, max_supersteps=2)
-        resumed = PregelRunner(
-            spark, cc_spec(), lineage_break_every=3,
-            checkpoint_dir=ckpt,
-        )
+        resumed = PregelRunner(spark, cc_spec(), checkpoint_dir=ckpt)
         res = resumed.resume(und, max_supersteps=CC_ITERS - 2)
         # result state is eagerly localCheckpoint-ed by the runner, so it
         # no longer depends on the snapshot files deleted below
@@ -487,22 +464,6 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banding prunes work without losing pairs."""
     out = simhash_near_dups(_docs(spark, sf_dir), bits=16, max_hamming=3)
     return out.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-
-
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return token_stats(_docs(spark, sf_dir))
-
-
-def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_score(_docs(spark, sf_dir))
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lang_id(_docs(spark, sf_dir))
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(_docs(spark, sf_dir))
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -808,13 +769,6 @@ def q_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact type-7 quantiles of l_extendedprice — distributed selection
-    (range Exchange + per-partition windows), no global-order reducer."""
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return exact_quantiles(lineitem, "l_extendedprice", QUANTILE_QS)
-
-
 def q_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Earliest-arrival temporal reachability from the min orderkey over
     order↔part contact edges timed by o_orderdate — the fifth distinct
@@ -849,7 +803,6 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         trim_rounds=SCC_TRIM,
         outer_rounds=1,
         strict=True,
-        lineage_break_every=3,
     )
 
 
@@ -860,18 +813,6 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_assign(
         _emb(spark, sf_dir), k=KMEANS_K, iters=KMEANS_ITERS, dim=EMB_DIM
     )
-
-
-def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP subtotals over (returnflag, linestatus): one Expand + one
-    tiny-key hash aggregate; decimal(38,9) sums (operators/relational.py)."""
-    return revenue_rollup(spark.read.parquet(f"{sf_dir}/lineitem.parquet"))
-
-
-def q_docs_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (source, lang) of the documents table — all four
-    grouping sets in one aggregate (operators/relational.py)."""
-    return docs_cube(_docs(spark, sf_dir))
 
 
 def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,7 +892,6 @@ def q_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges,
         prior.state.select("id", "value"),
         max_supersteps=INC_PR_ITERS,
-        lineage_break_every=3,
     )
     return res.state.select("id", F.round(F.col("value"), 6).alias("rank"))
 
@@ -1071,12 +1011,6 @@ def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seeded_label_spread(und, seeds, rounds=SPREAD_ROUNDS)
 
 
-def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document character-distribution Shannon entropy — the
-    gibberish/encoding-junk quality signal (operators/textstats.py)."""
-    return char_entropy(_docs(spark, sf_dir))
-
-
 def q_square_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-cycle (square) count — THE clustering motif on a bipartite
     graph, where triangles cannot exist; capped wedge middles reported
@@ -1122,19 +1056,6 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return betweenness_sampled(und, pivots, hops=BETWEEN_HOPS)
 
 
-def q_quality_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold-selection composition: keep documents at or above the
-    corpus P90 of stopword_ratio — exact_quantiles picks the cutoff
-    (distributed selection, one scalar to the driver), the filter is a
-    scan-pushed predicate.  The stated purpose of the quantile operator
-    (quantiles.py docstring), now under the driver gate end-to-end."""
-    qdf = quality_score(_docs(spark, sf_dir))
-    thr = exact_quantiles(qdf, "stopword_ratio", [QUALITY_CUT_Q]).first()["value"]
-    return qdf.filter(F.col("stopword_ratio") >= F.lit(thr)).select(
-        "doc_id", "stopword_ratio"
-    )
-
-
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing: where each document lands in the
     capacity-2048 packed token stream (tokens ≈ n_chars), via the
@@ -1171,10 +1092,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_candidate_pairs": q_lsh_pairs,
         "ngram_jaccard": q_jaccard,
         "simhash16": q_simhash,
-        "token_stats": q_token_stats,
-        "quality_score": q_quality,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_fingerprint,
         "embedding_knn": q_knn,
         "srp_buckets": q_srp_buckets,
         "jaccard_candidates": q_jaccard_candidates,
@@ -1204,23 +1121,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "last_touch": q_last_touch,
         "hits_3iter": q_hits,
         "greedy_coloring": q_coloring,
-        "quantiles_exact": q_quantiles,
         "random_walks": q_random_walks,
         "temporal_reach": q_temporal_reach,
         "scc_fwbw": q_scc,
         "kmeans_2iter": q_kmeans,
-        "revenue_rollup": q_revenue_rollup,
-        "docs_cube": q_docs_cube,
         "adamic_adar": q_adamic_adar,
         "harmonic_4src": q_harmonic,
         "copurchase_topk": q_copurchase,
         "pack_sequences": q_pack_sequences,
-        "quality_p90_cut": q_quality_p90,
         "betweenness_2src": q_betweenness,
         "hll_shingles": q_hll_shingles,
         "weighted_sample": q_weighted_sample,
         "square_count": q_square_count,
-        "char_entropy": q_char_entropy,
         "label_spread": q_label_spread,
         "clustering_coeff": q_clustering_coeff,
         "bm25_topk": q_bm25,
@@ -1796,25 +1708,6 @@ def _coloring_sql(colors: int, inner: int) -> str:
     )
 
 
-def _quantiles_sql(qs) -> str:
-    """Twin of q_quantiles: the type-7 formula written out on explicit
-    order statistics (row_number over the sorted values) — no reliance
-    on DuckDB's quantile_cont semantics matching anything."""
-    qlist = ", ".join(f"CAST({q!r} AS DOUBLE)" for q in qs)
-    return (
-        "WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem "
-        "WHERE l_extendedprice IS NOT NULL), "
-        "r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM s), "
-        "n AS (SELECT COUNT(*) AS n FROM s), "
-        f"t AS (SELECT UNNEST([{qlist}]) AS q), "
-        "b AS (SELECT q, 1.0 + (n.n - 1) * q AS k FROM t, n), "
-        "g AS (SELECT q, CAST(FLOOR(k) AS BIGINT) AS lo, "
-        "CAST(CEIL(k) AS BIGINT) AS hi, k - FLOOR(k) AS frac FROM b) "
-        "SELECT g.q AS quantile, ROUND(rlo.v + g.frac * (rhi.v - rlo.v), 6) AS value "
-        "FROM g JOIN r rlo ON rlo.rn = g.lo JOIN r rhi ON rhi.rn = g.hi"
-    )
-
-
 def _walks_sql(length: int) -> str:
     """Twin of q_random_walks: L unrolled transition joins; neighbor
     rank = row_number-1 per src ordered by dst; pick = hash48(node#t)
@@ -2037,23 +1930,6 @@ def _kmeans_sql(k: int, iters: int) -> str:
         + ", ".join(parts)
         + " SELECT vec_id, CAST(cl AS BIGINT) AS cluster FROM af"
     )
-
-
-_ROLLUP_SQL = (
-    "SELECT COALESCE(l_returnflag, 'ALL') AS return_flag, "
-    "COALESCE(l_linestatus, 'ALL') AS line_status, "
-    "COUNT(*) AS n_items, "
-    "CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(38,9))), 6) AS DOUBLE) AS sum_qty, "
-    "CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,9))), 6) "
-    "AS DOUBLE) AS revenue "
-    "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"
-)
-
-_DOCS_CUBE_SQL = (
-    "SELECT COALESCE(source, 'ALL') AS source, COALESCE(lang, 'ALL') AS lang, "
-    "COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars "
-    "FROM documents GROUP BY CUBE(source, lang)"
-)
 
 
 def _adamic_adar_sql(k: int, cap: int) -> str:
@@ -2400,19 +2276,6 @@ def _label_spread_sql(rounds: int) -> str:
     )
 
 
-_CHAR_ENTROPY_SQL = (
-    "WITH ch AS (SELECT doc_id, length(text) AS n_chars, "
-    "substr(text, CAST(unnest(generate_series(1, length(text))) AS INT), 1) AS c "
-    "FROM documents WHERE length(text) > 0), "
-    "cc AS (SELECT doc_id, n_chars, c, COUNT(*) AS cnt FROM ch GROUP BY 1, 2, 3) "
-    "SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, "
-    "ROUND((ln(CAST(n_chars AS DOUBLE)) - SUM(CAST(cnt AS DOUBLE) * "
-    "ln(CAST(cnt AS DOUBLE))) / CAST(n_chars AS DOUBLE)) / "
-    f"{math.log(2.0)!r}, 6) AS entropy_bits "
-    "FROM cc GROUP BY doc_id, n_chars"
-)
-
-
 def _square_count_sql(cap: int) -> str:
     """Twin of q_square_count: capped wedge pairs, C(c,2) per pair,
     halved for the two diagonals of each square."""
@@ -2563,21 +2426,6 @@ def oracle_sql() -> dict[str, str]:
             f"FROM ({_SIMHASH16_SQL}) a JOIN ({_SIMHASH16_SQL}) b ON a.doc_id < b.doc_id "
             "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"
         ),
-        "token_stats": (
-            "SELECT doc_id, "
-            "len(regexp_split_to_array(trim(lower(text)), '\\s+'))::BIGINT AS n_tokens, "
-            "len(regexp_extract_all(text, '\\p{L}+|\\p{N}+|[^\\p{L}\\p{N}\\s]+'))::BIGINT AS n_subtokens, "
-            "length(text)::BIGINT AS n_chars, "
-            "octet_length(encode(text))::BIGINT AS n_bytes FROM documents"
-        ),
-        "quality_score": _quality_sql(),
-        "lang_id": _lang_id_sql(),
-        "doc_fingerprint": (
-            "WITH n AS (SELECT doc_id, regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS norm FROM documents) "
-            "SELECT doc_id, md5(norm) AS fp_norm, "
-            "list_aggregate([md5(substr(norm, i, 8)) for i in "
-            "generate_series(1, greatest(length(norm) - 7, 1))], 'min') AS fp_min_shingle FROM n"
-        ),
         "embedding_knn": _knn_sql(),
         "srp_buckets": _srp_sql(),
         "jaccard_candidates": (
@@ -2665,13 +2513,10 @@ def oracle_sql() -> dict[str, str]:
         "last_touch": _last_touch_sql(),
         "hits_3iter": _materialize(_hits_sql(HITS_ITERS)),
         "greedy_coloring": _materialize(_coloring_sql(COLOR_ROUNDS, COLOR_INNER)),
-        "quantiles_exact": _quantiles_sql(QUANTILE_QS),
         "random_walks": _materialize(_walks_sql(WALK_LEN)),
         "temporal_reach": _materialize(_temporal_sql(TEMPORAL_ITERS)),
         "scc_fwbw": _materialize(_scc_sql(SCC_INNER, SCC_TRIM)),
         "kmeans_2iter": _materialize(_kmeans_sql(KMEANS_K, KMEANS_ITERS)),
-        "revenue_rollup": _ROLLUP_SQL,
-        "docs_cube": _DOCS_CUBE_SQL,
         "adamic_adar": _materialize(_adamic_adar_sql(LP_K, LP_MAX_MID_DEG)),
         "harmonic_4src": _materialize(
             _harmonic_sql(HARMONIC_PIVOTS, HARMONIC_HOPS)
@@ -2680,14 +2525,12 @@ def oracle_sql() -> dict[str, str]:
             _copurchase_sql(LP_K, COPURCHASE_MAX_BASKET)
         ),
         "pack_sequences": _pack_sql(PACK_CAPACITY),
-        "quality_p90_cut": _materialize(_quality_p90_sql(QUALITY_CUT_Q)),
         "betweenness_2src": _materialize(
             _betweenness_sql(BETWEEN_PIVOTS, BETWEEN_HOPS)
         ),
         "hll_shingles": _materialize(_hll_sql()),
         "weighted_sample": _weighted_sample_sql(WSAMPLE_K),
         "square_count": _materialize(_square_count_sql(LP_MAX_MID_DEG)),
-        "char_entropy": _CHAR_ENTROPY_SQL,
         "label_spread": _materialize(_label_spread_sql(SPREAD_ROUNDS)),
         "bm25_topk": _materialize(_bm25_sql(BM25_TERMS, BM25_K, BM25_K1, BM25_B)),
         "hop_distribution": _materialize(
@@ -2763,92 +2606,6 @@ def _embedding_near_dups_sql(threshold: float) -> str:
         "sim AS (SELECT vec_a, vec_b, "
         f"CAST(ROUND({dot} / ({na} * {nb}), 5) AS DOUBLE) AS sim FROM pairs) "
         f"SELECT vec_a, vec_b, sim FROM sim WHERE sim >= {threshold}"
-    )
-
-
-def _quality_base_sql() -> str:
-    """The t→base CTE chain shared by _quality_sql and the P90-threshold
-    composition oracle: per-doc stopword/length/alnum/dup-line signals."""
-    from pregel_golang_implementation_spark.operators.textstats import LANG_MARKERS
-
-    stop = sorted({w for ws in LANG_MARKERS.values() for w in ws})
-    stop_list = ", ".join(f"'{w}'" for w in stop)
-    return (
-        "t AS (SELECT doc_id, text, "
-        "regexp_split_to_array(trim(lower(text)), '\\s+') AS w, "
-        "list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS ln FROM documents), "
-        "base AS (SELECT doc_id, "
-        f"CAST(ROUND(len(list_filter(w, x -> x IN ({stop_list}))) / GREATEST(len(w), 1), 6) AS DOUBLE) AS stopword_ratio, "
-        "CAST(ROUND(length(regexp_replace(trim(text), '\\s+', '', 'g')) / GREATEST(len(w), 1), 6) AS DOUBLE) AS mean_token_len, "
-        "CAST(ROUND(length(regexp_replace(text, '[^\\p{L}\\p{N}]', '', 'g')) / GREATEST(length(text), 1), 6) AS DOUBLE) AS alnum_ratio, "
-        "CAST(CASE WHEN len(ln) > 0 THEN ROUND(1.0 - len(list_distinct(ln)) / len(ln), 6) "
-        "ELSE 0.0 END AS DOUBLE) AS dup_line_frac "
-        "FROM t)"
-    )
-
-
-def _quality_sql() -> str:
-    return (
-        f"WITH {_quality_base_sql()}, "
-        "bgl AS (SELECT doc_id, CASE WHEN len(w) >= 2 THEN "
-        "[w[i] || ' ' || w[i+1] for i in generate_series(1, len(w) - 1)] "
-        "ELSE [] END AS bgs FROM t), "
-        "bg AS (SELECT doc_id, unnest(bgs) AS bg FROM bgl), "
-        "bc AS (SELECT doc_id, bg, COUNT(*) AS c FROM bg GROUP BY 1, 2), "
-        "tb AS (SELECT doc_id, CAST(ROUND(MAX(c) / SUM(c), 6) AS DOUBLE) AS top_bigram_frac "
-        "FROM bc GROUP BY 1) "
-        "SELECT base.doc_id, stopword_ratio, mean_token_len, alnum_ratio, dup_line_frac, "
-        "CAST(COALESCE(top_bigram_frac, 0.0) AS DOUBLE) AS top_bigram_frac, "
-        "CAST(mean_token_len >= 2 AND mean_token_len <= 12 AND alnum_ratio >= 0.5 "
-        "AND dup_line_frac <= 0.3 AND COALESCE(top_bigram_frac, 0.0) <= 0.2 AS INT) AS quality "
-        "FROM base LEFT JOIN tb ON base.doc_id = tb.doc_id"
-    )
-
-
-def _quality_p90_sql(q: float) -> str:
-    """Twin of q_quality_p90: the quality base signals + the type-7
-    quantile formula (explicit order statistics, as _quantiles_sql) on
-    stopword_ratio, then the ≥-threshold filter — the 'keep documents
-    above the corpus P-th percentile' composition the quantile operator
-    exists for."""
-    return (
-        f"WITH {_quality_base_sql()}, "
-        "s AS (SELECT stopword_ratio AS v FROM base), "
-        "r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM s), "
-        "n AS (SELECT COUNT(*) AS n FROM s), "
-        f"b AS (SELECT 1.0 + (n.n - 1) * CAST({q!r} AS DOUBLE) AS k FROM n), "
-        "g AS (SELECT CAST(FLOOR(k) AS BIGINT) AS lo, CAST(CEIL(k) AS BIGINT) "
-        "AS hi, k - FLOOR(k) AS frac FROM b), "
-        "thr AS (SELECT ROUND(rlo.v + g.frac * (rhi.v - rlo.v), 6) AS t "
-        "FROM g JOIN r rlo ON rlo.rn = g.lo JOIN r rhi ON rhi.rn = g.hi) "
-        "SELECT doc_id, stopword_ratio FROM base "
-        "WHERE stopword_ratio >= (SELECT t FROM thr)"
-    )
-
-
-def _lang_id_sql() -> str:
-    from pregel_golang_implementation_spark.operators.textstats import LANG_MARKERS
-
-    langs = sorted(LANG_MARKERS)
-    hits = ", ".join(
-        "len(list_filter(w, x -> x IN ({}))) AS h_{}".format(
-            ", ".join(f"'{t}'" for t in LANG_MARKERS[lang]), lang
-        )
-        for lang in langs
-    )
-    gmax = "GREATEST(" + ", ".join(f"h_{l}" for l in langs) + ")"
-    case = f"CASE WHEN {gmax} = 0 THEN 'und' "
-    for i, lang in enumerate(langs):
-        if i < len(langs) - 1:
-            conds = " AND ".join(f"h_{lang} >= h_{other}" for other in langs[i + 1 :])
-            case += f"WHEN {conds} THEN '{lang}' "
-        else:
-            case += f"ELSE '{lang}' "
-    case += "END"
-    return (
-        "WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM documents), "
-        f"s AS (SELECT doc_id, {hits} FROM t) "
-        f"SELECT doc_id, {case} AS lang_guess, {gmax}::BIGINT AS lang_hits FROM s"
     )
 
 

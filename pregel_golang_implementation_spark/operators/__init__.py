@@ -36,12 +36,6 @@ from pregel_golang_implementation_spark.operators.similarity import (
     oversized_srp_buckets,
     srp_buckets,
 )
-from pregel_golang_implementation_spark.operators.textstats import (
-    fingerprint,
-    lang_id,
-    quality_score,
-    token_stats,
-)
 
 __all__ = [
     "dedup_corpus",
@@ -58,10 +52,6 @@ __all__ = [
     "embedding_near_dups",
     "oversized_srp_buckets",
     "srp_buckets",
-    "fingerprint",
-    "lang_id",
-    "quality_score",
-    "token_stats",
     "pagerank",
     "pagerank_spec",
     "personalized_pagerank",

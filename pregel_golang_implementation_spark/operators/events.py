@@ -1,9 +1,7 @@
 """Batch event-log operators: tumbling-window stats and gap sessionization.
 
-The batch complements of streaming/ingest.windowed_event_stats — a
-training-data pipeline processes its interaction/event logs both ways:
-streaming for freshness, batch for backfills and reprocessing.  All
-built-in column expressions; exact SQL twins in the DuckDB oracle.
+A training-data pipeline reprocesses and backfills its
+interaction/event logs in batch.  All built-in column expressions; exact SQL twins in the DuckDB oracle.
 
 Timestamps are reported as epoch seconds (long): integer-exact across
 engines, no timezone-rendering ambiguity in the value hash.

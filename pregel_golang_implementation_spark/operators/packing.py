@@ -9,7 +9,7 @@ over a deterministic document order — the one primitive naive Spark
 does through a single-reducer `row_number OVER (ORDER BY …)` window,
 which dies at scale.
 
-Spark-first shape (the exact_quantiles discipline, quantiles.py):
+Spark-first shape:
 
   1. one range Exchange on the deterministic shuffle key
      (md5(doc_id), doc_id) — md5 gives a corpus-shuffling order that is

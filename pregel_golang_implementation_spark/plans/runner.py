@@ -87,7 +87,6 @@ class PregelRunner:
         spark: SparkSession,
         spec: AlgorithmSpec,
         num_partitions: int | None = None,
-        lineage_break_every: int = 2,  # plan doubles per step; truncate every K
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 0,
         salt_degree_threshold: int | None = None,
@@ -106,7 +105,6 @@ class PregelRunner:
         # Large graphs hit the conf cap and behave exactly as before.
         self._conf_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.num_partitions = num_partitions
-        self.lineage_break_every = lineage_break_every
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
         # explicit skew splitting of hub inboxes (north_rule; SURVEY.md §4
@@ -121,6 +119,7 @@ class PregelRunner:
     # ----------------------------------------------------------------- setup
 
     EDGES_PER_PARTITION = 75_000  # adaptive floor: ≥75k edge rows per task
+    LINEAGE_BREAK_EVERY = 2  # plan doubles per step; truncate every K
     MIN_PARTITIONS = 8
     BROADCAST_FRONTIER_MAX = 100_000  # frontiers up to this size are broadcast
 
@@ -423,7 +422,7 @@ class PregelRunner:
                 prev_cached.unpersist()  # previous superstep's blocks — now dead
             prev_cached = new_state
             state = new_state
-            if self.lineage_break_every and step % self.lineage_break_every == 0:
+            if step % self.LINEAGE_BREAK_EVERY == 0:
                 # lineage break: every superstep references the previous
                 # state TWICE (frontier join + apply join), so the analyzed
                 # plan tree DOUBLES per step — Catalyst analysis cost grows
@@ -527,6 +526,8 @@ class PregelRunner:
         restart from the last completed superstep's values; in-flight
         messages are pure functions of state so re-scatter is free —
         Worker.go:641-654, SURVEY.md §4.4)."""
+        if self.checkpoint_dir is None:
+            raise ValueError("resume() needs a checkpoint_dir to resume from")
         found = self.latest_checkpoint(self.checkpoint_dir)
         if found is None:
             return self.run(edges, max_supersteps=max_supersteps)

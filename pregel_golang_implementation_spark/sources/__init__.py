@@ -1,6 +1,5 @@
 from pregel_golang_implementation_spark.sources.graphs import (
     edges_from_lineitem,
-    edges_from_orders,
     load_reference_graph,
     synthetic_edges,
 )
@@ -15,7 +14,6 @@ from pregel_golang_implementation_spark.sources.graphs import salt_hubs, unsalt_
 
 __all__ = [
     "edges_from_lineitem",
-    "edges_from_orders",
     "load_reference_graph",
     "synthetic_edges",
     "assign_vertex_ids",

@@ -153,16 +153,6 @@ def temporal_edges_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def edges_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer→order bipartite graph: src=o_custkey, dst=OFFSET+o_orderkey."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.select(
-        F.col("o_custkey").cast("long").alias("src"),
-        (F.lit(20_000_000) + F.col("o_orderkey")).cast("long").alias("dst"),
-        F.lit(1.0).alias("weight"),
-    ).dropDuplicates(["src", "dst"])
-
-
 # ----------------------------------------------- reference fixture loader
 
 def load_reference_graph(spark: SparkSession, json_path: str) -> DataFrame:

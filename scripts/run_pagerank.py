@@ -5,6 +5,9 @@
       [--algorithm pagerank|cc|sssp|lpa] [--tol 1e-6] [--source 1] \
       [--checkpoint-dir /path/ckpt] [--resume] [--max-supersteps 100]
 
+--resume continues a cc run from its last checkpoint in --checkpoint-dir;
+the other algorithms cannot resume.
+
 Build the zip:  (cd /root/repo && zip -qr pregel_spark.zip \
                  pregel_golang_implementation_spark)
 Works identically with plain `python` in local mode (pyspark pip install).
@@ -34,6 +37,10 @@ def main() -> None:
     p.add_argument("--resume", action="store_true")
     p.add_argument("--num-partitions", type=int, default=None)
     args = p.parse_args()
+    if args.resume and args.algorithm != "cc":
+        p.error("--resume is only supported with --algorithm cc")
+    if args.resume and not args.checkpoint_dir:
+        p.error("--resume needs --checkpoint-dir")
 
     spark = SparkSession.builder.appName(f"pregel-{args.algorithm}").getOrCreate()
     from pregel_golang_implementation_spark.operators import (
@@ -56,7 +63,7 @@ def main() -> None:
         kw["checkpoint_dir"] = args.checkpoint_dir
         kw["checkpoint_every"] = args.checkpoint_every
 
-    if args.resume and args.checkpoint_dir and args.algorithm == "cc":
+    if args.resume:
         runner = PregelRunner(spark, cc_spec(args.max_supersteps), **kw)
         res = runner.resume(symmetrize(edges))
     elif args.algorithm == "pagerank":

@@ -7,6 +7,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
+
+import pytest
 
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
@@ -70,3 +74,37 @@ def test_resume_ignores_uncommitted_snapshot(spark, tmp_path):
     os.makedirs(os.path.join(ck, "step=000003", "state"), exist_ok=True)
     step, _ = PregelRunner.latest_checkpoint(ck)
     assert step == 2
+
+
+def test_resume_without_checkpoint_dir_raises(spark):
+    runner = PregelRunner(spark, cc_spec())
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        runner.resume(_chain_edges(spark))
+
+
+SCRIPT = os.path.join(os.path.dirname(__file__), "..", "scripts", "run_pagerank.py")
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        ["--algorithm", "pagerank"],
+        ["--algorithm", "sssp", "--checkpoint-dir", "ck"],
+        ["--algorithm", "cc"],
+    ],
+    ids=["pagerank", "sssp-with-checkpoint-dir", "cc-without-checkpoint-dir"],
+)
+def test_script_rejects_unsupported_resume(tmp_path, extra):
+    """--resume only works for cc with a checkpoint dir; any other
+    combination must fail at argument parsing, before a SparkSession (and
+    before anything could overwrite the snapshots being resumed from).
+    JAVA_HOME points nowhere, so starting Spark would fail differently."""
+    env = dict(os.environ, JAVA_HOME=str(tmp_path / "no-java"))
+    proc = subprocess.run(
+        [sys.executable, SCRIPT, "--edges", str(tmp_path / "e"),
+         "--out", str(tmp_path / "o"), "--resume", *extra],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=120,
+    )
+    assert proc.returncode == 2
+    assert "resume" in proc.stderr
+    assert "Traceback" not in proc.stderr

@@ -105,78 +105,6 @@ def test_adaptive_partitioning_resolves_and_matches_explicit(spark):
     assert res_a.supersteps == res_e.supersteps
 
 
-def test_streaming_sessionize_out_of_order_cross_batch(spark, tmp_path):
-    """ADVICE r5: a within-watermark event EARLIER than the open
-    session's start must either extend the session backwards (start =
-    min) or close as its own earlier session — the old fold silently
-    merged it and kept the wrong start_ts."""
-    import datetime as _dt
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from pregel_golang_implementation_spark.streaming import streaming_sessionize
-
-    src = str(tmp_path / "sess_ooo")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType(), False),
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
-
-    def write(rows, mode):
-        spark.createDataFrame(
-            rows, "ts string, user_id long, value double"
-        ).select(F.col("ts").cast("timestamp"), "user_id", "value").write.mode(
-            mode
-        ).parquet(src)
-
-    def ep(s):
-        return int(
-            _dt.datetime.fromisoformat(s)
-            .replace(tzinfo=_dt.timezone.utc)
-            .timestamp()
-        )
-
-    write([("2026-01-01 01:00:00", 1, 4.0)], "overwrite")
-    q = streaming_sessionize(
-        spark, src, schema, gap_minutes=30, watermark="120 minutes",
-        query_name="sess_ooo_test",
-    )
-    q.processAllAvailable()
-    # batch 2, both within the generous watermark but EARLIER than the
-    # open session's start: 00:05 is > gap before it (own session,
-    # closed), 00:50 is within gap (extends the open session backwards)
-    write(
-        [("2026-01-01 00:05:00", 1, 5.0), ("2026-01-01 00:50:00", 1, 6.0)],
-        "append",
-    )
-    q.processAllAvailable()
-    got = [
-        tuple(r)
-        for r in spark.sql(
-            "SELECT * FROM sess_ooo_test ORDER BY start_ts"
-        ).collect()
-    ]
-    assert got == [(1, ep("2026-01-01 00:05:00"), ep("2026-01-01 00:05:00"), 1, 5.0)]
-    # flush the open session via the event-time timeout and check its
-    # back-extended start
-    write([("2026-01-01 09:00:00", 99, 9.0)], "append")
-    q.processAllAvailable()
-    write([("2026-01-01 10:00:00", 99, 9.0)], "append")
-    q.processAllAvailable()
-    q.stop()
-    got = [
-        tuple(r)
-        for r in spark.sql(
-            "SELECT * FROM sess_ooo_test ORDER BY start_ts"
-        ).collect()
-    ]
-    assert (1, ep("2026-01-01 00:50:00"), ep("2026-01-01 01:00:00"), 2, 10.0) in got
-
-
 def test_edge_layout_order_is_deterministic(spark):
     """r6 fix: the runner's cached edge layout is sorted within
     partitions, so its row order is a function of the data alone — not of

@@ -1,11 +1,10 @@
 """Round-2 hardening tests: cache hygiene, salting safety, scale-safe id
 assignment, candidate-predicate pushdown, bucket caps, end-to-end near-dup
-resolution, streaming compaction + late-data drop."""
+resolution."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
@@ -385,119 +384,3 @@ def test_incremental_cc_matches_full_recompute(spark):
     assert a[30] == 10.0  # new vertex joined the merged component
     # seeded run must not need more supersteps than the full recompute
     assert inc.supersteps <= full.supersteps
-
-
-# ----------------------------------------------------- streaming round 2
-
-def test_compact_edge_table_cross_batch_dedup(spark, tmp_path):
-    from pregel_golang_implementation_spark.streaming import compact_edge_table
-
-    table = str(tmp_path / "edge_table")
-    spark.createDataFrame(
-        [(1, 2, 3.0), (2, 3, 1.0)], "src long, dst long, weight double"
-    ).write.mode("append").parquet(table)
-    # second "batch" re-delivers (1,2) with a different weight
-    spark.createDataFrame(
-        [(1, 2, 1.0), (4, 5, 2.0)], "src long, dst long, weight double"
-    ).write.mode("append").parquet(table)
-    n = compact_edge_table(spark, table)
-    assert n == 3
-    rows = {(r["src"], r["dst"], r["weight"]) for r in spark.read.parquet(table).collect()}
-    assert rows == {(1, 2, 1.0), (2, 3, 1.0), (4, 5, 2.0)}
-
-
-def test_compact_edge_table_preserves_concurrent_append(spark, tmp_path, monkeypatch):
-    """Rows appended AFTER compaction snapshots its file list must survive
-    (the old directory-swap protocol destroyed them)."""
-    import os as os_mod
-
-    from pregel_golang_implementation_spark.streaming import ingest
-
-    table = str(tmp_path / "edge_table_cc")
-    spark.createDataFrame(
-        [(1, 2, 3.0), (1, 2, 1.0)], "src long, dst long, weight double"
-    ).write.mode("append").parquet(table)
-
-    real_listdir = os_mod.listdir
-    injected = {"done": False}
-
-    def listdir_with_append(path):
-        names = real_listdir(path)
-        if path == table and not injected["done"]:
-            injected["done"] = True
-            # a micro-batch lands right after the snapshot is taken
-            spark.createDataFrame(
-                [(9, 9, 9.0)], "src long, dst long, weight double"
-            ).write.mode("append").parquet(table)
-        return names
-
-    monkeypatch.setattr(ingest.os, "listdir", listdir_with_append)
-    n = ingest.compact_edge_table(spark, table)
-    monkeypatch.undo()
-    assert n == 1  # the snapshotted files compact to one (1,2) row
-    rows = {(r["src"], r["dst"], r["weight"]) for r in spark.read.parquet(table).collect()}
-    assert rows == {(1, 2, 1.0), (9, 9, 9.0)}  # concurrent append survived
-
-
-def test_streaming_dedup_emits_first_ever_only(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): per content-hash
-    state survives across micro-batches — a duplicate arriving in a LATER
-    batch is suppressed, not just within-batch."""
-    from pyspark.sql import types as T
-
-    from pregel_golang_implementation_spark.streaming import streaming_dedup_docs
-
-    src = str(tmp_path / "doc_stream")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("text", T.StringType(), False),
-        ]
-    )
-    spark.createDataFrame(
-        [(1, "alpha beta"), (0, "alpha beta"), (2, "gamma delta")],
-        "doc_id long, text string",
-    ).write.parquet(src + "/b1")
-    q = streaming_dedup_docs(spark, src + "/*", schema, query_name="sd_test")
-    q.processAllAvailable()
-    # batch 2: a cross-batch duplicate of "alpha beta" + one new doc
-    spark.createDataFrame(
-        [(7, "alpha beta"), (9, "epsilon zeta")], "doc_id long, text string"
-    ).write.parquet(src + "/b2")
-    q.processAllAvailable()
-    q.stop()
-    rows = {r["doc_id"]: r["text"] for r in spark.sql("SELECT * FROM sd_test").collect()}
-    # min id wins within the first batch; later duplicates never emitted
-    assert rows == {0: "alpha beta", 2: "gamma delta", 9: "epsilon zeta"}
-
-
-def test_windowed_stats_drops_late_rows(spark, tmp_path):
-    """update mode + watermark: rows later than the watermark are dropped
-    (the late-data contract the docstring promises)."""
-    from pyspark.sql import types as T
-
-    from pregel_golang_implementation_spark.streaming import windowed_event_stats
-
-    src = str(tmp_path / "late_events")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType(), False),
-            T.StructField("event_type", T.StringType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
-
-    def write_batch(rows, name):
-        spark.createDataFrame(rows, "ts string, event_type string, value double").select(
-            F.col("ts").cast("timestamp"), "event_type", "value"
-        ).write.parquet(f"{src}/{name}")
-
-    write_batch([("2026-01-01 00:30:00", "click", 1.0)], "b1")
-    q = windowed_event_stats(spark, src + "/*", schema, query_name="late_test")
-    q.processAllAvailable()  # watermark advances to 00:20:00
-    write_batch([("2026-01-01 00:05:00", "late", 9.0)], "b2")  # beyond watermark
-    q.processAllAvailable()
-    q.stop()
-    types = {r["event_type"] for r in spark.sql("SELECT * FROM late_test").collect()}
-    assert "click" in types
-    assert "late" not in types  # dropped, never aggregated

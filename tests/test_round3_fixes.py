@@ -1,5 +1,5 @@
-"""Round-3 items: benchmark decontamination, repetition quality signals,
-default-safe near-dup caps, weighted/personalized PageRank validation.
+"""Round-3 items: benchmark decontamination, default-safe near-dup caps,
+weighted/personalized PageRank validation.
 """
 
 from __future__ import annotations
@@ -72,29 +72,6 @@ def test_ngram_containment_plan_broadcasts_benchmark(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_quality_repetition_signals(spark):
-    """Gopher-style repetition gates: a degenerate repetitive document
-    scores quality 0 via top_bigram_frac; duplicated lines score via
-    dup_line_frac; a normal document passes all gates."""
-    from pregel_golang_implementation_spark.operators.textstats import quality_score
-
-    normal = "the quick brown fox jumps over a lazy dog near the old river bank today"
-    spammy = " ".join(["buy now"] * 30)  # one bigram dominates
-    repeated_lines = "\n".join(["same boilerplate line here"] * 10 + ["unique closing line"])
-    docs = _df(spark, [(1, normal), (2, spammy), (3, repeated_lines)])
-    got = {r["doc_id"]: r.asDict() for r in quality_score(docs).collect()}
-
-    assert got[1]["quality"] == 1
-    assert got[1]["dup_line_frac"] == 0.0
-    assert got[1]["top_bigram_frac"] <= 0.2
-
-    assert got[2]["quality"] == 0
-    assert got[2]["top_bigram_frac"] > 0.5  # "now buy" + "buy now" split the mass
-
-    assert got[3]["quality"] == 0
-    assert got[3]["dup_line_frac"] == pytest.approx(1 - 2 / 11)
-
-
 def test_ngram_containment_threshold(spark):
     benchmarks = _df(spark, [(0, "a b c d e f")])
     corpus = _df(spark, [(100, "a b c zzz"), (101, "a b c d e f")])
@@ -140,49 +117,6 @@ def test_ppr_rejects_missing_source(spark):
     )
     with pytest.raises(ValueError, match="not vertices"):
         personalized_pagerank(spark, edges, source_ids=[1, 999])
-
-
-def test_streaming_dedup_parquet_sink_across_restart(spark, tmp_path):
-    """Production sink: first-ever docs land in parquet (per-epoch
-    overwrite), and the dedup GroupState survives a full query RESTART via
-    the checkpoint — a cross-batch duplicate after restart is suppressed."""
-    from pyspark.sql import types as T
-
-    from pregel_golang_implementation_spark.streaming import streaming_dedup_docs
-
-    src = str(tmp_path / "doc_stream")
-    out_dir = str(tmp_path / "deduped")
-    ck = str(tmp_path / "dedup_ck")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("text", T.StringType(), False),
-        ]
-    )
-    spark.createDataFrame(
-        [(1, "alpha beta"), (0, "alpha beta"), (2, "gamma delta")],
-        "doc_id long, text string",
-    ).write.parquet(src + "/b1")
-    q = streaming_dedup_docs(
-        spark, src + "/*", schema, sink="parquet", output_dir=out_dir, checkpoint_dir=ck
-    )
-    q.processAllAvailable()
-    q.stop()  # full restart below — state must come back from the checkpoint
-
-    spark.createDataFrame(
-        [(7, "alpha beta"), (9, "epsilon zeta")], "doc_id long, text string"
-    ).write.parquet(src + "/b2")
-    q2 = streaming_dedup_docs(
-        spark, src + "/*", schema, sink="parquet", output_dir=out_dir, checkpoint_dir=ck
-    )
-    q2.processAllAvailable()
-    q2.stop()
-
-    got = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(out_dir).select("doc_id", "text").collect()
-    }
-    assert got == {0: "alpha beta", 2: "gamma delta", 9: "epsilon zeta"}
 
 
 def test_distributed_topk_matches_window_semantics(spark):
@@ -304,84 +238,6 @@ def test_knn_graph_properties(spark):
         assert sims == sorted(sims, reverse=True)
     bucket = {r["vec_id"]: r["bucket"] for r in srp_buckets(emb, bits=3).collect()}
     assert all(bucket[r["vec_id"]] == bucket[r["neighbor_id"]] for r in rows)
-
-
-def test_audio_decode_real_wav(spark):
-    """PCM WAV decodes FOR REAL (stdlib wave + numpy): correct rate /
-    duration / rms and energy concentrated in the right FFT band; a
-    non-WAV payload degrades per-payload to the stub with decoded=false."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    from pregel_golang_implementation_spark.operators.multimodal import (
-        decode_audio_features,
-    )
-
-    rate, secs, freq, amp = 8000, 1.0, 440.0, 0.5
-    t = np.arange(int(rate * secs)) / rate
-    pcm = (amp * np.sin(2 * np.pi * freq * t) * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(pcm.tobytes())
-    media = spark.createDataFrame(
-        [(1, bytearray(buf.getvalue())), (2, bytearray(b"not a wav at all"))],
-        "media_id long, payload binary",
-    )
-    got = {r["media_id"]: r.asDict() for r in decode_audio_features(media).collect()}
-
-    wav = got[1]
-    assert wav["decoded"] is True
-    assert wav["sample_rate"] == rate and wav["n_channels"] == 1
-    assert wav["duration_secs"] == pytest.approx(secs)
-    assert wav["rms"] == pytest.approx(amp / math.sqrt(2), rel=1e-3)
-    assert wav["zero_crossing_rate"] == pytest.approx(2 * freq / rate, rel=0.01)
-    # 440 Hz lands in band 0 of 8 bands over [0, 4000] Hz
-    assert wav["features"][0] > 0.9
-
-    junk = got[2]
-    assert junk["decoded"] is False and junk["sample_rate"] == 0
-
-
-def test_netpbm_image_decode_real(spark):
-    """Without Pillow, binary netpbm still decodes FOR REAL: a P6 image
-    that is half black / half white yields a histogram with mass only in
-    the first and last bins; P5 grayscale likewise; garbage falls back
-    to the byte stub."""
-    import numpy as np
-
-    from pregel_golang_implementation_spark.operators.multimodal import (
-        _fake_decode_image,
-        _nonpil_decode_image,
-    )
-
-    w, h = 4, 2
-    raster = bytes([0, 0, 0] * 4 + [255, 255, 255] * 4)
-    ppm = b"P6\n# a comment\n4 2\n255\n" + raster
-    feats = _nonpil_decode_image(ppm)
-    assert feats[0] == pytest.approx(0.5) and feats[-1] == pytest.approx(0.5)
-    assert sum(feats[1:-1]) == 0.0
-
-    pgm = b"P5\n4 2\n255\n" + bytes([10] * 4 + [250] * 4)
-    g = _nonpil_decode_image(pgm)
-    assert g[0] == pytest.approx(0.5) and g[-1] == pytest.approx(0.5)
-
-    junk = b"JFIF not actually parseable"
-    assert np.allclose(_nonpil_decode_image(junk), _fake_decode_image(junk))
-
-    # and through the Spark operator end-to-end
-    from pregel_golang_implementation_spark.operators.multimodal import decode_features
-
-    media = spark.createDataFrame(
-        [(1, bytearray(ppm), "image")], "media_id long, payload binary, media_type string"
-    )
-    row = decode_features(media, use_pil=False).first()
-    assert row["features"][0] == pytest.approx(0.5)
 
 
 def test_near_dup_default_cap_reports_dropped(spark, caplog):

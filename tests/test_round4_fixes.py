@@ -195,70 +195,6 @@ def test_degree_ordered_triangles_bound_hub_wedges(spark):
     assert pv[leaves[0]] == 1 and pv[leaves[1]] == 2
 
 
-# ------------------------------------------- optional codec probe paths
-
-
-def test_codec_probe_paths(spark):
-    """Auto-upgrade probes for compressed audio (soundfile) and video
-    (PyAV): when the library is absent — this container — the operators
-    must (a) keep working via the deterministic stubs with decoded=false
-    and (b) FAIL LOUDLY if the codec path is forced, never silently mix
-    stub and real features in one column.  Where a codec lib IS present
-    the same assertions flip to the real path."""
-    from pregel_golang_implementation_spark.operators.multimodal import (
-        HAS_PYAV,
-        HAS_SOUNDFILE,
-        attach_media,
-        decode_audio_features,
-        frame_sample,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "not audio at all", "src0")], "doc_id long, text string, source string"
-    )
-    media = attach_media(docs)
-    row = decode_audio_features(media).collect()[0]
-    # junk payload: stub either way (soundfile also can't parse prose)
-    assert row["decoded"] is False
-    fr = frame_sample(media, every_n_bytes=8, max_frames=3).collect()
-    assert fr and all(r["decoded"] is (False if not HAS_PYAV else r["decoded"]) for r in fr)
-    if not HAS_SOUNDFILE:
-        with pytest.raises(Exception, match="soundfile"):
-            decode_audio_features(media, use_soundfile=True).collect()
-    if not HAS_PYAV:
-        with pytest.raises(Exception, match="av is not importable"):
-            frame_sample(media, use_av=True).collect()
-
-
-# ------------------------------------------- transactional table format
-
-
-def test_delta_compaction_probe(spark, tmp_path):
-    """Without delta-spark (this image) the delta path must refuse loudly
-    and the default file-protocol path must keep working; with it, the
-    same compaction runs as one transactional overwrite."""
-    from pregel_golang_implementation_spark.streaming.ingest import (
-        HAS_DELTA,
-        compact_edge_table,
-    )
-
-    tdir = str(tmp_path / "edges")
-    spark.createDataFrame(
-        [(1, 2, 1.0), (1, 2, 3.0), (2, 3, 1.0)], "src long, dst long, weight double"
-    ).write.mode("overwrite").parquet(tdir)
-    if not HAS_DELTA:
-        with pytest.raises(RuntimeError, match="delta-spark"):
-            compact_edge_table(spark, tdir, table_format="delta")
-    fmt = "delta" if HAS_DELTA else "parquet"
-    n = compact_edge_table(spark, tdir, table_format=fmt)
-    assert n == 2  # (1,2) collapsed to min weight, (2,3) kept
-    rows = {
-        (r["src"], r["dst"]): r["weight"]
-        for r in spark.read.parquet(tdir).collect()
-    }
-    assert rows[(1, 2)] == 1.0
-
-
 # --------------------------------------------------- simhash near-dups
 
 

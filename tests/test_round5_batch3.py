@@ -1,17 +1,14 @@
-"""Round-5 batch 3: greedy coloring (iterated MIS), exact distributed
-quantiles, deterministic random walks."""
+"""Round-5 batch 3: greedy coloring (iterated MIS), earliest-arrival
+temporal reachability, deterministic random walks."""
 
 from __future__ import annotations
 
 import hashlib
 import random
 
-import numpy as np
-from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.coloring import greedy_coloring
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
-from pregel_golang_implementation_spark.operators.quantiles import exact_quantiles
 from pregel_golang_implementation_spark.operators.temporal import earliest_arrival
 from pregel_golang_implementation_spark.operators.walks import random_walks
 
@@ -81,35 +78,6 @@ def test_coloring_uncolored_surface_as_minus_one(spark):
     out = greedy_coloring(spark, und, colors=1, inner_rounds=3)
     colors = sorted(r["color"] for r in out.collect())
     assert colors == [-1, -1, 0]
-
-
-# -------------------------------------------------------------- quantiles
-
-def test_exact_quantiles_match_numpy_type7(spark):
-    rng = np.random.default_rng(7)
-    data = rng.normal(100.0, 15.0, size=2000).tolist()
-    df = spark.createDataFrame([(v,) for v in data], "v double")
-    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
-    got = {r["quantile"]: r["value"] for r in exact_quantiles(df, "v", qs).collect()}
-    want = np.quantile(np.array(data), qs)  # numpy default = type-7 linear
-    for q, w in zip(qs, want):
-        assert abs(got[q] - round(float(w), 6)) < 1e-9, q
-
-
-def test_exact_quantiles_duplicates_nulls_and_sparse_partitions(spark):
-    rows = [(1.0,), (1.0,), (1.0,), (2.0,), (None,), (3.0,)]
-    df = spark.createDataFrame(rows, "v double")
-    got = {
-        r["quantile"]: r["value"]
-        for r in exact_quantiles(df, "v", [0.5, 1.0], num_ranges=32).collect()
-    }
-    # 5 non-null values [1,1,1,2,3]: median = 1.0, max = 3.0
-    assert got[0.5] == 1.0 and got[1.0] == 3.0
-
-
-def test_exact_quantiles_empty_input(spark):
-    df = spark.createDataFrame([], "v double")
-    assert exact_quantiles(df, "v", [0.5]).count() == 0
 
 
 # -------------------------------------------------------------- temporal

@@ -1,21 +1,16 @@
-"""Round-5 batch 4: SCC (trim + FW/BW peel), Lloyd k-means, ROLLUP/CUBE
-aggregates, Adamic–Adar link prediction."""
+"""Round-5 batch 4: SCC (trim + FW/BW peel), Lloyd k-means, Adamic–Adar
+link prediction."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
 from pregel_golang_implementation_spark.operators.kmeans import kmeans_assign
 from pregel_golang_implementation_spark.operators.link_prediction import (
     adamic_adar_topk,
-)
-from pregel_golang_implementation_spark.operators.relational import (
-    docs_cube,
-    revenue_rollup,
 )
 from pregel_golang_implementation_spark.operators.scc import scc_fwbw
 
@@ -124,41 +119,6 @@ def test_kmeans_missing_seed_raises(spark):
         kmeans_assign(df, k=3, iters=1, dim=2)
 
 
-# ------------------------------------------------------------ rollup/cube
-
-def test_revenue_rollup_levels(spark):
-    li = spark.createDataFrame(
-        [
-            ("A", "F", 2.0, 100.0, 0.1),
-            ("A", "O", 1.0, 50.0, 0.0),
-            ("R", "F", 3.0, 10.0, 0.5),
-        ],
-        "l_returnflag string, l_linestatus string, l_quantity double, "
-        "l_extendedprice double, l_discount double",
-    )
-    rows = {
-        (r["return_flag"], r["line_status"]): r for r in revenue_rollup(li).collect()
-    }
-    assert rows[("A", "F")]["revenue"] == 90.0
-    assert rows[("A", "ALL")]["n_items"] == 2
-    assert rows[("A", "ALL")]["revenue"] == 140.0
-    assert rows[("ALL", "ALL")]["n_items"] == 3
-    assert rows[("ALL", "ALL")]["sum_qty"] == 6.0
-    assert ("ALL", "F") not in rows  # rollup, not cube
-
-
-def test_docs_cube_has_all_four_levels(spark):
-    docs = spark.createDataFrame(
-        [(1, "web", "en", 10), (2, "web", "de", 20), (3, "book", "en", 5)],
-        "doc_id long, source string, lang string, n_chars long",
-    )
-    rows = {(r["source"], r["lang"]): r["n_docs"] for r in docs_cube(docs).collect()}
-    assert rows[("web", "en")] == 1
-    assert rows[("web", "ALL")] == 2
-    assert rows[("ALL", "en")] == 2
-    assert rows[("ALL", "ALL")] == 3
-
-
 # ------------------------------------------------------------ adamic-adar
 
 def test_adamic_adar_weights_rare_middles_higher(spark):
@@ -177,28 +137,3 @@ def test_adamic_adar_excludes_existing_edges(spark):
     pairs = [(1, 2), (1, 3), (2, 3)]  # triangle: every pair adjacent
     und = symmetrize(_edges(spark, pairs))
     assert adamic_adar_topk(und, k=3, max_middle_degree=None).count() == 0
-
-
-# ----------------------------------------------------------- char entropy
-
-def test_char_entropy_known_values(spark):
-    import math
-
-    from pregel_golang_implementation_spark.operators.textstats import (
-        char_entropy,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aaaa"), (2, "abab"), (3, "abcd"), (4, "")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["entropy_bits"] for r in char_entropy(docs).collect()}
-    assert got[1] == 0.0  # single symbol: zero entropy
-    assert got[2] == 1.0  # two symbols, uniform: 1 bit
-    assert got[3] == 2.0  # four symbols, uniform: 2 bits
-    assert 4 not in got  # empty doc excluded
-    # a skewed distribution lands strictly between the uniform bounds
-    docs2 = spark.createDataFrame([(9, "aab")], "doc_id long, text string")
-    e = char_entropy(docs2).first()["entropy_bits"]
-    expect = -(2 / 3) * math.log2(2 / 3) - (1 / 3) * math.log2(1 / 3)
-    assert abs(e - round(expect, 6)) < 1e-9

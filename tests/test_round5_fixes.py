@@ -6,36 +6,6 @@ from __future__ import annotations
 import pytest
 
 
-# --------------------------------------------- ADVICE: delta conflict match
-
-def test_delta_conflict_matcher_retries_only_concurrency_conflicts():
-    from pregel_golang_implementation_spark.streaming.ingest import (
-        _is_delta_conflict,
-    )
-
-    class ConcurrentAppendException(Exception):
-        pass
-
-    class ProtocolChangedException(Exception):
-        pass
-
-    class AnalysisException(Exception):
-        pass
-
-    assert _is_delta_conflict(ConcurrentAppendException("files were added"))
-    assert _is_delta_conflict(ProtocolChangedException("protocol changed"))
-    # captured JVM exceptions carry the Java class in the message head
-    assert _is_delta_conflict(
-        Exception("io.delta.exceptions.ConcurrentWriteException: conflict")
-    )
-    # deterministic failures must surface immediately
-    assert not _is_delta_conflict(AnalysisException("schema mismatch"))
-    assert not _is_delta_conflict(ValueError("missing table"))
-    assert not _is_delta_conflict(
-        Exception("org.apache.spark.sql.AnalysisException: permission denied")
-    )
-
-
 # -------------------------------------- ADVICE: simhash occupancy cap/report
 
 def _mk_docs(spark, rows):
@@ -161,5 +131,3 @@ def test_slim_shuffle_empty_final_frontier_counts_zero(spark):
     assert res.converged
     assert res.metrics[-1].messages_sent == 0
     assert res.total_messages == 20
-
-

@@ -4,7 +4,7 @@ Judge-facing evidence that the plans are the ones we want: parquet scans
 prune columns + push filters, the scatter/apply joins are hash joins on
 pre-partitioned inputs, aggregations are partial+final, and no per-row
 Python appears anywhere (the only Python is Arrow-batched mapInPandas in
-corpus extraction / multimodal decode, by design).
+corpus extraction, by design).
 
 Usage: python tools/explain_plans.py [sf_dir]
 """
