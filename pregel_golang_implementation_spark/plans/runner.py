@@ -19,13 +19,17 @@ Scale design (SURVEY.md §4):
     needs no extra shuffle (P1 co-partitioning).
   - frontier/delta execution: only changed vertices scatter (P5).
   - small frontiers are broadcast to skip the scatter-join shuffle (P11).
-  - lineage is broken every few supersteps via localCheckpoint, or the
-    iterative plan grows without bound (P10).
-  - AQE handles skew-join splitting; hub salting lives in sources/graphs.py.
+  - every barrier is one eager localCheckpoint, so lineage is cut every
+    superstep and the iterative plan never grows (P10).
+  - the loop runs with AQE off: partition counts are explicit, so a
+    barrier stays one Spark job and its checkpoint keeps the hash(id)
+    partitioning.  Inbox skew is absorbed by map-side partial aggregation
+    and, opt-in, by hub salting (sources/graphs.py).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -33,7 +37,7 @@ import time
 from dataclasses import dataclass, field
 from functools import partial
 
-from py4j.protocol import Py4JJavaError
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,7 +123,6 @@ class PregelRunner:
     # ----------------------------------------------------------------- setup
 
     EDGES_PER_PARTITION = 75_000  # adaptive floor: ≥75k edge rows per task
-    LINEAGE_BREAK_EVERY = 2  # plan doubles per step; truncate every K
     MIN_PARTITIONS = 8
     BROADCAST_FRONTIER_MAX = 100_000  # frontiers up to this size are broadcast
 
@@ -158,32 +161,26 @@ class PregelRunner:
         # One per-partition sort, once per run, amortized over every
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
-        if self.num_partitions is None:
+        staged = None
+        if self.num_partitions is None and self._conf_partitions <= self.MIN_PARTITIONS:
+            # the adaptive formula below can only return conf here
+            self.num_partitions = self._conf_partitions
+        elif self.num_partitions is None:
             # size the layout to the data (scale-adaptive note in
             # __init__) WITHOUT running the edge lineage twice: cache the
             # un-laid-out edges, count them to pick the partition count,
             # then shuffle FROM the cache into the final layout and drop
             # the staging cache — the lineage executes exactly once.
-            e0 = e.persist()
-            n_edges = e0.count()
+            e = staged = e.persist()
+            n_edges = staged.count()
             self.num_partitions = min(
                 self._conf_partitions,
                 max(self.MIN_PARTITIONS, math.ceil(n_edges / self.EDGES_PER_PARTITION)),
             )
-            e = (
-                e0.repartition(self.num_partitions, "src")
-                .sortWithinPartitions(*order)
-                .persist()
-            )
-            e.count()
-            e0.unpersist()
-        else:
-            e = (
-                e.repartition(self.num_partitions, "src")
-                .sortWithinPartitions(*order)
-                .persist()
-            )
-            e.count()  # materialize once; every superstep reuses this layout
+        e = e.repartition(self.num_partitions, "src").sortWithinPartitions(*order).persist()
+        e.count()  # materialize once; every superstep reuses this layout
+        if staged is not None:
+            staged.unpersist()
         self._edges_cached = e  # tracked so run() can unpersist (no leak)
         return e
 
@@ -199,29 +196,32 @@ class PregelRunner:
         state = self.spec.init_fn(vertices)
         if "active" not in state.columns:
             state = state.withColumn("active", F.lit(True))
-        cols = ["id", "value", "active", *self.spec.static_cols]
-        state = state.select(
-            F.col("id").cast("long"),
-            F.col("value").cast("double"),
-            F.col("active").cast("boolean"),
-            *[F.col(c) for c in self.spec.static_cols],
-        ).select(*cols)
-        # persist, NOT eager localCheckpoint (r6): a checkpoint erases the
-        # hash(id) partitioning metadata, so superstep 1's state⋈messages
-        # joins re-shuffled the state it had JUST laid out — the persist
-        # keeps the partitioning visible exactly like every later
-        # superstep's state cache.  Materialization rides the next action
-        # (collect_globals or superstep 1's barrier); the loop
-        # releases it as the zeroth `prev_cached`.
-        return state.repartition(self.num_partitions, "id").persist()
+        # cast only what needs it: a no-op cast leaves an alias the
+        # optimizer drops, and the barrier's checkpoint then records its
+        # hash(id) partitioning under an id the next joins do not match
+        types = dict(state.dtypes)
+        typed = [
+            F.col(c) if types[c] == t else F.col(c).cast(t).alias(c)
+            for c, t in (("id", "bigint"), ("value", "double"), ("active", "boolean"))
+        ]
+        return state.select(*typed, *self.spec.static_cols)
 
-    def _collect_globals(self, state: DataFrame) -> dict:
-        if not self.spec.global_aggs:
-            return {}
-        row = state.agg(
-            *[c.alias(k) for k, c in self.spec.global_aggs.items()]
-        ).first()
-        return row.asDict()
+    @staticmethod
+    def _barrier(frame: DataFrame, obs: Observation, aggs: list, cols: list) -> DataFrame:
+        """The loop's one materialization: ``aggs`` are observed on
+        ``frame`` while an eager localCheckpoint stores its ``cols`` — one
+        Spark job, the BSP barrier.  With AQE off the checkpoint keeps the
+        frame's hash(id) partitioning, so the next superstep's joins do not
+        re-shuffle state, and it cuts the lineage every step."""
+        return frame.observe(obs, *aggs).select(*cols).localCheckpoint(eager=True)
+
+    def _release(self, barrier: DataFrame) -> None:
+        """Drop a dead barrier's blocks now rather than at the JVM's next
+        GC; a barrier's logical plan is the LogicalRDD over its checkpoint.
+        (``RDD.unpersist`` would do the same but logs a lost-lineage
+        warning for every checkpointed RDD, i.e. once per superstep.)"""
+        rdd = barrier._jdf.queryExecution().logical().rdd()
+        self.spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
     # ------------------------------------------------------------- superstep
 
@@ -304,26 +304,25 @@ class PregelRunner:
         )
         return out.drop("_msg")
 
-    @staticmethod
-    def _messages_sent(msg_obs: Observation) -> int:
-        try:
-            return int(msg_obs.get["_msgs_sent"] or 0)
-        except Py4JJavaError as exc:
-            # AQE empty-relation propagation: when the message frame is
-            # provably empty (e.g. the final frontier has no out-edges),
-            # the apply join's right subtree is folded away in the FINAL
-            # plan and its CollectMetrics never reaches observedMetrics —
-            # getRow then hands back a schema-less row whose toPyRow
-            # conversion fails its arity assert.  Pruning fires only for
-            # empty subtrees, and combined is empty iff msgs is empty, so
-            # the true count is exactly 0.  ONLY that signature is
-            # swallowed (ADVICE r5): any other metrics-retrieval failure
-            # is a real error, not a real zero-message superstep.
-            if "toPyRow" not in str(exc):
-                raise
-            return 0
-
     # ------------------------------------------------------------------ run
+
+    @contextlib.contextmanager
+    def _loop_conf(self):
+        """Run the loop with AQE off (so a barrier is one job and keeps its
+        partitioning) and restore the caller's settings on the way out.
+        ``run`` also pins the shuffle partitions to the resolved layout,
+        so the message combine lands co-partitioned with state.  The
+        settings are session-wide: another thread's job on the same
+        session during a run sees them too."""
+        conf = self.spark.conf
+        keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+        saved = {k: conf.get(k) for k in keys}
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            yield
+        finally:
+            for k, v in saved.items():
+                conf.set(k, v)
 
     def run(
         self,
@@ -342,31 +341,33 @@ class PregelRunner:
             max_supersteps = spec.max_supersteps
         elif max_supersteps < 0:
             raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
-        if state is None and vertices is None and self._salting:
-            # derive vertices from the UNSALTED edges — salting (below)
-            # rewrites hub dst ids into a reserved negative key space that
-            # must never become vertex state
-            vertices = self.vertices_from_edges(
-                edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-            )
-        edges = self._prepare_edges(edges)
-        if state is None and vertices is None:
-            # unsalted: derive vertices from the PREPARED (cached,
-            # partitioned) edge table instead of the raw input — the
-            # distinct reads the edge cache rather than re-running the
-            # source scan lineage a second time (r6)
-            vertices = self.vertices_from_edges(edges)
-        try:
-            return self._run_loop(
-                edges, vertices, state, start_superstep, max_supersteps
-            )
-        finally:
-            # a long-lived session runs many jobs through many runners —
-            # leaked edge caches accumulate dead blocks and evict useful
-            # ones. The result state is localCheckpointed before return, so
-            # it never depends on these blocks.
-            edges.unpersist()
-            self._edges_cached = None
+        with self._loop_conf():
+            if state is None and vertices is None and self._salting:
+                # derive vertices from the UNSALTED edges — salting (below)
+                # rewrites hub dst ids into a reserved negative key space
+                # that must never become vertex state
+                vertices = self.vertices_from_edges(
+                    edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+                )
+            edges = self._prepare_edges(edges)
+            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
+            if state is None and vertices is None:
+                # unsalted: derive vertices from the PREPARED (cached,
+                # partitioned) edge table instead of the raw input — the
+                # distinct reads the edge cache rather than re-running the
+                # source scan lineage a second time (r6)
+                vertices = self.vertices_from_edges(edges)
+            try:
+                return self._run_loop(
+                    edges, vertices, state, start_superstep, max_supersteps
+                )
+            finally:
+                # a long-lived session runs many jobs through many runners
+                # — leaked edge caches accumulate dead blocks and evict
+                # useful ones.  The result state is a checkpoint of its
+                # own, so it never depends on these blocks.
+                edges.unpersist()
+                self._edges_cached = None
 
     def _run_loop(
         self,
@@ -377,69 +378,51 @@ class PregelRunner:
         max_steps: int,
     ) -> PregelResult:
         spec = self.spec
-        prev_cached = None  # the previous superstep's persisted new_state
+        global_cols = [c.alias(k) for k, c in spec.global_aggs.items()]
         if state is None:
             state = self._init_state(vertices)
-            # the init persist is the zeroth superstep cache: released
-            # after superstep 1 materializes, like every later new_state
-            prev_cached = state
-        g = self._collect_globals(state)
+        # the initial (or resumed, or caller-supplied) state goes through
+        # the same barrier as every superstep; its observation yields the
+        # globals that superstep 1 applies
+        obs = Observation(f"superstep_{start_superstep}")
+        state = self._barrier(
+            state.repartition(self.num_partitions, "id"), obs,
+            [F.count(F.lit(1)).alias("_n"), *global_cols], state.columns,
+        )
+        g = {k: obs.get[k] for k in spec.global_aggs}
         prev_active = -1  # unknown → don't broadcast on step 1
 
         metrics: list[SuperstepMetrics] = []
         step = start_superstep
         converged = False
         last_ckpt_step = None
-        # persist keeps the hash(id) output partitioning visible to the
-        # planner (localCheckpoint would erase it and force a re-shuffle
-        # of state on every join). Metrics + global aggregates ride on
-        # the SAME materializing action via the Observation API — one
-        # barrier per superstep, no second pass over state (the
-        # reference needs a whole master round-trip for this,
-        # Master.go:958-967).
+        # metrics + global aggregates ride on the barrier via the
+        # Observation API — no second pass over state (the reference
+        # needs a whole master round-trip for this, Master.go:958-967)
         agg_cols = [
             F.sum(F.col("active").cast("long")).alias("_active"),
             F.max("_delta").alias("_maxdelta"),
             F.count(F.lit(1)).alias("_n"),
-        ] + [c.alias(k) for k, c in spec.global_aggs.items()]
+            *global_cols,
+        ]
+        state_cols = ["id", *spec.static_cols, "value", "active"]
         while step - start_superstep < max_steps:
             step += 1
             t0 = time.monotonic()
             obs = Observation(f"superstep_{step}")
             msg_obs = Observation(f"msgs_{step}")
             full = self._one_superstep(state, edges, g, prev_active, msg_obs)
-            new_state = (
-                full.observe(obs, *agg_cols)
-                .select("id", *spec.static_cols, "value", "active")
-                .persist()
-            )
-            new_state.count()  # the BSP barrier action
+            new_state = self._barrier(full, obs, agg_cols, state_cols)
             wall = time.monotonic() - t0
             row = obs.get
             g = {k: row[k] for k in spec.global_aggs}
-
-            if prev_cached is not None:
-                prev_cached.unpersist()  # previous superstep's blocks — now dead
-            prev_cached = new_state
+            self._release(state)  # the previous barrier's blocks — now dead
             state = new_state
-            if step % self.LINEAGE_BREAK_EVERY == 0:
-                # lineage break: every superstep references the previous
-                # state TWICE (frontier join + apply join), so the analyzed
-                # plan tree DOUBLES per step — Catalyst analysis cost grows
-                # exponentially past ~6 unbroken steps even though caches
-                # stop recomputation. Truncate every few steps; the eager
-                # localCheckpoint copies from the still-persisted blocks
-                # (cheap) at the cost of re-shuffling state once on the next
-                # join (its partitioning metadata is erased). Measured
-                # optimum ≈ every 2 steps (SURVEY.md §4 P10).
-                state = state.localCheckpoint(eager=True)
-                prev_cached.unpersist()
-                prev_cached = None
 
             m = SuperstepMetrics(
                 superstep=step,
                 active_vertices=int(row["_active"] or 0),
-                messages_sent=self._messages_sent(msg_obs),
+                messages_sent=int(msg_obs.get["_msgs_sent"] or 0),
                 max_delta=float(row["_maxdelta"] or 0.0),
                 num_vertices=int(row["_n"]),
                 wall_secs=wall,
@@ -462,13 +445,6 @@ class PregelRunner:
         # leaves the committed snapshot and its history as they were
         if self.checkpoint_dir and metrics and last_ckpt_step != step:
             self._write_checkpoint(state, step, metrics)
-        if prev_cached is not None:
-            # detach the result from the loop's cached blocks (and from the
-            # edge cache, unpersisted by run()'s finally): the eager copy is
-            # one pass over the final state, after which nothing the caller
-            # holds references runner-internal storage.
-            state = state.localCheckpoint(eager=True)
-            prev_cached.unpersist()
         return PregelResult(
             state=state, supersteps=step - start_superstep, converged=converged,
             metrics=metrics,
@@ -485,13 +461,17 @@ class PregelRunner:
         atomic marker (replaces the Start/Exit write-ahead marker log,
         Master.go:969-1012)."""
         path = os.path.join(self.checkpoint_dir, f"step={step:06d}")
-        state.write.mode("overwrite").parquet(os.path.join(path, "state"))
-        lineage = [
-            {"partition": int(r["pid"]), "rows": int(r["rows"])}
-            for r in state.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
+        state_dir = os.path.join(path, "state")
+        state.write.mode("overwrite").parquet(state_dir)
+        # rows per state partition, from the committed files' footers (no
+        # second Spark job): each task writes part-<partition>-*.parquet
+        rows: dict[int, int] = {}
+        for name in os.listdir(state_dir):
+            if name.startswith("part-") and name.endswith(".parquet"):
+                pid = int(name.split("-")[1])
+                n = pq.read_metadata(os.path.join(state_dir, name)).num_rows
+                rows[pid] = rows.get(pid, 0) + n
+        lineage = [{"partition": p, "rows": n} for p, n in sorted(rows.items()) if n]
         manifest = {
             "algorithm": self.spec.name,
             "params": self.spec.params,
@@ -552,12 +532,10 @@ class PregelRunner:
             # adopt the snapshot's layout — the adaptive sizing already
             # ran (and was recorded) when the checkpoint was written
             self.num_partitions = int(manifest["num_partitions"])
+        # run()'s first barrier lays the snapshot out by hash(id), inside
+        # the loop's AQE-off scope
         path = os.path.join(self.checkpoint_dir, f"step={step:06d}", "state")
-        state = (
-            self.spark.read.parquet(path)
-            .repartition(self.num_partitions, "id")
-            .localCheckpoint(eager=True)
-        )
         return self.run(
-            edges, state=state, start_superstep=step, max_supersteps=max_supersteps
+            edges, state=self.spark.read.parquet(path), start_superstep=step,
+            max_supersteps=max_supersteps,
         )

@@ -28,8 +28,11 @@ def get_spark(
     partitions default to the core count — iterative supersteps re-shuffle
     the same state every step, so 200 tiny partitions (Spark's default)
     would add per-step scheduler overhead with zero parallelism benefit.
-    AQE stays on for runtime coalescing and skew-join splitting (the
-    reference has no skew handling at all — SURVEY.md §4 P7).
+    AQE stays on for runtime coalescing and skew-join splitting everywhere
+    except the Pregel loop: ``PregelRunner.run`` turns it off for its own
+    duration (explicit partition counts, one job per superstep) and
+    restores the caller's setting.  The reference has no skew handling at
+    all (SURVEY.md §4 P7).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4

@@ -11,6 +11,7 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
@@ -46,7 +47,7 @@ def test_resume_matches_uninterrupted(spark, tmp_path):
 def test_manifest_carries_lineage_and_counters(spark, tmp_path):
     edges = _chain_edges(spark, n=20)
     ck = str(tmp_path / "ck2")
-    PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=2).run(
+    res = PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=2).run(
         edges, max_supersteps=2
     )
     found = PregelRunner.latest_checkpoint(ck)
@@ -55,6 +56,13 @@ def test_manifest_carries_lineage_and_counters(spark, tmp_path):
     assert step == 2
     assert manifest["algorithm"] == "connected_components"
     assert sum(p["rows"] for p in manifest["partition_lineage"]) == 21
+    # the lineage is the snapshotted state's own partition layout
+    per_partition = (
+        res.state.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    )
+    assert sorted((p["partition"], p["rows"]) for p in manifest["partition_lineage"]) == (
+        sorted((r["pid"], r["count"]) for r in per_partition)
+    )
     c = manifest["counters"]
     assert {"active_vertices", "messages_sent", "max_delta"} <= set(c)
     # the parquet snapshot itself must be readable and complete

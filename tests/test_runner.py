@@ -1,6 +1,7 @@
-"""PregelRunner loop contract: one barrier per superstep, exact per-step
-metrics against hand-computed counts, and the ``max_supersteps`` cap
-(including 0) on both ``run`` and ``resume``."""
+"""PregelRunner loop contract: one barrier (one Spark job) per superstep,
+exact per-step metrics against hand-computed counts, the ``max_supersteps``
+cap (including 0) on both ``run`` and ``resume``, the caller's session
+settings restored, and dead barrier blocks released."""
 
 from __future__ import annotations
 
@@ -157,3 +158,68 @@ def test_resume_with_no_steps_left_runs_no_superstep(spark, tmp_path):
     assert _values(res) == _values(first)
     step, manifest = PregelRunner.latest_checkpoint(ck)
     assert step == 2 and len(manifest["history"]) == 2
+
+
+def _pagerank_inputs(spark):
+    raw = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)], "src long, dst long"
+    )
+    pr_edges, vertices = prepare_pagerank_graph(raw)
+    return pr_edges, vertices, vertices.count()
+
+
+def test_one_job_per_superstep_and_conf_restored(spark, tmp_path):
+    """Every barrier is one Spark job: a k-step PageRank on materialized
+    inputs submits the edge layout, the initial state and one job per
+    superstep.  The loop runs with AQE off and hands the caller's settings
+    back after ``run``, after ``resume`` and after a run that raises."""
+    sc = spark.sparkContext
+    aqe = "spark.sql.adaptive.enabled"
+    caller = {aqe: spark.conf.get(aqe), "spark.sql.shuffle.partitions": "8"}
+    assert caller[aqe] == "true"
+    pr_edges, vertices, n = _pagerank_inputs(spark)
+    pr_edges = pr_edges.localCheckpoint(eager=True)
+    vertices = vertices.localCheckpoint(eager=True)
+    k = 5
+    sc.setJobGroup("pregel-job-budget", "k-step pagerank")
+    try:
+        res = PregelRunner(spark, pagerank_spec(n, tol=0.0)).run(
+            pr_edges, vertices=vertices, max_supersteps=k
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.supersteps == k
+    assert len(sc.statusTracker().getJobIdsForGroup("pregel-job-budget")) <= k + 3
+
+    def conf():
+        return {key: spark.conf.get(key) for key in caller}
+
+    assert conf() == caller
+    edges, _ = _undirected(spark)
+    ck = str(tmp_path / "ck")
+    PregelRunner(
+        spark, cc_spec(), num_partitions=4, checkpoint_dir=ck, checkpoint_every=1
+    ).run(edges, max_supersteps=1)
+    assert conf() == caller
+    resumed = PregelRunner(spark, cc_spec(), checkpoint_dir=ck).resume(edges)
+    assert resumed.converged and conf() == caller
+    negative = spark.createDataFrame([(-1, 2), (2, 3)], "src long, dst long")
+    with pytest.raises(ValueError, match="non-negative"):
+        PregelRunner(spark, cc_spec(), salt_degree_threshold=1).run(negative)
+    assert conf() == caller
+
+
+def test_dead_barrier_blocks_are_released(spark):
+    """Each barrier's checkpoint blocks are dropped once the next barrier
+    has materialized: after a 15-superstep PageRank the only new
+    persistent RDD is the result state's own checkpoint."""
+    from pregel_golang_implementation_spark.operators.pagerank import pagerank
+    from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    edges = synthetic_edges(spark, num_vertices=2000, avg_degree=6, seed=42)
+    res = pagerank(spark, edges, tol=0.0, max_supersteps=15)
+    assert res.supersteps == 15
+    result_rdd = res.state._jdf.queryExecution().logical().rdd().id()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == {result_rdd}
