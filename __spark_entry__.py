@@ -75,7 +75,6 @@ from pregel_golang_implementation_spark.operators.link_prediction import (
     adamic_adar_topk,
     common_neighbor_topk,
 )
-from pregel_golang_implementation_spark.operators.kmeans import kmeans_assign
 from pregel_golang_implementation_spark.operators.scc import scc_fwbw
 from pregel_golang_implementation_spark.operators.bfs import (
     harmonic_centrality,
@@ -151,8 +150,6 @@ WALK_LEN = 3
 TEMPORAL_ITERS = 4
 SCC_INNER = 14
 SCC_TRIM = 2
-KMEANS_K = 8
-KMEANS_ITERS = 2
 HARMONIC_PIVOTS = 4
 HARMONIC_HOPS = 4
 COPURCHASE_MAX_BASKET = 40
@@ -207,27 +204,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.state.select(
         "id", F.round(F.col("value"), 6).alias("rank")
     )
-
-
-def q_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hub-salted PageRank under the driver gate (SURVEY.md §4 P7, the
-    10^12-scale skew lever): same 5 fixed supersteps as ``pagerank_5iter``
-    but with ``salt_degree_threshold=10`` — at sf0.01 every part-side
-    vertex (in-degree ≈ 30) splits its inbox across 4 salt replicas, so
-    the salted sum combine (fold, unsalt, re-fold) is what the oracle
-    hash actually checks.  The oracle is the UNSALTED recurrence:
-    salting must be a pure execution strategy, invisible in the result."""
-    edges = edges_from_lineitem(spark, sf_dir)
-    pr_edges, vertices = prepare_pagerank_graph(edges)
-    n = vertices.count()
-    runner = PregelRunner(
-        spark,
-        pagerank_spec(n, damping=0.85, tol=1e-12),
-        salt_degree_threshold=10,
-        num_salts=4,
-    )
-    res = runner.run(pr_edges, vertices=vertices, max_supersteps=PR_ITERS)
-    return res.state.select("id", F.round(F.col("value"), 6).alias("rank"))
 
 
 def q_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,15 +782,6 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2 Lloyd iterations + final assignment over the embedding table,
-    seeded from vec_ids 0..7 — one broadcast-literal projection + one
-    K-key aggregate per iteration (operators/kmeans.py)."""
-    return kmeans_assign(
-        _emb(spark, sf_dir), k=KMEANS_K, iters=KMEANS_ITERS, dim=EMB_DIM
-    )
-
-
 def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic–Adar link prediction: per-vertex top-3 by Σ 1/ln(deg) over
     shared neighbors, same wedge cap as link_predict; scores ranked and
@@ -1070,7 +1037,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "pagerank_5iter": q_pagerank,
-        "pagerank_salted": q_pagerank_salted,
         "cc_6iter": q_cc,
         "checkpoint_resume": q_checkpoint_resume,
         "component_sizes": q_component_sizes,
@@ -1124,7 +1090,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "random_walks": q_random_walks,
         "temporal_reach": q_temporal_reach,
         "scc_fwbw": q_scc,
-        "kmeans_2iter": q_kmeans,
         "adamic_adar": q_adamic_adar,
         "harmonic_4src": q_harmonic,
         "copurchase_topk": q_copurchase,
@@ -1894,44 +1859,6 @@ def _scc_sql(inner: int, trim: int) -> str:
     )
 
 
-def _kmeans_sql(k: int, iters: int) -> str:
-    """Twin of q_kmeans: per-dimension unnest, Lloyd iterations unrolled;
-    both engines compare ROUND(dist², 6) with cluster-index tie-break and
-    round centroids to 6dp between iterations, so double-sum order can
-    never flip an assignment."""
-    parts = [
-        "pts AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos, "
-        "CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cl, pos, ROUND(v, 6) AS v FROM pts "
-        f"WHERE vec_id < {k})",
-    ]
-    for i in range(1, iters + 1):
-        parts += [
-            f"d{i} AS (SELECT p.vec_id, c.cl, "
-            f"ROUND(SUM((p.v - c.v) * (p.v - c.v)), 6) AS d "
-            f"FROM pts p JOIN c{i - 1} c ON p.pos = c.pos GROUP BY 1, 2)",
-            f"a{i} AS (SELECT vec_id, cl FROM (SELECT vec_id, cl, ROW_NUMBER() "
-            f"OVER (PARTITION BY vec_id ORDER BY d ASC, cl ASC) AS rn FROM d{i}) "
-            f"WHERE rn = 1)",
-            f"m{i} AS (SELECT a.cl, p.pos, ROUND(AVG(p.v), 6) AS v FROM a{i} a "
-            f"JOIN pts p ON a.vec_id = p.vec_id GROUP BY 1, 2)",
-            f"c{i} AS (SELECT c.cl, c.pos, COALESCE(m.v, c.v) AS v FROM c{i - 1} c "
-            f"LEFT JOIN m{i} m ON c.cl = m.cl AND c.pos = m.pos)",
-        ]
-    parts += [
-        f"df AS (SELECT p.vec_id, c.cl, "
-        f"ROUND(SUM((p.v - c.v) * (p.v - c.v)), 6) AS d "
-        f"FROM pts p JOIN c{iters} c ON p.pos = c.pos GROUP BY 1, 2)",
-        "af AS (SELECT vec_id, cl FROM (SELECT vec_id, cl, ROW_NUMBER() OVER "
-        "(PARTITION BY vec_id ORDER BY d ASC, cl ASC) AS rn FROM df) WHERE rn = 1)",
-    ]
-    return (
-        "WITH "
-        + ", ".join(parts)
-        + " SELECT vec_id, CAST(cl AS BIGINT) AS cluster FROM af"
-    )
-
-
 def _adamic_adar_sql(k: int, cap: int) -> str:
     """Twin of q_adamic_adar: _link_predict_sql with the middle carrying
     weight 1/ln(deg); scores rounded to 6dp BEFORE ranking in both
@@ -2342,9 +2269,6 @@ def _hll_sql() -> str:
 def oracle_sql() -> dict[str, str]:
     return {
         "pagerank_5iter": _pagerank_sql(PR_ITERS),
-        # salting is an execution strategy, not a semantics change — the
-        # salted run must hash-match the plain unsalted recurrence
-        "pagerank_salted": _pagerank_sql(PR_ITERS),
         "cc_6iter": _cc_sql(CC_ITERS),
         # resume(2 + 4 steps) must equal the uninterrupted 6-step run —
         # the oracle is literally the same 6-iteration chain
@@ -2516,7 +2440,6 @@ def oracle_sql() -> dict[str, str]:
         "random_walks": _materialize(_walks_sql(WALK_LEN)),
         "temporal_reach": _materialize(_temporal_sql(TEMPORAL_ITERS)),
         "scc_fwbw": _materialize(_scc_sql(SCC_INNER, SCC_TRIM)),
-        "kmeans_2iter": _materialize(_kmeans_sql(KMEANS_K, KMEANS_ITERS)),
         "adamic_adar": _materialize(_adamic_adar_sql(LP_K, LP_MAX_MID_DEG)),
         "harmonic_4src": _materialize(
             _harmonic_sql(HARMONIC_PIVOTS, HARMONIC_HOPS)

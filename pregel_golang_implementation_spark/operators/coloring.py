@@ -55,7 +55,7 @@ def greedy_coloring(
     no edge joins two vertices of the same non-negative color.
 
     ``make_runner(spec)`` lets callers inject runner config (partitions,
-    salting etc.); defaults to a plain PregelRunner.
+    checkpointing); defaults to a plain PregelRunner.
     """
     if make_runner is None:
         make_runner = lambda spec: PregelRunner(spark, spec)  # noqa: E731

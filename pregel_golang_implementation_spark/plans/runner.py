@@ -23,8 +23,11 @@ Scale design (SURVEY.md §4):
     superstep and the iterative plan never grows (P10).
   - the loop runs with AQE off: partition counts are explicit, so a
     barrier stays one Spark job and its checkpoint keeps the hash(id)
-    partitioning.  Inbox skew is absorbed by map-side partial aggregation
-    and, opt-in, by hub salting (sources/graphs.py).
+    partitioning.
+  - inbox skew is absorbed by the combine's map-side partial aggregation
+    (spec.combine_messages): for min/sum a hub's inbox leaves each map
+    partition as ONE partial row; for mode the first exchange is keyed on
+    (id, label), so a hub's votes spread over its distinct labels.
 """
 
 from __future__ import annotations
@@ -35,7 +38,6 @@ import math
 import os
 import time
 from dataclasses import dataclass, field
-from functools import partial
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -93,8 +95,6 @@ class PregelRunner:
         num_partitions: int | None = None,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 0,
-        salt_degree_threshold: int | None = None,
-        num_salts: int = 32,
     ):
         self.spark = spark
         self.spec = spec
@@ -111,14 +111,6 @@ class PregelRunner:
         self.num_partitions = num_partitions
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        # explicit skew splitting of hub inboxes (north_rule; SURVEY.md §4
-        # P7 — the reference routes the whole inbox of a hub to one worker,
-        # Worker.go:821). Every combiner kind has a salted form; requires
-        # non-negative vertex ids (the salted key space is negative).
-        self.salt_degree_threshold = salt_degree_threshold
-        self.num_salts = num_salts
-        self._salting = bool(salt_degree_threshold)
-        self._edges_cached: DataFrame | None = None
 
     # ----------------------------------------------------------------- setup
 
@@ -133,23 +125,6 @@ class PregelRunner:
         else:
             cols.append(F.lit(1.0).alias("weight"))
         e = edges.select(*cols)
-        if self._salting:
-            # salted hub keys live in the NEGATIVE id space — a graph that
-            # already uses negative ids would be silently corrupted (real
-            # negative ids get unsalted/recombined as hub partials). Fail
-            # loudly instead: one cheap agg over the raw edges, once per run.
-            row = e.agg(F.min("src").alias("_ms"), F.min("dst").alias("_md")).first()
-            lo = min(row["_ms"] or 0, row["_md"] or 0)
-            if lo < 0:
-                raise ValueError(
-                    f"hub salting requires non-negative vertex ids (found {lo}); "
-                    "disable salt_degree_threshold for graphs with negative ids"
-                )
-            from pregel_golang_implementation_spark.sources.graphs import salt_hubs
-
-            e, _hubs = salt_hubs(
-                e, degree_threshold=self.salt_degree_threshold, num_salts=self.num_salts
-            )
         # The layout is sorted within partitions so the cached edge order
         # is a function of the DATA, not of shuffle-fetch interleaving:
         # every float message-sum accumulates map-side in edge order,
@@ -181,7 +156,6 @@ class PregelRunner:
         e.count()  # materialize once; every superstep reuses this layout
         if staged is not None:
             staged.unpersist()
-        self._edges_cached = e  # tracked so run() can unpersist (no leak)
         return e
 
     @staticmethod
@@ -269,12 +243,7 @@ class PregelRunner:
         # collapses rows — no count rides the exchange (O21)
         msgs = msgs.observe(msg_obs, F.count(F.lit(1)).alias("_msgs_sent"))
         # combine: sender-side partial agg + final agg — the exchange shuffle
-        unsalt = None
-        if self._salting:
-            from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
-
-            unsalt = partial(unsalt_ids, id_col="id", num_salts=self.num_salts)
-        combined = combine_messages(msgs, spec.combiner, unsalt=unsalt)
+        combined = combine_messages(msgs, spec.combiner)
 
         # apply: fold inbox into state (replaces Vertex.go:68-88); both
         # sides partitioned by id → shuffle-hash, no sort
@@ -342,20 +311,12 @@ class PregelRunner:
         elif max_supersteps < 0:
             raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
         with self._loop_conf():
-            if state is None and vertices is None and self._salting:
-                # derive vertices from the UNSALTED edges — salting (below)
-                # rewrites hub dst ids into a reserved negative key space
-                # that must never become vertex state
-                vertices = self.vertices_from_edges(
-                    edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-                )
             edges = self._prepare_edges(edges)
             self.spark.conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
             if state is None and vertices is None:
-                # unsalted: derive vertices from the PREPARED (cached,
-                # partitioned) edge table instead of the raw input — the
-                # distinct reads the edge cache rather than re-running the
-                # source scan lineage a second time (r6)
+                # derive vertices from the PREPARED (cached, partitioned)
+                # edge table, not the raw input: the distinct reads the
+                # edge cache instead of re-running the source scan lineage
                 vertices = self.vertices_from_edges(edges)
             try:
                 return self._run_loop(
@@ -367,7 +328,6 @@ class PregelRunner:
                 # useful ones.  The result state is a checkpoint of its
                 # own, so it never depends on these blocks.
                 edges.unpersist()
-                self._edges_cached = None
 
     def _run_loop(
         self,

@@ -4,8 +4,10 @@ The reference's only extension point is the hand-written Go vertex program
 ``Compute()`` (/root/reference/Vertex.go:68-88) plus its scatter
 ``SendMessageToWorker()`` (Vertex.go:54-66).  Here an algorithm is a pure
 declarative 5-tuple — (init, msg, combiner kind, apply, halt) — over DataFrame
-columns, so Catalyst/Tungsten (codegen, partial aggregation, AQE) execute
-it; no per-row Python anywhere on the hot path.
+columns, so Catalyst/Tungsten (codegen, map-side partial aggregation)
+execute it; no per-row Python anywhere on the hot path.  The loop runs with
+AQE off (plans/runner.py), so nothing here relies on it: the partial
+aggregate below the exchange is what absorbs a hub's inbox skew.
 
 Semantics contract (mirrors the reference's superstep, minus its races —
 SURVEY.md §2.3, §7 "hard parts (f)"):
@@ -19,7 +21,7 @@ SURVEY.md §2.3, §7 "hard parts (f)"):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,11 +57,7 @@ def _mode_argmax(counts: DataFrame) -> DataFrame:
     )
 
 
-def combine_messages(
-    msgs: DataFrame,
-    kind: str,
-    unsalt: Optional[Callable[[DataFrame], DataFrame]] = None,
-) -> DataFrame:
+def combine_messages(msgs: DataFrame, kind: str) -> DataFrame:
     """Fold messages (id, msg) into exactly one (id, msg) row per target
     id — the superstep's exchange.  Spark's partial+final hash
     aggregation gives the sender-side combine the reference lacks (it
@@ -67,29 +65,19 @@ def combine_messages(
     message count rides the exchange: the runner counts on the
     pre-shuffle message frame.
 
-    ``unsalt`` (hub salting) maps salted ids back to real ids.  The folds
-    combine per SALTED key — the heavy shuffle, a hub's inbox split
-    across its salt replicas — then unsalt every id (non-hub ids pass
-    through) and re-fold in ONE second-level aggregate over ~V partial
-    rows whose output stays hash-partitioned on id for the apply join.
-    (A filter/union formulation evaluated the first aggregate twice and
-    lost that partitioning: measured 2-3× slower per superstep on the
-    Zipf skew bench.)  Mode winners cannot be merged across replicas, so
-    mode carries (label, cnt) PARTIALS across the unsalt step instead and
-    re-sums them per real (id, label) — cardinality is distinct labels
-    per vertex, far below the inbox — before the argmax."""
+    The partial aggregate is also the skew handling (SURVEY.md §4 P7; the
+    reference routes a hub's whole inbox to one worker, Worker.go:821):
+    for min/sum a hub's inbox leaves each map partition as ONE partial
+    row, so the reducer sees at most one row per map partition; for mode
+    the first exchange is keyed on (id, label), so a hub's votes spread
+    over its distinct labels and reach the argmax as (label, cnt)
+    partials."""
     if kind == "mode":
         # count per (id, label), then argmax per id: both algebraic and
         # map-side combinable, no window, no Python
         counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
-        if unsalt is not None:
-            counts = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
         return _mode_argmax(counts)
-    fold = FOLDS[kind]
-    out = msgs.groupBy("id").agg(fold("msg").alias("msg"))
-    if unsalt is not None:
-        out = unsalt(out).groupBy("id").agg(fold("msg").alias("msg"))
-    return out
+    return msgs.groupBy("id").agg(FOLDS[kind]("msg").alias("msg"))
 
 
 def default_active(old: Column, new: Column, msg: Column) -> Column:
@@ -106,8 +94,8 @@ class AlgorithmSpec:
     returns (id, value [, static columns...]).  Static columns listed in
     ``static_cols`` (e.g. a dangling flag for PageRank) are carried through
     every superstep unchanged.  ``combiner`` names the fold over each
-    vertex's inbox, one of ``COMBINERS``; the runner derives the plain and
-    salted forms from it (``combine_messages``).
+    vertex's inbox, one of ``COMBINERS``; ``combine_messages`` builds the
+    exchange from it.
     """
 
     name: str

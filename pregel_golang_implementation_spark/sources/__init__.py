@@ -10,7 +10,6 @@ from pregel_golang_implementation_spark.sources.corpus import (
     synthetic_corpus,
     verify_content_sha256,
 )
-from pregel_golang_implementation_spark.sources.graphs import salt_hubs, unsalt_ids
 
 __all__ = [
     "edges_from_lineitem",
@@ -21,6 +20,4 @@ __all__ = [
     "extract_import_edges",
     "synthetic_corpus",
     "verify_content_sha256",
-    "salt_hubs",
-    "unsalt_ids",
 ]

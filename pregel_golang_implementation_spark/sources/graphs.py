@@ -1,5 +1,5 @@
 """Graph sources: synthetic seeded generators, testdata-derived edge
-tables, the reference's native JSON fixture loader, and hub salting.
+tables and the reference's native JSON fixture loader.
 
 Replaces the reference's single hardcoded source (``ParseInput`` over
 ``Test/SampleNodes50.json`` — /root/reference/InputParsing.go:39-54,
@@ -48,8 +48,9 @@ def synthetic_edges(
     uniformly: dst = floor(n · U^a) for uniform U, giving a power-law
     in-degree distribution (density ∝ d^-(1 + a/(a-1)); a=4 → exponent
     ≈2.33, the web-graph range) with vertex 0 the heaviest hub — it receives
-    a n^(-1/a) fraction of ALL edges (a=4, n=2M → 2.7%), the inbox-skew
-    regime hub salting (``salt_hubs``) exists for.  0 disables (uniform).
+    a n^(-1/a) fraction of ALL edges (a=4, n=2M → 2.7%): the inbox-skew
+    regime that the combine's map-side partial aggregation absorbs
+    (``plans.spec.combine_messages``).  0 disables (uniform).
     """
     n_parts = num_partitions or max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
     hubs = int(num_vertices * hub_fraction)
@@ -171,49 +172,3 @@ def load_reference_graph(spark: SparkSession, json_path: str) -> DataFrame:
         for nbr, w in node["edges"].items()
     ]
     return spark.createDataFrame(rows, schema=EDGE_SCHEMA)
-
-
-# ------------------------------------------------------------ hub salting
-
-def salt_hubs(
-    edges: DataFrame, degree_threshold: int = 10_000, num_salts: int = 32
-) -> tuple[DataFrame, DataFrame]:
-    """Explicit skew splitting of hub DESTINATIONS (north_rule).
-
-    A vertex whose in-degree exceeds ``degree_threshold`` receives its
-    entire inbox on one reducer (the reference routes by ``To % workers`` —
-    Worker.go:821 — and has the same pathology).  Returns
-    (salted_edges, salt_map) where hub dst ids are rewritten to
-    ``dst*num_salts + salt`` in a reserved negative id space; combine runs
-    on the salted ids, then ``unsalt_state`` merges partials.
-
-    Note: AQE skew-join splitting already covers the scatter join; this
-    handles the combine groupBy, which AQE does not re-key.
-    """
-    indeg = edges.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    hubs = indeg.filter(F.col("indeg") > degree_threshold).select("dst")
-    salted = (
-        edges.join(F.broadcast(hubs.withColumn("_is_hub", F.lit(True))), "dst", "left")
-        .withColumn(
-            "dst",
-            F.when(
-                F.col("_is_hub"),
-                -(F.col("dst") * num_salts + (F.pmod(F.xxhash64("src"), F.lit(num_salts)))) - 1,
-            ).otherwise(F.col("dst")),
-        )
-        .drop("_is_hub")
-    )
-    return salted, hubs
-
-
-def unsalt_ids(df: DataFrame, id_col: str = "id", num_salts: int = 32) -> DataFrame:
-    """Map salted ids back: id < 0 → original hub id.  Pure integer
-    arithmetic (`div`) — float division loses integer precision past 2^53
-    (dst*num_salts > ~2.8e14 at 32 salts would silently corrupt ids)."""
-    return df.withColumn(
-        id_col,
-        F.when(
-            F.col(id_col) < 0,
-            F.expr(f"(-(`{id_col}` + 1L)) div {num_salts}L"),
-        ).otherwise(F.col(id_col)),
-    )

@@ -1,5 +1,5 @@
-"""Round-2 hardening tests: cache hygiene, salting safety, scale-safe id
-assignment, candidate-predicate pushdown, bucket caps, end-to-end near-dup
+"""Round-2 hardening tests: cache hygiene, scale-safe id assignment,
+candidate-predicate pushdown, bucket caps, end-to-end near-dup
 resolution."""
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from pregel_golang_implementation_spark.sources.corpus import (
     assign_vertex_ids,
     synthetic_corpus,
 )
-from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
 
 
 def _chain_edges(spark, n=10):
@@ -62,63 +61,8 @@ def test_runner_releases_edge_cache(spark):
     res = runner.run(edges)
     lvl = captured["edges"].storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "edge cache leaked after run()"
-    assert runner._edges_cached is None
     # result is detached from runner-internal storage: still collectable
     assert res.state.count() == 11
-
-
-def test_salting_rejects_negative_ids(spark):
-    edges = spark.createDataFrame(
-        [(-5, 1, 1.0), (1, 2, 1.0)], "src long, dst long, weight double"
-    )
-    runner = PregelRunner(spark, cc_spec(), salt_degree_threshold=1)
-    with pytest.raises(ValueError, match="non-negative"):
-        runner.run(edges)
-
-
-def test_unsalt_ids_exact_beyond_double_precision(spark):
-    """Float division loses integers past 2^53; the roundtrip must be exact
-    integer arithmetic for the full long range."""
-    num_salts = 32
-    # 2^55 and 2^57 are far beyond double's 2^53 integer range but still
-    # inside the salted key space (hub*32+31 must fit a long → hub < ~2^58)
-    hubs = [2**55, 2**57, 7, 123_456_789_012_345]
-    rows = [(int(-(h * num_salts + salt) - 1),) for h in hubs for salt in (0, 31)]
-    df = spark.createDataFrame(rows, "id long")
-    got = sorted(r["id"] for r in unsalt_ids(df, num_salts=num_salts).collect())
-    want = sorted(h for h in hubs for _ in (0, 1))
-    assert got == want
-
-
-def test_salt_unsalt_roundtrip_property(spark):
-    """Property test (Hypothesis): salting a hub id into any of its salt
-    replicas and unsalting recovers the id EXACTLY, for the entire valid
-    id range and any salt count — integer arithmetic end to end."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    cases = []
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        hub=st.integers(min_value=0, max_value=(2**63 - 1) // 64 - 1),
-        num_salts=st.sampled_from([2, 8, 32, 64]),
-        salt=st.integers(min_value=0, max_value=63),
-    )
-    def collect(hub, num_salts, salt):
-        salt = salt % num_salts
-        cases.append((int(-(hub * num_salts + salt) - 1), num_salts, hub))
-
-    collect()
-    # one Spark job per num_salts bucket (the column expr is per-frame)
-    by_salts = {}
-    for salted, num_salts, hub in cases:
-        by_salts.setdefault(num_salts, []).append((salted, hub))
-    for num_salts, rows in by_salts.items():
-        df = spark.createDataFrame([(s,) for s, _ in rows], "id long")
-        got = [r["id"] for r in unsalt_ids(df, num_salts=num_salts).collect()]
-        want = [h for _, h in rows]
-        assert got == want, f"num_salts={num_salts}"
 
 
 def test_resume_rejects_mismatched_spec(spark, tmp_path):
@@ -328,33 +272,6 @@ def test_weighted_pagerank_uniform_weights_equals_standard(spark):
     )
     sk = {r["id"]: r["value"] for r in pagerank(spark, skew, tol=1e-10, weighted=True).state.collect()}
     assert sk[2] > b[2]  # vertex 2 now receives 0.9 of vertex 0's rank
-
-
-# ----------------------------------------------------------- LPA salting
-
-def test_lpa_hub_salting_matches_unsalted(spark):
-    """Mode is not algebraic, so LPA salting routes (label, count)
-    partials across the unsalt boundary (combine_messages). On a hub
-    graph the salted run must give bit-identical labels."""
-    from pregel_golang_implementation_spark.operators.label_propagation import (
-        label_propagation,
-    )
-
-    rows = [(i, 0, 1.0) for i in range(1, 40)]  # hub 0 with in-degree 39
-    rows += [(40 + i, 40 + ((i + 1) % 5), 1.0) for i in range(5)]  # a 5-cycle
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
-    plain = label_propagation(spark, edges, max_supersteps=4)
-    salted = label_propagation(
-        spark, edges, max_supersteps=4, salt_degree_threshold=10, num_salts=4
-    )
-    a = {r["id"]: r["value"] for r in plain.state.collect()}
-    b = {r["id"]: r["value"] for r in salted.state.collect()}
-    assert a == b
-    assert plain.supersteps == salted.supersteps
-    # per-step message counts must also agree (count partials preserved)
-    assert [m.messages_sent for m in plain.metrics] == [
-        m.messages_sent for m in salted.metrics
-    ]
 
 
 # ------------------------------------------------------- incremental CC

@@ -1,5 +1,4 @@
-"""Round-5 batch 4: SCC (trim + FW/BW peel), Lloyd k-means, Adamic–Adar
-link prediction."""
+"""Round-5 batch 4: SCC (trim + FW/BW peel), Adamic–Adar link prediction."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ import math
 import pytest
 
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
-from pregel_golang_implementation_spark.operators.kmeans import kmeans_assign
 from pregel_golang_implementation_spark.operators.link_prediction import (
     adamic_adar_topk,
 )
@@ -76,47 +74,6 @@ def test_scc_second_round_finishes_peel(spark):
     m = _scc_map(spark, pairs, inner_iters=6, trim_rounds=2, outer_rounds=2)
     assert m[5] == m[6] == 5
     assert m[7] == m[8] == 7
-
-
-# ---------------------------------------------------------------- kmeans
-
-def _emb_df(spark, vecs):
-    return spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-
-
-def test_kmeans_separable_clusters(spark):
-    # two tight blobs in 4d; seeds 0 and 1 land one in each blob
-    blob_a = [[0.0, 0.1, 0.0, 0.05], [0.1, 0.0, 0.02, 0.0], [0.05, 0.05, 0.0, 0.1]]
-    blob_b = [[5.0, 5.1, 5.0, 4.9], [5.1, 4.95, 5.0, 5.0], [4.9, 5.0, 5.05, 5.0]]
-    vecs = [blob_a[0], blob_b[0], blob_a[1], blob_a[2], blob_b[1], blob_b[2]]
-    out = kmeans_assign(_emb_df(spark, vecs), k=2, iters=2, dim=4)
-    cl = {r["vec_id"]: r["cluster"] for r in out.collect()}
-    assert cl[0] == cl[2] == cl[3] == 0
-    assert cl[1] == cl[4] == cl[5] == 1
-
-
-def test_kmeans_empty_cluster_keeps_seed(spark):
-    # identical seeds: every point ties → cluster 0 (smaller index wins),
-    # cluster 1 goes empty and must keep its previous centroid without
-    # crashing or emitting NULL coordinates
-    vecs = [[0.0, 0.0], [0.0, 0.0], [0.1, 0.0], [0.0, 0.1]]
-    out = kmeans_assign(_emb_df(spark, vecs), k=2, iters=2, dim=2)
-    cl = {r["vec_id"]: r["cluster"] for r in out.collect()}
-    assert len(cl) == 4
-    assert all(c in (0, 1) for c in cl.values())
-    # iteration 1: every point ties to the identical seeds → cluster 0,
-    # cluster 1 is empty and keeps [0,0]; the retained centroid then wins
-    # the exact-origin points back in the next assignment
-    assert cl[0] == 1 and cl[1] == 1
-
-
-def test_kmeans_missing_seed_raises(spark):
-    df = _emb_df(spark, [[0.0, 0.0]])
-    with pytest.raises(ValueError, match="seed"):
-        kmeans_assign(df, k=3, iters=1, dim=2)
 
 
 # ------------------------------------------------------------ adamic-adar

@@ -1,5 +1,5 @@
 """Round-5 fixes: the four r4 ADVICE items + the new contract queries'
-building blocks (salted PageRank, 4-iter LPA)."""
+building blocks (4-iter LPA)."""
 
 from __future__ import annotations
 

@@ -1,13 +1,17 @@
 """PregelRunner loop contract: one barrier (one Spark job) per superstep,
 exact per-step metrics against hand-computed counts, the ``max_supersteps``
 cap (including 0) on both ``run`` and ``resume``, the caller's session
-settings restored, and dead barrier blocks released."""
+settings restored, dead barrier blocks released, and the message combine:
+hand-computed inboxes and the map-side partial aggregate that absorbs
+inbox skew."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter, defaultdict
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
@@ -19,6 +23,11 @@ from pregel_golang_implementation_spark.operators.pagerank import (
     prepare_pagerank_graph,
 )
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
+from pregel_golang_implementation_spark.plans.spec import (
+    COMBINERS,
+    AlgorithmSpec,
+    combine_messages,
+)
 
 
 def _undirected(spark):
@@ -203,9 +212,9 @@ def test_one_job_per_superstep_and_conf_restored(spark, tmp_path):
     assert conf() == caller
     resumed = PregelRunner(spark, cc_spec(), checkpoint_dir=ck).resume(edges)
     assert resumed.converged and conf() == caller
-    negative = spark.createDataFrame([(-1, 2), (2, 3)], "src long, dst long")
-    with pytest.raises(ValueError, match="non-negative"):
-        PregelRunner(spark, cc_spec(), salt_degree_threshold=1).run(negative)
+    no_dst = spark.createDataFrame([(1,), (2,)], "src long")
+    with pytest.raises(AnalysisException):
+        PregelRunner(spark, cc_spec()).run(no_dst)
     assert conf() == caller
 
 
@@ -223,3 +232,71 @@ def test_dead_barrier_blocks_are_released(spark):
     assert res.supersteps == 15
     result_rdd = res.state._jdf.queryExecution().logical().rdd().id()
     assert set(jsc.getPersistentRDDs().keySet()) - before == {result_rdd}
+
+
+def test_combine_messages_folds_hand_computed_inboxes(spark):
+    """Each combiner kind folds to the hand-computed inbox, one (id, msg)
+    row per target id; an unknown kind is rejected when the spec is
+    built."""
+    rows = [(0, float(i % 3)) for i in range(20)] + [(7, 5.0), (7, 2.0), (7, 2.0)]
+    msgs = spark.createDataFrame(rows, "id long, msg double")
+    # mode: labels 0 and 1 tie at 7 votes each → smallest label wins
+    want = {"min": {0: 0.0, 7: 2.0}, "sum": {0: 19.0, 7: 9.0}, "mode": {0: 0.0, 7: 2.0}}
+    assert set(want) == set(COMBINERS)
+    for kind in COMBINERS:
+        out = combine_messages(msgs, kind)
+        assert out.columns == ["id", "msg"]
+        got = out.collect()
+        assert len(got) == len(want[kind])
+        assert {r["id"]: r["msg"] for r in got} == want[kind]
+    with pytest.raises(ValueError, match="unknown combiner"):
+        AlgorithmSpec(
+            name="bad",
+            init_fn=lambda v: v,
+            msg_fn=lambda value, weight: value,
+            combiner="max",
+            apply_fn=lambda old, msg, g: msg,
+        )
+
+
+def _exchange_child(plan: list[str], pattern: str) -> tuple[int, str]:
+    """Line index of the one Exchange matching ``pattern`` in a printed
+    plan, and the line below it: the Exchange's child operator."""
+    at = [i for i, line in enumerate(plan) if re.search(pattern, line)]
+    assert len(at) == 1, (pattern, plan)
+    return at[0], plan[at[0] + 1]
+
+
+def test_combine_partial_aggregate_below_id_exchange(spark):
+    """Inbox skew is absorbed map-side: with AQE off (as in the loop) the
+    exchange keyed on id alone reads a partial aggregate, so a hub's inbox
+    leaves each map partition as one partial row (min/sum) or one partial
+    argmax (mode).  Mode's first exchange is keyed on (id, label) and
+    reads partial counts, so a hub's votes spread over its labels."""
+    partial = {
+        "min": "partial_min(msg",
+        "sum": "partial_sum(msg",
+        "mode": "partial_max(struct(cnt",
+    }
+    aqe = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        # 300 messages to hub 0 over 4 map partitions
+        msgs = spark.createDataFrame(
+            [(0, float(i % 3)) for i in range(300)], "id long, msg double"
+        ).repartition(4)
+        for kind in COMBINERS:
+            out = combine_messages(msgs, kind)
+            assert out.count() == 1
+            plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+            by_id, below = _exchange_child(plan, r"Exchange hashpartitioning\(id#\d+L?, \d+\)")
+            assert partial[kind] in below, (kind, plan)
+            if kind == "mode":
+                by_label, below = _exchange_child(
+                    plan, r"Exchange hashpartitioning\(id#\d+L?, msg#\d+, \d+\)"
+                )
+                assert by_label > by_id  # the (id, label) exchange runs first
+                assert "partial_count(1)" in below, plan
+    finally:
+        spark.conf.set(aqe, saved)

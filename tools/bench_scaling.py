@@ -21,9 +21,6 @@ Usage:
         efficiencies, protocol number = best-per-level (r1/r2-comparable);
         writes BENCH/scaling_latest.{json,md}
         (BENCH/BASELINE.md and scaling_r{N}.json are curated by hand)
-  python tools/bench_scaling.py skew [N] [vertices] [degree] [steps] [zipf_a] [salt_thr]
-      → Zipf in-degree graph (dst_skew=zipf_a), salted-vs-unsalted PageRank
-        at local[N] and local[4N]; writes BENCH/scaling_skew_latest.json
 
 Co-tenancy guard: the orchestrators REFUSE to start when the 1-min
 loadavg exceeds LOADAVG_MAX (anything co-running skews both levels and
@@ -64,19 +61,12 @@ def _refuse_if_busy(context: str) -> None:
         )
 
 
-def prepare_graph(
-    num_vertices: int,
-    avg_degree: int,
-    dst_skew: float = 0.0,
-    graph_dir: str = GRAPH_DIR,
-) -> None:
+def prepare_graph(num_vertices: int, avg_degree: int) -> None:
     """One-time: generate the seeded graph, pre-derive the PageRank form
     (weight = 1/outdeg), write parquet.  Workers at every parallelism
     level then READ the same bytes — identical input guaranteed and
     per-worker setup drops from minutes to seconds."""
     import shutil
-
-    from pyspark.sql import functions as F
 
     from pregel_golang_implementation_spark.operators.pagerank import (
         prepare_pagerank_graph,
@@ -84,42 +74,18 @@ def prepare_graph(
     from pregel_golang_implementation_spark.session import get_spark
     from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
 
-    marker = os.path.join(
-        graph_dir,
-        f"v{num_vertices}_d{avg_degree}.ok"
-        if dst_skew == 0.0
-        else f"v{num_vertices}_d{avg_degree}_z{dst_skew}.ok",
-    )
+    marker = os.path.join(GRAPH_DIR, f"v{num_vertices}_d{avg_degree}.ok")
     if os.path.exists(marker):
         return
-    shutil.rmtree(graph_dir, ignore_errors=True)
+    shutil.rmtree(GRAPH_DIR, ignore_errors=True)
     spark = get_spark(app_name="scaling-gen", cores=32, shuffle_partitions=NUM_PARTITIONS)
     edges = synthetic_edges(
         spark, num_vertices=num_vertices, avg_degree=avg_degree, seed=42,
-        num_partitions=64, dst_skew=dst_skew,
+        num_partitions=64,
     )
     pr_edges, vertices = prepare_pagerank_graph(edges)
-    pr_edges.write.mode("overwrite").parquet(os.path.join(graph_dir, "pr_edges"))
-    vertices.write.mode("overwrite").parquet(os.path.join(graph_dir, "vertices"))
-    # in-degree stats next to the marker so the skew artifact is
-    # self-describing (how skewed WAS the input?)
-    e = spark.read.parquet(os.path.join(graph_dir, "pr_edges"))
-    ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    stats = ind.agg(
-        F.max("indeg").alias("max"),
-        F.expr("percentile_approx(indeg, 0.999)").alias("p999"),
-        F.avg("indeg").alias("mean"),
-    ).first()
-    with open(os.path.join(graph_dir, "indeg_stats.json"), "w") as f:
-        json.dump(
-            {
-                "max_indeg": int(stats["max"]),
-                "p999_indeg": int(stats["p999"]),
-                "mean_indeg": round(float(stats["mean"]), 2),
-                "dst_skew": dst_skew,
-            },
-            f,
-        )
+    pr_edges.write.mode("overwrite").parquet(os.path.join(GRAPH_DIR, "pr_edges"))
+    vertices.write.mode("overwrite").parquet(os.path.join(GRAPH_DIR, "vertices"))
     open(marker, "w").write("ok")
     spark.stop()
 
@@ -138,23 +104,11 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
         extra_conf=extra,
         tmpfs_local_dir=True,  # bounded shuffle volume; headroom-checked
     )
-    graph_dir = os.environ.get("PREGEL_SCALING_GRAPH_DIR", GRAPH_DIR)
-    pr_edges = spark.read.parquet(os.path.join(graph_dir, "pr_edges"))
-    vertices = spark.read.parquet(os.path.join(graph_dir, "vertices"))
+    pr_edges = spark.read.parquet(os.path.join(GRAPH_DIR, "pr_edges"))
+    vertices = spark.read.parquet(os.path.join(GRAPH_DIR, "vertices"))
     n_edges = pr_edges.count()
     n = vertices.count()
-    # job selector: the skew benchmark measures salting on BOTH combine
-    # families — algebraic (pagerank sum) and non-algebraic (lpa mode,
-    # which carries count partials across the unsalt step)
-    job = os.environ.get("PREGEL_SCALING_JOB", "pagerank")
-    if job == "lpa":
-        from pregel_golang_implementation_spark.operators.label_propagation import (
-            lpa_spec,
-        )
-
-        spec = lpa_spec(max_supersteps=supersteps + 1)
-    else:
-        spec = pagerank_spec(n, tol=0.0)  # tol=0 → never converges early
+    spec = pagerank_spec(n, tol=0.0)  # tol=0 → never converges early
 
     # fixed partitioning at BOTH levels (like a real cluster, where the
     # table layout doesn't change when executors scale); throughput is the
@@ -164,16 +118,7 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
     # run-to-run otherwise; all raw step walls are reported).
     import statistics
 
-    # hub-salting A/B knob for the skew benchmark: in-degree threshold
-    # above which a vertex's inbox splits across salt replicas (0 = off)
-    salt_thr = int(os.environ.get("PREGEL_SCALING_SALT", "0"))
-    runner = PregelRunner(
-        spark,
-        spec,
-        num_partitions=NUM_PARTITIONS,
-        salt_degree_threshold=salt_thr or None,
-        num_salts=int(os.environ.get("PREGEL_SCALING_NUM_SALTS", "16")),
-    )
+    runner = PregelRunner(spark, spec, num_partitions=NUM_PARTITIONS)
     t0 = time.monotonic()
     res = runner.run(pr_edges, vertices=vertices, max_supersteps=supersteps)
     total_wall = time.monotonic() - t0
@@ -193,8 +138,6 @@ def run_worker(cores: int, num_vertices: int, avg_degree: int, supersteps: int) 
                 "total_wall_secs": round(total_wall, 3),
                 "edges_per_sec": round(n_edges / med, 1),
                 "supersteps_per_min": round(60.0 / med, 2),
-                "salt_degree_threshold": salt_thr,
-                "job": job,
                 "extra_conf": extra,
             }
         )
@@ -244,7 +187,7 @@ def vanilla_worker(cores: int, rows: int = 100_000_000, rounds: int = 5) -> None
     spark.stop()
 
 
-def _spawn(args: list[str], label: str, env: dict | None = None) -> dict:
+def _spawn(args: list[str], label: str) -> dict:
     la = _loadavg()  # observed IMMEDIATELY before the run — clean-window proof
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), *args],
@@ -252,7 +195,6 @@ def _spawn(args: list[str], label: str, env: dict | None = None) -> dict:
         text=True,
         timeout=3600,
         cwd=REPO,
-        env={**os.environ, **(env or {})},
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if not line:
@@ -376,101 +318,8 @@ Reproduce: `python tools/bench_scaling.py {n_cores} {num_vertices} {avg_degree} 
     print(md)
 
 
-def skew_orchestrate(
-    n_cores: int,
-    num_vertices: int,
-    avg_degree: int,
-    supersteps: int,
-    zipf_a: float,
-    salt_thr: int,
-    repeats: int = 2,
-    job: str = "pagerank",
-) -> None:
-    """Salted-vs-unsalted PageRank on a Zipf in-degree graph at local[N]
-    and local[4N] (r4 verdict #4): the gate graph is degree-uniform, so
-    this is where the salting lever is actually exercised at bench scale.
-    Configs interleave within each repeat so drift hits all four equally."""
-    import statistics
-
-    _refuse_if_busy("skew_orchestrate")
-    graph_dir = GRAPH_DIR + f"_zipf{zipf_a}"
-    prepare_graph(num_vertices, avg_degree, dst_skew=zipf_a, graph_dir=graph_dir)
-    with open(os.path.join(graph_dir, "indeg_stats.json")) as f:
-        indeg = json.load(f)
-    print(f"skew graph in-degree stats: {indeg}")
-
-    runs: dict[tuple[int, int], list[dict]] = {}
-    for _ in range(repeats):
-        for cores in (n_cores, 4 * n_cores):
-            for thr in (0, salt_thr):
-                r = _spawn(
-                    ["worker", str(cores), str(num_vertices), str(avg_degree), str(supersteps)],
-                    f"worker {cores} salt={thr}",
-                    env={
-                        "PREGEL_SCALING_GRAPH_DIR": graph_dir,
-                        "PREGEL_SCALING_SALT": str(thr),
-                        "PREGEL_SCALING_JOB": job,
-                    },
-                )
-                runs.setdefault((cores, thr), []).append(r)
-                print(f"local[{cores}] salt_thr={thr}: {r}")
-
-    def best(cores: int, thr: int) -> dict:
-        return max(runs[(cores, thr)], key=lambda r: r["edges_per_sec"])
-
-    report = {
-        "job": f"{job}_fixed_supersteps_zipf",
-        "input": {
-            "n_vertices": num_vertices,
-            "avg_degree": avg_degree,
-            "dst_skew": zipf_a,
-            "supersteps": supersteps,
-            "indeg_stats": indeg,
-            "salt_degree_threshold": salt_thr,
-            "num_salts": int(os.environ.get("PREGEL_SCALING_NUM_SALTS", "16")),
-        },
-        "runs": {f"{c}_salt{t}": v for (c, t), v in runs.items()},
-        "best": {
-            f"{c}_salt{t}": best(c, t)["edges_per_sec"]
-            for (c, t) in runs
-        },
-        "efficiency": {
-            f"salt{t}": round(
-                best(4 * n_cores, t)["edges_per_sec"]
-                / (4 * best(n_cores, t)["edges_per_sec"]),
-                3,
-            )
-            for t in (0, salt_thr)
-        },
-        "median_efficiency": {
-            f"salt{t}": round(
-                statistics.median(
-                    hi["edges_per_sec"] / (4 * lo["edges_per_sec"])
-                    for lo, hi in zip(runs[(n_cores, t)], runs[(4 * n_cores, t)])
-                ),
-                3,
-            )
-            for t in (0, salt_thr)
-        },
-    }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    suffix = "" if job == "pagerank" else f"_{job}"
-    with open(os.path.join(REPO, "BENCH", f"scaling_skew{suffix}_latest.json"), "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps({k: report[k] for k in ("best", "efficiency", "median_efficiency")}, indent=2))
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "skew":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-        v = int(sys.argv[3]) if len(sys.argv) > 3 else 2_000_000
-        d = int(sys.argv[4]) if len(sys.argv) > 4 else 16
-        s = int(sys.argv[5]) if len(sys.argv) > 5 else 6
-        a = float(sys.argv[6]) if len(sys.argv) > 6 else 4.0
-        thr = int(sys.argv[7]) if len(sys.argv) > 7 else 10_000
-        jb = sys.argv[8] if len(sys.argv) > 8 else "pagerank"
-        skew_orchestrate(n, v, d, s, a, thr, job=jb)
-    elif len(sys.argv) > 1 and sys.argv[1] == "worker":
+    if len(sys.argv) > 1 and sys.argv[1] == "worker":
         run_worker(int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]), int(sys.argv[5]))
     elif len(sys.argv) > 1 and sys.argv[1] == "vanilla":
         vanilla_worker(int(sys.argv[2]))

@@ -205,17 +205,6 @@ def main() -> None:
     assert "Window" not in mode_plan, "the mode combiner must not plan a Window"
     sections.append(("mode combiner (windowless algebraic argmax)", mode_plan))
 
-    # 10. k-means assignment: the K centroids enter the plan as literal
-    # arrays (the SRP/IVF/PQ discipline) — the per-point argmin over all
-    # K squared distances must be a pure whole-stage-codegen projection:
-    # zero Exchange, zero Python, per iteration one scan of the corpus.
-    from pregel_golang_implementation_spark.operators.kmeans import _assign
-
-    km_plan = grab(_assign(emb, [[0.0] * 64 for _ in range(8)]))
-    assert "Exchange" not in km_plan, "kmeans _assign must stay shuffle-free"
-    assert "BatchEvalPython" not in km_plan, "kmeans _assign must not plan Python"
-    sections.append(("kmeans _assign (zero-shuffle centroid argmin)", km_plan))
-
     with open("/root/repo/PLANS.md", "w") as f:
         f.write(
             "# PLANS — formatted physical plans of the hot paths\n\n"
