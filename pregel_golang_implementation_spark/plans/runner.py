@@ -33,6 +33,7 @@ Scale design (SURVEY.md §4):
 from __future__ import annotations
 
 import contextlib
+import copy
 import json
 import math
 import os
@@ -107,7 +108,13 @@ class PregelRunner:
         # the data, not to a constant; measured at sf0.1/600k edges:
         # 8 partitions beat the conf 32 by 1.5-3s per run on pagerank/CC).
         # Large graphs hit the conf cap and behave exactly as before.
+        # The count is resolved per run and never written back here, so a
+        # reused runner sizes each graph afresh; only when the conf is at
+        # or below MIN_PARTITIONS (the formula can then only return the
+        # conf) is it fixed once, here.
         self._conf_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if num_partitions is None and self._conf_partitions <= self.MIN_PARTITIONS:
+            num_partitions = self._conf_partitions
         self.num_partitions = num_partitions
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
@@ -137,10 +144,8 @@ class PregelRunner:
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
         staged = None
-        if self.num_partitions is None and self._conf_partitions <= self.MIN_PARTITIONS:
-            # the adaptive formula below can only return conf here
-            self.num_partitions = self._conf_partitions
-        elif self.num_partitions is None:
+        n = self.num_partitions
+        if n is None:
             # size the layout to the data (scale-adaptive note in
             # __init__) WITHOUT running the edge lineage twice: cache the
             # un-laid-out edges, count them to pick the partition count,
@@ -148,11 +153,11 @@ class PregelRunner:
             # the staging cache — the lineage executes exactly once.
             e = staged = e.persist()
             n_edges = staged.count()
-            self.num_partitions = min(
+            n = min(
                 self._conf_partitions,
                 max(self.MIN_PARTITIONS, math.ceil(n_edges / self.EDGES_PER_PARTITION)),
             )
-        e = e.repartition(self.num_partitions, "src").sortWithinPartitions(*order).persist()
+        e = e.repartition(n, "src").sortWithinPartitions(*order).persist()
         e.count()  # materialize once; every superstep reuses this layout
         if staged is not None:
             staged.unpersist()
@@ -312,7 +317,9 @@ class PregelRunner:
             raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
         with self._loop_conf():
             edges = self._prepare_edges(edges)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
+            # this run's partition count: the layout's, read back from it
+            n = edges.rdd.getNumPartitions()
+            self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
             if state is None and vertices is None:
                 # derive vertices from the PREPARED (cached, partitioned)
                 # edge table, not the raw input: the distinct reads the
@@ -320,7 +327,7 @@ class PregelRunner:
                 vertices = self.vertices_from_edges(edges)
             try:
                 return self._run_loop(
-                    edges, vertices, state, start_superstep, max_supersteps
+                    edges, vertices, state, start_superstep, max_supersteps, n
                 )
             finally:
                 # a long-lived session runs many jobs through many runners
@@ -336,6 +343,7 @@ class PregelRunner:
         state: DataFrame | None,
         start_superstep: int,
         max_steps: int,
+        num_partitions: int,
     ) -> PregelResult:
         spec = self.spec
         global_cols = [c.alias(k) for k, c in spec.global_aggs.items()]
@@ -346,7 +354,7 @@ class PregelRunner:
         # globals that superstep 1 applies
         obs = Observation(f"superstep_{start_superstep}")
         state = self._barrier(
-            state.repartition(self.num_partitions, "id"), obs,
+            state.repartition(num_partitions, "id"), obs,
             [F.count(F.lit(1)).alias("_n"), *global_cols], state.columns,
         )
         g = {k: obs.get[k] for k in spec.global_aggs}
@@ -395,7 +403,7 @@ class PregelRunner:
             if self.checkpoint_dir and self.checkpoint_every and (
                 step % self.checkpoint_every == 0
             ):
-                self._write_checkpoint(state, step, metrics)
+                self._write_checkpoint(state, step, metrics, num_partitions)
                 last_ckpt_step = step
 
             if converged:
@@ -404,7 +412,7 @@ class PregelRunner:
         # a run that made no superstep (e.g. a resume with 0 steps left)
         # leaves the committed snapshot and its history as they were
         if self.checkpoint_dir and metrics and last_ckpt_step != step:
-            self._write_checkpoint(state, step, metrics)
+            self._write_checkpoint(state, step, metrics, num_partitions)
         return PregelResult(
             state=state, supersteps=step - start_superstep, converged=converged,
             metrics=metrics,
@@ -413,7 +421,11 @@ class PregelRunner:
     # ----------------------------------------------------------- checkpoint
 
     def _write_checkpoint(
-        self, state: DataFrame, step: int, metrics: list[SuperstepMetrics]
+        self,
+        state: DataFrame,
+        step: int,
+        metrics: list[SuperstepMetrics],
+        num_partitions: int,
     ) -> None:
         """Durable snapshot + manifest (replaces the master's verticesValue
         map, Master.go:28, and MASTER_SYNC replication, Master.go:810-821).
@@ -436,7 +448,7 @@ class PregelRunner:
             "algorithm": self.spec.name,
             "params": self.spec.params,
             "superstep": step,
-            "num_partitions": self.num_partitions,
+            "num_partitions": num_partitions,
             "static_cols": list(self.spec.static_cols),
             "partition_lineage": lineage,
             "counters": metrics[-1].to_dict() if metrics else {},
@@ -488,14 +500,18 @@ class PregelRunner:
                 f"checkpoint at {self.checkpoint_dir!r} was written by a "
                 f"different spec: manifest has {got}, runner has {want}"
             )
+        runner = self
         if self.num_partitions is None:
             # adopt the snapshot's layout — the adaptive sizing already
-            # ran (and was recorded) when the checkpoint was written
-            self.num_partitions = int(manifest["num_partitions"])
+            # ran (and was recorded) when the checkpoint was written.  A
+            # copy pinned to it runs the rest, so this runner keeps the
+            # caller's setting.
+            runner = copy.copy(self)
+            runner.num_partitions = int(manifest["num_partitions"])
         # run()'s first barrier lays the snapshot out by hash(id), inside
         # the loop's AQE-off scope
         path = os.path.join(self.checkpoint_dir, f"step={step:06d}", "state")
-        return self.run(
+        return runner.run(
             edges, state=self.spark.read.parquet(path), start_superstep=step,
             max_supersteps=max_supersteps,
         )

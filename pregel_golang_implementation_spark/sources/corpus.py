@@ -2,7 +2,8 @@
 
 Input table: (repo: string, path: string, commit: string, lang: string,
 content: string).  Edges are import/include references between files,
-keyed by repo+path, extracted with a VECTORIZED Arrow/pandas UDF (no
+keyed by repo+path, extracted with a JVM regex (regexp_extract_all +
+explode), so the corpus → graph path starts no Python worker (no
 per-row Python — input_hint).  Per-row invariant: sha2(content, 256)
 equality against the recorded scan (enforced JVM-side, zero Python).
 
@@ -17,10 +18,8 @@ from __future__ import annotations
 
 import hashlib
 import random
-import re
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -33,9 +32,6 @@ CORPUS_SCHEMA = T.StructType(
         T.StructField("content", T.StringType(), False),
     ]
 )
-
-# module-style import target: "import pkg.mod_3" / "from pkg.mod_3 import x"
-_IMPORT_RE = re.compile(r"^\s*(?:from|import)\s+([A-Za-z_][\w\.]*)", re.MULTILINE)
 
 
 # ----------------------------------------------------------- synthetic gen
@@ -111,28 +107,30 @@ def verify_content_sha256(corpus: DataFrame, scan_manifest: DataFrame) -> DataFr
 
 # --------------------------------------------------------- edge extraction
 
-def _extract_imports(batch_iter):
-    """mapInPandas worker: regex over Arrow batches of content (vectorized
-    TRANSPORT — the escape hatch the input_hint allows; one Arrow batch
-    per round trip, never per-row serialization).
+# module-style import target: "import pkg.mod_3" / "from pkg.mod_3 import x".
+# Java regex flags that give Python ``re.MULTILINE`` semantics on str:
+#   m  ^ matches at the start of every line;
+#   d  only \n ends a line (Java also breaks at a lone \r, U+0085 and
+#      U+2028 without it — Python does not);
+#   U  \w and \s are Unicode-aware, as Python's are on str (Java's are
+#      ASCII-only without it).
+# Two known divergences from Python remain: Java does not treat
+# \x1c-\x1f as whitespace, and Java's Unicode \w accepts combining marks
+# inside a name (Python's identifier grammar allows them too).
+# tests/test_corpus.py pins the rest against ``re.findall``.
+IMPORT_PATTERN = r"(?mdU)^\s*(?:from|import)\s+([A-Za-z_][\w\.]*)"
 
-    Inside the batch, a compiled-regex ``findall`` loop over rows is the
-    MEASURED fast path: ``Series.str.extractall`` looks vectorized but
-    pandas string regex ops still iterate rows in Python AND pay
-    MultiIndex + match-frame construction on top — A/B at 1M files /
-    3M matches (local[16], steady state): extractall 1.02s vs this loop
-    0.58s (~1.8× in extractall's DISfavor; first-run gap wider).  Keep
-    the loop; the regex object is compiled once per executor."""
-    for pdf in batch_iter:
-        out_repo, out_path, out_mod = [], [], []
-        for repo, path, content in zip(pdf["repo"], pdf["path"], pdf["content"]):
-            for m in _IMPORT_RE.findall(content):
-                out_repo.append(repo)
-                out_path.append(path)
-                out_mod.append(m)
-        yield pd.DataFrame(
-            {"src_repo": out_repo, "src_path": out_path, "dst_module": out_mod}
-        )
+
+def _import_refs(corpus: DataFrame) -> DataFrame:
+    """(src_repo, src_path, dst_module): one row per import statement,
+    extracted by a JVM regex — no Python worker."""
+    return corpus.select(
+        F.col("repo").alias("src_repo"),
+        F.col("path").alias("src_path"),
+        F.explode(
+            F.regexp_extract_all("content", F.lit(IMPORT_PATTERN), F.lit(1))
+        ).alias("dst_module"),
+    )
 
 
 def extract_import_edges(corpus: DataFrame) -> DataFrame:
@@ -140,10 +138,7 @@ def extract_import_edges(corpus: DataFrame) -> DataFrame:
     dst_path), resolving module names against the corpus's own file list
     within the same repo.  Unresolvable imports (stdlib/third-party) drop
     out via the inner join — exactly the ground-truth edge set."""
-    refs = corpus.select("repo", "path", "content").mapInPandas(
-        _extract_imports,
-        schema="src_repo string, src_path string, dst_module string",
-    )
+    refs = _import_refs(corpus)
     files = corpus.select(
         F.col("repo").alias("dst_repo"),
         F.col("path").alias("dst_path"),
@@ -163,57 +158,62 @@ def extract_import_edges(corpus: DataFrame) -> DataFrame:
     )
 
 
+# monotonically_increasing_id() puts the partition index in the upper 31
+# bits and the row's index within its partition in the lower 33
+_ROW_BITS = (1 << 33) - 1
+
+
 def assign_vertex_ids(corpus: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Deterministic dense long ids for (repo, path) — SURVEY.md §7 hard
-    part (d).  xxhash64 would be sparse/collision-prone at 10^12 files; a
-    global sort-based rank is deterministic and dense.
+    """Deterministic dense long ids for (repo, path), starting at 1 —
+    SURVEY.md §7 hard part (d).  xxhash64 would be sparse/collision-prone
+    at 10^12 files; the global (repo, path) rank is deterministic and
+    dense.
 
-    Scale-safe zipWithIndex pattern (NO unpartitioned window — that is a
-    single-reducer global sort, THE driver-bottleneck equivalent at 10^12
-    files):
-      1. range-partition the distinct (repo, path) keys — partition i
-         holds strictly smaller keys than partition i+1, every partition
-         sorts in parallel;
-      2. one tiny pass collects per-partition row counts (one row per
-         partition — same footprint as the checkpoint lineage);
-      3. id = cumulative offset of the partition + rank within it.
-    The result equals the global (repo, path) rank regardless of where the
-    sampled range boundaries fall, so ids are deterministic (ids start at
-    1, matching the previous row_number implementation).
-
-    The keyed frame is persisted between the two passes (re-sampling range
-    boundaries on recompute could silently shift rows between partitions,
-    desynchronizing counts from assignment), and the result is eagerly
-    materialized so the intermediate cache can be released before return.
+    Scale-safe zipWithIndex pattern in one range-partitioned pass (NO
+    global sort or unpartitioned window — a single-reducer sort is THE
+    driver-bottleneck equivalent at 10^12 files):
+      1. range-partition the (repo, path) keys — partition i holds
+         strictly smaller keys than partition i+1 — and drop duplicates
+         (range partitioning already clusters equal keys: no second
+         exchange);
+      2. sort within partitions and project spark_partition_id() plus
+         monotonically_increasing_id(), whose low 33 bits are the row's
+         index within its partition; one eager localCheckpoint stores it
+         (re-sampling range boundaries on recompute could shift rows
+         between partitions and desynchronize the counts from the rows);
+      3. one small aggregate over the checkpoint yields per-partition row
+         counts (one row per partition);
+      4. id = offset[partition] + index + 1, a projection with the
+         cumulative offsets as a literal array.
+    The result equals the global (repo, path) rank wherever the sampled
+    range boundaries fall (tests/test_round2_fixes.py
+    test_vertex_ids_partition_invariant pins this, and with it the bit
+    layout of monotonically_increasing_id).
     """
     spark = corpus.sparkSession
     n_parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     keyed = (
         corpus.select("repo", "path")
-        .distinct()
         .repartitionByRange(n_parts, "repo", "path")
+        .dropDuplicates()
         .sortWithinPartitions("repo", "path")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        int(r["_pid"]): int(r["n"])
-        for r in keyed.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(max(counts, default=-1) + 1):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy("repo", "path")
-    ids = (
-        keyed.join(F.broadcast(off_df), "_pid")
-        .withColumn("id", (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .select("repo", "path", "id")
+        .select(
+            "repo", "path",
+            F.spark_partition_id().alias("_pid"),
+            F.monotonically_increasing_id().alias("_mid"),
+        )
         .localCheckpoint(eager=True)
     )
-    keyed.unpersist()
-    return ids
+    counts = dict(keyed.groupBy("_pid").count().collect())
+    offsets, acc = [], 0
+    for pid in range(n_parts):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    offset = F.lit(offsets).cast("array<bigint>")[F.col("_pid")]
+    return keyed.select(
+        "repo", "path",
+        (offset + F.col("_mid").bitwiseAND(F.lit(_ROW_BITS)) + 1).alias("id"),
+    )
 
 
 def corpus_edge_table(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -89,16 +89,23 @@ def test_vertex_ids_partition_invariant(spark):
     assert [a[k] for k in keys] == list(range(1, len(keys) + 1))
 
 
-def test_vertex_ids_plan_has_no_global_sort(spark):
-    """The id-assignment window must be partitioned (parallel), never a
-    single-reducer global sort."""
+def test_vertex_ids_plan_has_no_global_sort(spark, executed_plans):
+    """Id assignment must stay parallel, never a single-reducer global
+    sort: no plan it executes has a Window or a single-partition
+    exchange."""
     corpus, _, _ = synthetic_corpus(spark, num_repos=2, files_per_repo=5, seed=1)
-    ids = assign_vertex_ids(corpus, 4)
-    # eager materialization already proves it runs; the contract is the
-    # values — checked above — plus: no unpartitioned window in the code
-    # path (the window is over _pid).  Sanity: ids dense from 1.
-    vals = sorted(r["id"] for r in ids.collect())
+    ids = []
+    plans = executed_plans(
+        lambda: ids.extend(r["id"] for r in assign_vertex_ids(corpus, 4).collect())
+    )
+    # the contract is the values — checked above — plus the plans.
+    # Sanity: ids dense from 1.
+    vals = sorted(ids)
     assert vals == list(range(1, len(vals) + 1))
+    assert len(plans) >= 2
+    for plan in plans:
+        assert "Window" not in plan
+        assert "SinglePartition" not in plan
 
 
 # ------------------------------------------------- jaccard pair pushdown

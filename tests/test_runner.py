@@ -1,7 +1,8 @@
 """PregelRunner loop contract: one barrier (one Spark job) per superstep,
 exact per-step metrics against hand-computed counts, the ``max_supersteps``
 cap (including 0) on both ``run`` and ``resume``, the caller's session
-settings restored, dead barrier blocks released, and the message combine:
+settings restored, dead barrier blocks released, the partition count
+resolved per run, and the message combine:
 hand-computed inboxes and the map-side partial aggregate that absorbs
 inbox skew."""
 
@@ -167,6 +168,34 @@ def test_resume_with_no_steps_left_runs_no_superstep(spark, tmp_path):
     assert _values(res) == _values(first)
     step, manifest = PregelRunner.latest_checkpoint(ck)
     assert step == 2 and len(manifest["history"]) == 2
+
+
+def test_reused_runner_sizes_each_graph(spark, monkeypatch):
+    """With ``num_partitions=None`` every run sizes its own layout: a
+    runner reused on a smaller graph does not keep the first graph's
+    partition count, and its ``num_partitions`` stays what the caller
+    set."""
+    monkeypatch.setattr(PregelRunner, "EDGES_PER_PARTITION", 10)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        runner = PregelRunner(spark, cc_spec())
+
+        def chain(n):
+            return symmetrize(
+                spark.createDataFrame(
+                    [(i, i + 1) for i in range(n)], "src long, dst long"
+                )
+            )
+
+        big = runner.run(chain(100))  # 200 directed edges -> 20 partitions
+        small = runner.run(chain(20))  # 40 directed edges -> MIN_PARTITIONS
+    finally:
+        spark.conf.set(key, saved)
+    assert big.state.rdd.getNumPartitions() == 20
+    assert small.state.rdd.getNumPartitions() == 8
+    assert runner.num_partitions is None
 
 
 def _pagerank_inputs(spark):

@@ -7,9 +7,11 @@ Usage: python tools/check_contract.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import pandas as pd
@@ -35,8 +37,6 @@ def main() -> int:
     con = duckdb.connect()
     # bounded spill on tmpfs — an accidental CTE-inlining blow-up must
     # fail fast, not fill the root disk (observed: 70 GB in ./.tmp)
-    import os
-
     if os.path.isdir("/dev/shm"):
         con.sql("SET temp_directory='/dev/shm/duckdb_contract_tmp'")
         con.sql("SET max_temp_directory_size='20GiB'")
