@@ -11,9 +11,9 @@ Graph derivation (shared Spark/SQL): the bipartite order↔part graph from
 lineitem — src=l_orderkey, dst=10_000_000+l_partkey,
 weight=min(l_linenumber) — plus its symmetrized undirected form.
 
-Floats are rounded identically on both sides (rank→6dp, cosine→5dp) so
-the driver's order-insensitive value-hash is stable under FP-sum
-reordering; integer-valued results are exact.
+Floats are rounded identically on both sides (e.g. rank→6dp) so the
+driver's order-insensitive value-hash is stable under FP-sum reordering;
+integer-valued results are exact.
 """
 
 from __future__ import annotations
@@ -54,15 +54,6 @@ from pregel_golang_implementation_spark.operators.pagerank import (
 )
 from pregel_golang_implementation_spark.operators.kcore import kcore_peel
 from pregel_golang_implementation_spark.operators.ktruss import ktruss_peel
-from pregel_golang_implementation_spark.operators.similarity import (
-    ann_candidates,
-    ann_topk,
-    cosine_topk,
-    embedding_near_dups,
-    ivf_topk,
-    knn_graph,
-    srp_buckets,
-)
 from pregel_golang_implementation_spark.operators.events import funnel, last_touch
 from pregel_golang_implementation_spark.operators.graph_metrics import (
     degree_assortativity,
@@ -89,19 +80,11 @@ from pregel_golang_implementation_spark.operators.betweenness import (
 )
 from pregel_golang_implementation_spark.operators.sketches import hll_distinct
 from pregel_golang_implementation_spark.operators.mis import mis_spec, mis_status
-from pregel_golang_implementation_spark.operators.quantization import pq_codes
 from pregel_golang_implementation_spark.operators.sampling import (
     hash_sample,
     mix_corpus,
     stratified_sample,
     weighted_sample_topk,
-)
-from pregel_golang_implementation_spark.operators.terms import (
-    bm25_topk,
-    normalize_text,
-    repeated_spans,
-    tfidf_top_terms,
-    top_ngrams,
 )
 from pregel_golang_implementation_spark.operators.sssp import sssp_spec
 from pregel_golang_implementation_spark.operators.triangles import _triangle_rows
@@ -121,28 +104,17 @@ CC_ITERS = 6
 SSSP_ITERS = 4
 LPA_ITERS = 2
 LPA4_ITERS = 4
-KNN_QUERY_IDS = [0, 1, 2, 3, 4]
-KNN_K = 5
 RESOLVE_ITERS = 6
 RESOLVE_THRESHOLD = 0.5
 KCORE_K = 5
 KCORE_ROUNDS = 3
-IVF_CENTROIDS = 8
-IVF_NPROBE = 2
-TFIDF_K = 3
-TOP_NGRAMS_K = 20
 STRAT_FRACTIONS = {"src0": 0.8, "src1": 0.5, "src2": 0.25}
 STRAT_DEFAULT = 0.1
 FUNNEL_STEPS = ("view", "click", "purchase")
-PQ_M = 4
-PQ_KSUB = 4
-EMB_DIM = 64
 MIS_ITERS = 4
 MIS_OUT = float(2**48)
 LP_K = 3
 LP_MAX_MID_DEG = 40
-SPAN_N = 6
-SPAN_MIN_DOCS = 2
 HITS_ITERS = 3
 COLOR_ROUNDS = 3
 COLOR_INNER = 3
@@ -158,26 +130,18 @@ BETWEEN_PIVOTS = 2
 BETWEEN_HOPS = 4
 WSAMPLE_K = 50
 SPREAD_ROUNDS = 4
-BM25_TERMS = ("spark", "window", "merge")
-BM25_K = 10
 KTRUSS_K = 3
 KTRUSS_ROUNDS = 3
 PL_DMIN = 2
 INC_PR_PRIOR_ITERS = 3
 INC_PR_ITERS = 3
 PQUAL_PARTS = 8
-BM25_K1 = 1.2
-BM25_B = 0.75
 
 
 # --------------------------------------------------------------- helpers
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _runner(spark: SparkSession, spec) -> PregelRunner:
@@ -442,17 +406,6 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
 
 
-def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = cosine_topk(_emb(spark, sf_dir), KNN_QUERY_IDS, k=KNN_K, round_to=5)
-    return out.select(
-        "query_id", "neighbor_id", "sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-def q_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return srp_buckets(_emb(spark, sf_dir), bits=8)
-
-
 def q_jaccard_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-candidates-then-verify — the pair predicate sits BELOW the
     shingle self-join (the scale path; all-pairs never materializes)."""
@@ -476,22 +429,6 @@ def q_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "cluster_id",
         F.col("is_canonical").cast("long").alias("is_canonical"),
-    )
-
-
-def q_ann_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ann_candidates(_emb(spark, sf_dir), bits=8)
-
-
-ANN_BITS = 6
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate top-k: exact cosine within the query's SRP
-    bucket only (recall < 1 by design; the 2^bits-smaller scale path)."""
-    out = ann_topk(_emb(spark, sf_dir), KNN_QUERY_IDS, k=KNN_K, bits=ANN_BITS, round_to=5)
-    return out.select(
-        "query_id", "neighbor_id", "sim", F.col("rank").cast("long").alias("rank")
     )
 
 
@@ -589,25 +526,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup: SRP candidates verified with exact
-    cosine ≥ threshold (never corpus × corpus)."""
-    return embedding_near_dups(
-        _emb(spark, sf_dir), threshold=0.2, bits=8, round_to=5
-    )
-
-
-KNN_GRAPH_K = 3
-
-
-def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate kNN graph: per-vector top-k among SRP bucket mates."""
-    out = knn_graph(_emb(spark, sf_dir), k=KNN_GRAPH_K, bits=ANN_BITS, round_to=5)
-    return out.select(
-        "vec_id", "neighbor_id", "sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling over the undirected order↔part graph: vertices
     still alive after KCORE_ROUNDS rounds of remove-degree-<-k, with the
@@ -615,23 +533,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational form of the classic Pregel peel, Vertex.go:68-88 shape)."""
     und = symmetrize(edges_from_lineitem(spark, sf_dir))
     return kcore_peel(und, k=KCORE_K, rounds=KCORE_ROUNDS)
-
-
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k: deterministic md5-sampled centroid codebook,
-    shuffle-free cell assignment (driver-inlined codebook literals, the
-    SRP-hyperplane trick), nprobe-cell candidates, exact cosine re-rank."""
-    out = ivf_topk(
-        _emb(spark, sf_dir),
-        KNN_QUERY_IDS,
-        k=KNN_K,
-        num_centroids=IVF_CENTROIDS,
-        nprobe=IVF_NPROBE,
-        round_to=5,
-    )
-    return out.select(
-        "query_id", "neighbor_id", "sim", F.col("rank").cast("long").alias("rank")
-    )
 
 
 # --------------------------------------------------------------- contract
@@ -648,22 +549,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return res.state.select("id", F.col("value").alias("rank")).orderBy(
         F.desc("rank"), F.asc("id")
     )
-
-
-def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 TF-IDF terms (keyword extraction)."""
-    return tfidf_top_terms(_docs(spark, sf_dir), k=TFIDF_K)
-
-
-def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus heavy hitters: 20 most frequent word bigrams
-    (boilerplate/contamination signatures); TakeOrdered, no global sort."""
-    return top_ngrams(_docs(spark, sf_dir), k=TOP_NGRAMS_K)
-
-
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-form hashes for formatting-invariant exact dedup."""
-    return normalize_text(_docs(spark, sf_dir))
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -687,12 +572,6 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degree_assortativity(edges_from_lineitem(spark, sf_dir))
 
 
-def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization codes (4 subspaces × 4 centroids) — the
-    embedding-compression encode pass, shuffle-free."""
-    return pq_codes(_emb(spark, sf_dir), m=PQ_M, ksub=PQ_KSUB, dim=EMB_DIM)
-
-
 def q_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Luby maximal-independent-set after 4 synchronous rounds — the
     fourth distinct vertex program on the unchanged runner (md5
@@ -708,13 +587,6 @@ def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree 40 (never silently — see operators/link_prediction.py)."""
     und = symmetrize(edges_from_lineitem(spark, sf_dir))
     return common_neighbor_topk(und, k=LP_K, max_middle_degree=LP_MAX_MID_DEG)
-
-
-def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document exact 6-token spans (fixed-window exact-substring
-    contamination detection; map-side combine absorbs the Zipf span
-    distribution)."""
-    return repeated_spans(_docs(spark, sf_dir), n=SPAN_N, min_docs=SPAN_MIN_DOCS)
 
 
 def q_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -918,12 +790,6 @@ def q_hop_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w
 
 
-def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval for a fixed 3-term query — the query
-    surface TF-IDF features exist for (operators/terms.bm25_topk)."""
-    return bm25_topk(_docs(spark, sf_dir), list(BM25_TERMS), k=BM25_K)
-
-
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient on the co-purchase graph:
     2·triangles(v) / (deg(v)·(deg(v)−1)) for deg ≥ 2 — composes the
@@ -1052,20 +918,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triangle_count": q_triangles,
         "triangles_per_vertex": q_triangles_per_vertex,
         "kcore_peel_3": q_kcore,
-        "ivf_topk": q_ivf_topk,
         "dedup_exact": q_dedup_exact,
         "minhash_signatures": q_minhash,
         "lsh_candidate_pairs": q_lsh_pairs,
         "ngram_jaccard": q_jaccard,
         "simhash16": q_simhash,
-        "embedding_knn": q_knn,
-        "srp_buckets": q_srp_buckets,
         "jaccard_candidates": q_jaccard_candidates,
         "dedup_resolve": q_dedup_resolve,
-        "ann_candidates": q_ann_candidates,
-        "ann_topk": q_ann_topk,
-        "knn_graph": q_knn_graph,
-        "embedding_near_dups": q_embedding_near_dups,
         "decontaminate": q_decontaminate,
         "event_window_stats": q_event_window_stats,
         "sessionize": q_sessionize,
@@ -1074,16 +933,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank_top10": q_pagerank_top10,
         "personalized_pagerank": q_ppr,
         "pagerank_weighted": q_pagerank_weighted,
-        "tfidf_top3": q_tfidf,
-        "top_bigrams": q_top_bigrams,
-        "text_normalize": q_text_normalize,
         "stratified_sample": q_stratified_sample,
         "event_funnel": q_event_funnel,
         "assortativity": q_assortativity,
-        "pq_codes": q_pq_codes,
         "mis_4iter": q_mis,
         "link_predict": q_link_predict,
-        "repeated_spans": q_repeated_spans,
         "last_touch": q_last_touch,
         "hits_3iter": q_hits,
         "greedy_coloring": q_coloring,
@@ -1100,7 +954,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "square_count": q_square_count,
         "label_spread": q_label_spread,
         "clustering_coeff": q_clustering_coeff,
-        "bm25_topk": q_bm25,
         "hop_distribution": q_hop_distribution,
         "ktruss_3": q_ktruss,
         "powerlaw_alpha": q_powerlaw_alpha,
@@ -1429,45 +1282,6 @@ def _dedup_resolve_sql(iters: int, threshold: float) -> str:
     )
 
 
-def _tfidf_sql(k: int) -> str:
-    """Twin of q_tfidf: whitespace tokens, tf per (doc, term), smoothed
-    idf = ln((N+1)/(df+1)) + 1, 6dp-rounded BEFORE ranking (ties →
-    term asc), top-k per document."""
-    return (
-        "WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS term FROM documents), "
-        "tk AS (SELECT doc_id, term FROM tok WHERE term <> ''), "
-        "tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tk GROUP BY 1, 2), "
-        "df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1), "
-        "n AS (SELECT COUNT(*) AS n_docs FROM documents), "
-        "sc AS (SELECT tf.doc_id, tf.term, tf.tf, "
-        "ROUND(tf.tf * (ln((n.n_docs + 1)::DOUBLE / (df.df + 1)) + 1.0), 6) AS score "
-        "FROM tf JOIN df USING (term) CROSS JOIN n), "
-        "r AS (SELECT doc_id, term, score, ROW_NUMBER() OVER "
-        "(PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank FROM sc) "
-        f"SELECT doc_id, term, score, rank::BIGINT AS rank FROM r WHERE rank <= {k}"
-    )
-
-
-def _top_bigrams_sql(k: int) -> str:
-    return (
-        "WITH toked AS (SELECT doc_id, "
-        "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '') AS toks FROM documents), "
-        "idx AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM toked), "
-        "g AS (SELECT toks[i] || ' ' || toks[i + 1] AS ngram FROM idx), "
-        "c AS (SELECT ngram, COUNT(*) AS cnt FROM g GROUP BY 1), "
-        "r AS (SELECT ngram, cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, ngram ASC) AS rank FROM c) "
-        f"SELECT ngram, cnt, rank::BIGINT AS rank FROM r WHERE rank <= {k}"
-    )
-
-
-def _text_normalize_sql() -> str:
-    return (
-        "SELECT doc_id, md5(norm) AS norm_hash, length(norm)::BIGINT AS n_norm_chars "
-        "FROM (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm FROM documents)"
-    )
-
-
 def _stratified_sample_sql() -> str:
     from pregel_golang_implementation_spark.operators.sampling import (
         _strat_threshold,
@@ -1533,36 +1347,6 @@ def _assortativity_sql() -> str:
         "(sqrt((n * sxx - sx * sx)::DOUBLE) * sqrt((n * syy - sy * sy)::DOUBLE)), 6) "
         "AS assortativity FROM s"
     )
-
-
-def _pq_codes_sql(m: int, ksub: int, dim: int) -> str:
-    """Twin of q_pq_codes: md5-ordered sample codebook (row_number - 1 =
-    centroid code), per-subspace squared-L2 in the same left-fold index
-    order as the engine's F.aggregate, 6dp-rounded before the argmin,
-    ties to the smaller code."""
-    sub = dim // m
-    parts = [
-        "cent AS (SELECT ROW_NUMBER() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 "
-        f"AS cidx, embedding AS cv FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {ksub})",
-        "em AS (SELECT vec_id, embedding AS ev FROM embeddings)",
-    ]
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        dist = (
-            "ROUND(list_aggregate([(ev[i]::DOUBLE - cv[i]::DOUBLE) * "
-            f"(ev[i]::DOUBLE - cv[i]::DOUBLE) for i in generate_series({lo}, {hi})], 'sum'), 6)"
-        )
-        parts.append(
-            f"d{j} AS (SELECT e.vec_id, c.cidx, {dist} AS dist FROM em e CROSS JOIN cent c)"
-        )
-        parts.append(
-            f"a{j} AS (SELECT vec_id, CAST(cidx AS BIGINT) AS code_{j} FROM "
-            f"(SELECT vec_id, cidx, ROW_NUMBER() OVER (PARTITION BY vec_id "
-            f"ORDER BY dist ASC, cidx ASC) AS rn FROM d{j}) WHERE rn = 1)"
-        )
-    joins = " ".join(f"JOIN a{j} USING (vec_id)" for j in range(1, m))
-    codes = ", ".join(f"code_{j}" for j in range(m))
-    return "WITH " + ", ".join(parts) + f" SELECT vec_id, {codes} FROM a0 {joins}"
 
 
 def _hash48_sql(h: str) -> str:
@@ -1749,18 +1533,6 @@ def _link_predict_sql(k: int, cap: int) -> str:
         "r AS (SELECT id, candidate, common, ROW_NUMBER() OVER "
         "(PARTITION BY id ORDER BY common DESC, candidate ASC) AS rank FROM mr) "
         f"SELECT id, candidate, common, rank::BIGINT AS rank FROM r WHERE rank <= {k}"
-    )
-
-
-def _repeated_spans_sql(n: int, min_docs: int) -> str:
-    return (
-        "WITH toked AS (SELECT doc_id, "
-        "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '') AS toks FROM documents), "
-        f"idx AS (SELECT doc_id, toks, unnest(range(1, len(toks) - {n} + 2)) AS i FROM toked), "
-        f"sp AS (SELECT doc_id, array_to_string(toks[i:i+{n}-1], ' ') AS span FROM idx), "
-        "g AS (SELECT span, COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS total_occurrences, "
-        "MIN(doc_id) AS min_doc_id FROM sp GROUP BY 1) "
-        f"SELECT span, n_docs, total_occurrences, min_doc_id FROM g WHERE n_docs >= {min_docs}"
     )
 
 
@@ -2145,30 +1917,6 @@ def _hop_dist_sql(pivots: int, hops: int) -> str:
     )
 
 
-def _bm25_sql(terms: tuple[str, ...], k: int, k1: float, b: float) -> str:
-    """Twin of q_bm25: same tokenization as _tfidf_sql, Lucene-style
-    idf, identical float-literal constants (Python reprs) and operation
-    order; avgdl is the single exact SUM/COUNT division."""
-    tl = ", ".join(f"'{t}'" for t in terms)
-    return (
-        "WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) "
-        "AS term FROM documents), "
-        "tk AS (SELECT doc_id, term FROM tok WHERE term <> ''), "
-        "dl AS (SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY 1), "
-        "nn AS (SELECT COUNT(*)::DOUBLE AS n, SUM(dl)::DOUBLE AS s FROM dl), "
-        f"tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tk "
-        f"WHERE term IN ({tl}) GROUP BY 1, 2), "
-        "df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1), "
-        "co AS (SELECT tf.doc_id, "
-        "ln(1.0 + (nn.n - df.df + 0.5) / (df.df + 0.5)) * "
-        f"(tf.tf * {k1 + 1.0!r}) / (tf.tf + {k1!r} * ({1.0 - b!r} + "
-        f"{b!r} * dl.dl / (nn.s / nn.n))) AS c "
-        "FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN nn), "
-        "sc AS (SELECT doc_id, ROUND(SUM(c), 6) AS score FROM co GROUP BY 1) "
-        f"SELECT doc_id, score FROM sc ORDER BY score DESC, doc_id ASC LIMIT {k}"
-    )
-
-
 def _label_spread_sql(rounds: int) -> str:
     """Twin of q_label_spread: the fixed-seed mode-adoption recurrence
     unrolled — the _lpa_sql vote/rank pattern with a CASE pinning seeds
@@ -2350,23 +2098,12 @@ def oracle_sql() -> dict[str, str]:
             f"FROM ({_SIMHASH16_SQL}) a JOIN ({_SIMHASH16_SQL}) b ON a.doc_id < b.doc_id "
             "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"
         ),
-        "embedding_knn": _knn_sql(),
-        "srp_buckets": _srp_sql(),
         "jaccard_candidates": (
             f"WITH {_BANDS}, {_CAND}, {_VERIFY} "
             "SELECT doc_a, doc_b, CAST(ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS DOUBLE) AS jaccard "
             "FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id"
         ),
         "dedup_resolve": _dedup_resolve_sql(RESOLVE_ITERS, RESOLVE_THRESHOLD),
-        "ann_candidates": (
-            "WITH bk AS (" + _srp_sql() + ") "
-            "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b FROM bk a "
-            "JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id"
-        ),
-        "ann_topk": _ann_topk_sql(),
-        "ivf_topk": _ivf_topk_sql(),
-        "knn_graph": _knn_graph_sql(),
-        "embedding_near_dups": _embedding_near_dups_sql(threshold=0.2),
         "decontaminate": (
             f"WITH {_SHINGLES}, "
             f"b AS (SELECT doc_id AS benchmark_id, shingle FROM sh WHERE doc_id < {DECONTAM_BENCH_MAX_ID}), "
@@ -2424,16 +2161,11 @@ def oracle_sql() -> dict[str, str]:
         ),
         "personalized_pagerank": _ppr_sql(PR_ITERS),
         "pagerank_weighted": _pagerank_sql(PR_ITERS, weighted=True),
-        "tfidf_top3": _tfidf_sql(TFIDF_K),
-        "top_bigrams": _top_bigrams_sql(TOP_NGRAMS_K),
-        "text_normalize": _text_normalize_sql(),
         "stratified_sample": _stratified_sample_sql(),
         "event_funnel": _funnel_sql(FUNNEL_STEPS),
         "assortativity": _assortativity_sql(),
-        "pq_codes": _pq_codes_sql(PQ_M, PQ_KSUB, EMB_DIM),
         "mis_4iter": _materialize(_mis_sql(MIS_ITERS)),
         "link_predict": _materialize(_link_predict_sql(LP_K, LP_MAX_MID_DEG)),
-        "repeated_spans": _repeated_spans_sql(SPAN_N, SPAN_MIN_DOCS),
         "last_touch": _last_touch_sql(),
         "hits_3iter": _materialize(_hits_sql(HITS_ITERS)),
         "greedy_coloring": _materialize(_coloring_sql(COLOR_ROUNDS, COLOR_INNER)),
@@ -2455,7 +2187,6 @@ def oracle_sql() -> dict[str, str]:
         "weighted_sample": _weighted_sample_sql(WSAMPLE_K),
         "square_count": _materialize(_square_count_sql(LP_MAX_MID_DEG)),
         "label_spread": _materialize(_label_spread_sql(SPREAD_ROUNDS)),
-        "bm25_topk": _materialize(_bm25_sql(BM25_TERMS, BM25_K, BM25_K1, BM25_B)),
         "hop_distribution": _materialize(
             _hop_dist_sql(HARMONIC_PIVOTS, HARMONIC_HOPS)
         ),
@@ -2515,80 +2246,6 @@ def _corpus_mix_sql() -> str:
     )
 
 
-def _embedding_near_dups_sql(threshold: float) -> str:
-    dot = "list_aggregate([va[i]::DOUBLE * vb[i]::DOUBLE for i in generate_series(1, len(va))], 'sum')"
-    na = "sqrt(list_aggregate([va[i]::DOUBLE * va[i]::DOUBLE for i in generate_series(1, len(va))], 'sum'))"
-    nb = "sqrt(list_aggregate([vb[i]::DOUBLE * vb[i]::DOUBLE for i in generate_series(1, len(vb))], 'sum'))"
-    return (
-        "WITH bk AS (" + _srp_sql() + "), "
-        "cand AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b FROM bk a "
-        "JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), "
-        "pairs AS (SELECT vec_a, vec_b, ea.embedding AS va, eb.embedding AS vb "
-        "FROM cand JOIN embeddings ea ON ea.vec_id = vec_a "
-        "JOIN embeddings eb ON eb.vec_id = vec_b), "
-        "sim AS (SELECT vec_a, vec_b, "
-        f"CAST(ROUND({dot} / ({na} * {nb}), 5) AS DOUBLE) AS sim FROM pairs) "
-        f"SELECT vec_a, vec_b, sim FROM sim WHERE sim >= {threshold}"
-    )
-
-
-def _knn_sql() -> str:
-    ids = ", ".join(str(i) for i in KNN_QUERY_IDS)
-    dot = "list_aggregate([qv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum')"
-    nq = "sqrt(list_aggregate([qv[i]::DOUBLE * qv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum'))"
-    nc = "sqrt(list_aggregate([cv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(cv))], 'sum'))"
-    return (
-        f"WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN ({ids})), "
-        "c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings), "
-        "scored AS (SELECT query_id, neighbor_id, "
-        f"CAST(ROUND({dot} / ({nq} * {nc}), 5) AS DOUBLE) AS sim FROM q, c "
-        "WHERE query_id <> neighbor_id), "
-        "ranked AS (SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER "
-        "(PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank FROM scored) "
-        f"SELECT query_id, neighbor_id, sim, rank::BIGINT AS rank FROM ranked WHERE rank <= {KNN_K}"
-    )
-
-
-def _ann_topk_sql(bits: int = ANN_BITS) -> str:
-    ids = ", ".join(str(i) for i in KNN_QUERY_IDS)
-    dot = "list_aggregate([qv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum')"
-    nq = "sqrt(list_aggregate([qv[i]::DOUBLE * qv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum'))"
-    nc = "sqrt(list_aggregate([cv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(cv))], 'sum'))"
-    return (
-        "WITH bk AS (" + _srp_sql(bits) + "), "
-        f"q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, bk.bucket "
-        f"FROM embeddings e JOIN bk ON bk.vec_id = e.vec_id WHERE e.vec_id IN ({ids})), "
-        "c AS (SELECT e.vec_id AS neighbor_id, e.embedding AS cv, bk.bucket "
-        "FROM embeddings e JOIN bk ON bk.vec_id = e.vec_id), "
-        "scored AS (SELECT query_id, neighbor_id, "
-        f"CAST(ROUND({dot} / ({nq} * {nc}), 5) AS DOUBLE) AS sim "
-        "FROM q JOIN c ON q.bucket = c.bucket WHERE query_id <> neighbor_id), "
-        "ranked AS (SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER "
-        "(PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank FROM scored) "
-        f"SELECT query_id, neighbor_id, sim, rank::BIGINT AS rank FROM ranked WHERE rank <= {KNN_K}"
-    )
-
-
-def _knn_graph_sql(bits: int = ANN_BITS, k: int = KNN_GRAPH_K) -> str:
-    dot = "list_aggregate([qv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum')"
-    nq = "sqrt(list_aggregate([qv[i]::DOUBLE * qv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum'))"
-    nc = "sqrt(list_aggregate([cv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(cv))], 'sum'))"
-    return (
-        "WITH bk AS (" + _srp_sql(bits) + "), "
-        "a AS (SELECT e.vec_id AS qid, e.embedding AS qv, bk.bucket "
-        "FROM embeddings e JOIN bk ON bk.vec_id = e.vec_id), "
-        "b AS (SELECT e.vec_id AS nid, e.embedding AS cv, bk.bucket "
-        "FROM embeddings e JOIN bk ON bk.vec_id = e.vec_id), "
-        "scored AS (SELECT qid, nid, "
-        f"CAST(ROUND({dot} / ({nq} * {nc}), 5) AS DOUBLE) AS sim "
-        "FROM a JOIN b ON a.bucket = b.bucket WHERE qid <> nid), "
-        "ranked AS (SELECT qid, nid, sim, ROW_NUMBER() OVER "
-        "(PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rank FROM scored) "
-        f"SELECT qid AS vec_id, nid AS neighbor_id, sim, rank::BIGINT AS rank "
-        f"FROM ranked WHERE rank <= {k}"
-    )
-
-
 def _kcore_sql(k: int, rounds: int) -> str:
     """Twin of q_kcore: the peel recurrence unrolled — round r keeps
     vertices whose degree in the subgraph induced by round r-1's
@@ -2614,49 +2271,3 @@ def _kcore_sql(k: int, rounds: int) -> str:
     )
 
 
-def _ivf_topk_sql(c: int = IVF_CENTROIDS, nprobe: int = IVF_NPROBE) -> str:
-    """Twin of q_ivf_topk: centroids = the c vectors with smallest
-    md5(vec_id) (ties by id); cell = argmax of 6dp-rounded cosine with
-    NULL→-2.0 sentinel, ties to the smallest centroid id; queries probe
-    their nprobe nearest cells; exact 5dp cosine re-rank within."""
-    ids = ", ".join(str(i) for i in KNN_QUERY_IDS)
-    dotc = "list_aggregate([ev[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(ev))], 'sum')"
-    ne_ = "sqrt(list_aggregate([ev[i]::DOUBLE * ev[i]::DOUBLE for i in generate_series(1, len(ev))], 'sum'))"
-    nc_ = "sqrt(list_aggregate([cv[i]::DOUBLE * cv[i]::DOUBLE for i in generate_series(1, len(cv))], 'sum'))"
-    dot = "list_aggregate([qv[i]::DOUBLE * nv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum')"
-    nq = "sqrt(list_aggregate([qv[i]::DOUBLE * qv[i]::DOUBLE for i in generate_series(1, len(qv))], 'sum'))"
-    nn = "sqrt(list_aggregate([nv[i]::DOUBLE * nv[i]::DOUBLE for i in generate_series(1, len(nv))], 'sum'))"
-    return (
-        "WITH cent AS (SELECT vec_id AS centroid_id, embedding AS cv "
-        f"FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {c}), "
-        "asgn AS (SELECT e.vec_id, cent.centroid_id, "
-        f"COALESCE(ROUND({dotc} / ({ne_} * {nc_}), 6), -2.0) AS csim "
-        "FROM (SELECT vec_id, embedding AS ev FROM embeddings) e CROSS JOIN cent), "
-        "cellr AS (SELECT vec_id, centroid_id, ROW_NUMBER() OVER "
-        "(PARTITION BY vec_id ORDER BY csim DESC, centroid_id ASC) AS rn FROM asgn), "
-        "cells AS (SELECT vec_id, centroid_id AS cell FROM cellr WHERE rn = 1), "
-        f"probes AS (SELECT vec_id AS query_id, centroid_id AS cell FROM cellr "
-        f"WHERE rn <= {nprobe} AND vec_id IN ({ids})), "
-        "scored AS (SELECT p.query_id, s.vec_id AS neighbor_id, "
-        f"CAST(ROUND({dot} / ({nq} * {nn}), 5) AS DOUBLE) AS sim "
-        "FROM probes p JOIN cells s ON s.cell = p.cell "
-        "JOIN (SELECT vec_id, embedding AS qv FROM embeddings) qe ON qe.vec_id = p.query_id "
-        "JOIN (SELECT vec_id, embedding AS nv FROM embeddings) nb ON nb.vec_id = s.vec_id "
-        "WHERE p.query_id <> s.vec_id), "
-        "ranked AS (SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER "
-        "(PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank FROM scored) "
-        f"SELECT query_id, neighbor_id, sim, rank::BIGINT AS rank FROM ranked WHERE rank <= {KNN_K}"
-    )
-
-
-def _srp_sql(bits: int = 8) -> str:
-    return (
-        "WITH d AS (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings), "
-        "dx AS (SELECT vec_id, i - 1 AS dim, embedding[i]::DOUBLE AS x FROM d), "
-        f"db AS (SELECT vec_id, dim, x, unnest(generate_series(0, {bits - 1})) AS b FROM dx), "
-        "proj AS (SELECT vec_id, b, x * (CASE WHEN substr(md5(b::VARCHAR || '_' || dim::VARCHAR), 1, 1) "
-        "IN ('0','1','2','3','4','5','6','7') THEN -1.0 ELSE 1.0 END) AS wx FROM db), "
-        "s AS (SELECT vec_id, b, ROUND(SUM(wx), 6) AS s FROM proj GROUP BY 1, 2) "
-        "SELECT vec_id, CAST(SUM(CASE WHEN s >= 0 THEN POW(2, b) ELSE 0 END) AS BIGINT) AS bucket "
-        "FROM s GROUP BY 1"
-    )

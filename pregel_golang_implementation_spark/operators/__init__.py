@@ -28,14 +28,6 @@ from pregel_golang_implementation_spark.operators.dedup import (
     oversized_buckets,
     simhash,
 )
-from pregel_golang_implementation_spark.operators.similarity import (
-    ann_candidates,
-    ann_topk,
-    cosine_topk,
-    embedding_near_dups,
-    oversized_srp_buckets,
-    srp_buckets,
-)
 
 __all__ = [
     "dedup_corpus",
@@ -46,12 +38,6 @@ __all__ = [
     "ngram_jaccard",
     "oversized_buckets",
     "simhash",
-    "ann_candidates",
-    "ann_topk",
-    "cosine_topk",
-    "embedding_near_dups",
-    "oversized_srp_buckets",
-    "srp_buckets",
     "pagerank",
     "pagerank_spec",
     "personalized_pagerank",

@@ -5,7 +5,7 @@ rank non-adjacent vertex pairs by how many neighbors they share.  On a
 link graph this drives "related pages"; on a co-occurrence graph,
 entity suggestion.
 
-Scale shape — the same discipline as the dedup/similarity family:
+Scale shape — the same discipline as the dedup (MinHash-LSH) family:
 candidate pairs are generated through WEDGES (two edges sharing a
 middle vertex), so the work is Σ_m deg(m)², which a hub middle
 detonates quadratically.  Middles above ``max_middle_degree`` are

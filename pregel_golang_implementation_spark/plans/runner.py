@@ -315,6 +315,16 @@ class PregelRunner:
             max_supersteps = spec.max_supersteps
         elif max_supersteps < 0:
             raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
+        # a fresh run's snapshots would interleave with another run's, and
+        # resume() would then restart from whichever step is highest
+        if self.checkpoint_dir and start_superstep == 0:
+            found = self.latest_checkpoint(self.checkpoint_dir)
+            if found is not None:
+                raise ValueError(
+                    f"checkpoint_dir {self.checkpoint_dir!r} already holds a "
+                    f"committed snapshot at step {found[0]}: resume() it or "
+                    "use an empty dir"
+                )
         with self._loop_conf():
             edges = self._prepare_edges(edges)
             # this run's partition count: the layout's, read back from it

@@ -84,6 +84,28 @@ def test_resume_ignores_uncommitted_snapshot(spark, tmp_path):
     assert step == 2
 
 
+def test_fresh_run_refuses_a_used_checkpoint_dir(spark, tmp_path):
+    """A fresh run in a dir that holds another run's committed snapshots
+    must fail before it writes: otherwise resume() restarts from the
+    other run's highest step and returns that graph's vertices."""
+    ck = str(tmp_path / "ck_shared")
+    chain_a = _chain_edges(spark)  # ids 0..12
+    done = PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1).run(chain_a)
+    assert done.converged
+    step_a, manifest_a = PregelRunner.latest_checkpoint(ck)
+    assert step_a == done.supersteps
+
+    chain_b = symmetrize(spark.createDataFrame(  # ids 100..112
+        [(i, i + 1, 1.0) for i in range(100, 112)], "src long, dst long, weight double"
+    ))
+    runner_b = PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1)
+    with pytest.raises(ValueError, match=f"already holds.*step {step_a}"):
+        runner_b.run(chain_b, max_supersteps=2)
+    assert PregelRunner.latest_checkpoint(ck) == (step_a, manifest_a)
+    snap = spark.read.parquet(os.path.join(ck, f"step={step_a:06d}", "state"))
+    assert sorted(r["id"] for r in snap.select("id").collect()) == list(range(13))
+
+
 def test_resume_without_checkpoint_dir_raises(spark):
     runner = PregelRunner(spark, cc_spec())
     with pytest.raises(ValueError, match="checkpoint_dir"):

@@ -1,4 +1,4 @@
-"""Dedup / similarity operator tests with pure-Python oracles."""
+"""Dedup operator tests with pure-Python oracles."""
 
 from __future__ import annotations
 
@@ -14,11 +14,6 @@ from pregel_golang_implementation_spark.operators.dedup import (
     ngram_jaccard,
     simhash,
     word_shingles,
-)
-from pregel_golang_implementation_spark.operators.similarity import (
-    ann_topk,
-    cosine_topk,
-    srp_buckets,
 )
 
 DOCS = [
@@ -86,39 +81,3 @@ def test_simhash_near_dups_close(spark, docs):
     ham = bin(out[0] ^ out[2]).count("1")
     ham_far = bin(out[0] ^ out[4]).count("1")
     assert ham <= ham_far
-
-
-def test_cosine_topk_exact(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(30, 8).astype("float32")
-    rows = [(i, [float(x) for x in vecs[i]], 0) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    got = cosine_topk(emb, query_ids=[0], k=3).collect()
-    sims = vecs.astype("float64") @ vecs[0].astype("float64")
-    norms = np.linalg.norm(vecs.astype("float64"), axis=1)
-    cos = sims / (norms * norms[0])
-    cos[0] = -np.inf
-    want = list(np.argsort(-cos)[:3])
-    assert [r["neighbor_id"] for r in sorted(got, key=lambda r: r["rank"])] == want
-
-
-def test_srp_buckets_deterministic_and_ann_recall(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    base = rng.randn(20, 8)
-    rows = []
-    for i in range(20):
-        rows.append((2 * i, [float(x) for x in base[i]], 0))
-        rows.append((2 * i + 1, [float(x) for x in base[i] + 1e-4 * rng.randn(8)], 0))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    b1 = {r["vec_id"]: r["bucket"] for r in srp_buckets(emb, bits=6).collect()}
-    b2 = {r["vec_id"]: r["bucket"] for r in srp_buckets(emb, bits=6).collect()}
-    assert b1 == b2  # deterministic
-    # perturbed twins land in the same bucket (tiny perturbation)
-    same = sum(1 for i in range(20) if b1[2 * i] == b1[2 * i + 1])
-    assert same >= 18
-    ann = ann_topk(emb, query_ids=[0], k=1, bits=6).collect()
-    assert ann and ann[0]["neighbor_id"] == 1  # finds its twin in-bucket

@@ -21,10 +21,6 @@ from pregel_golang_implementation_spark.operators.dedup import (
     oversized_buckets,
     word_shingles,
 )
-from pregel_golang_implementation_spark.operators.similarity import (
-    ann_candidates,
-    oversized_srp_buckets,
-)
 from pregel_golang_implementation_spark.operators.sssp import sssp_spec
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
 from pregel_golang_implementation_spark.sources.corpus import (
@@ -201,23 +197,6 @@ def test_near_dup_clusters_end_to_end(spark):
     kept = sorted(r["doc_id"] for r in dedup_corpus(docs, clusters).collect())
     assert kept == [0, 3, 5]
 
-
-# ------------------------------------------------------------- ANN caps
-
-def test_ann_candidates_cap(spark):
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(20)]  # one mega-bucket
-    rows += [(100, [-1.0, 0.5, 0.3, -0.2]), (101, [-1.0, 0.5, 0.3, -0.2])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    uncapped = ann_candidates(emb, bits=4).count()
-    assert uncapped >= 190  # 20 choose 2 from the identical cluster
-    capped = {
-        (r["vec_a"], r["vec_b"])
-        for r in ann_candidates(emb, bits=4, max_bucket_size=5).collect()
-    }
-    assert (0, 1) not in capped
-    assert (100, 101) in capped  # small buckets still pair
-    report = oversized_srp_buckets(emb, bits=4, max_bucket_size=5).collect()
-    assert len(report) == 1 and report[0]["n_vecs"] == 20
 
 
 # ------------------------------------------------- personalized PageRank

@@ -119,42 +119,6 @@ def test_ppr_rejects_missing_source(spark):
         personalized_pagerank(spark, edges, source_ids=[1, 999])
 
 
-def test_distributed_topk_matches_window_semantics(spark):
-    """The two-level partial top-k must reproduce row_number-window
-    semantics exactly: (sim desc, neighbor_id asc) with ties broken by
-    id, stable under repartitioning, k larger than some groups."""
-    import random
-
-    from pregel_golang_implementation_spark.operators.similarity import (
-        _distributed_topk,
-    )
-
-    rng = random.Random(7)
-    rows = []
-    for q in range(4):
-        for n in range(q * 100, q * 100 + 37):
-            # coarse sims force many exact ties
-            rows.append((q, n, round(rng.uniform(0, 1), 1)))
-    expected = {}
-    for q in range(4):
-        ranked = sorted(
-            [(s, n) for (qq, n, s) in rows if qq == q], key=lambda t: (-t[0], t[1])
-        )[:5]
-        expected[q] = [(n, s, i + 1) for i, (s, n) in enumerate(ranked)]
-    for parts in (1, 7):
-        scored = spark.createDataFrame(
-            rows, "query_id long, neighbor_id long, sim double"
-        ).repartition(parts)
-        got = {}
-        for r in _distributed_topk(scored, 5).collect():
-            got.setdefault(r["query_id"], []).append(
-                (r["neighbor_id"], r["sim"], r["rank"])
-            )
-        for q in got:
-            got[q].sort(key=lambda t: t[2])
-        assert got == expected, f"mismatch at {parts} partitions"
-
-
 def test_hash_sample_and_mix_deterministic(spark):
     """Sampling decisions are pure functions of (salt, key): two runs
     agree row-for-row; fractions land near target; multiplier semantics
@@ -207,37 +171,6 @@ def test_sessionize_gap_boundaries(spark):
         for r in sessionize(events, gap_minutes=30).collect()
     }
     assert got == {(1, 1): (2, 3.0), (1, 2): (1, 4.0), (2, 1): (1, 8.0)}
-
-
-def test_knn_graph_properties(spark):
-    """kNN graph: ≤k ranked neighbors per vector, sims non-increasing in
-    rank, no self-loops, and every (vec, neighbor) pair shares an SRP
-    bucket (candidates are bucket-mates only)."""
-    import random
-
-    from pregel_golang_implementation_spark.operators.similarity import (
-        knn_graph,
-        srp_buckets,
-    )
-
-    rng = random.Random(5)
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(80)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = knn_graph(emb, k=3, bits=3).collect()
-    assert rows, "3-bit buckets over 80 vecs must produce neighbors"
-    by_vec = {}
-    for r in rows:
-        assert r["vec_id"] != r["neighbor_id"]
-        by_vec.setdefault(r["vec_id"], []).append((r["rank"], r["sim"]))
-    for ranked in by_vec.values():
-        ranked.sort()
-        assert [rk for rk, _ in ranked] == list(range(1, len(ranked) + 1))
-        sims = [s for _, s in ranked]
-        assert sims == sorted(sims, reverse=True)
-    bucket = {r["vec_id"]: r["bucket"] for r in srp_buckets(emb, bits=3).collect()}
-    assert all(bucket[r["vec_id"]] == bucket[r["neighbor_id"]] for r in rows)
 
 
 def test_near_dup_default_cap_reports_dropped(spark, caplog):

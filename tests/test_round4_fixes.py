@@ -1,6 +1,5 @@
-"""Round-4 items: NULL-sim top-k safety, fraction edge cases in hash
-sampling, order-independent session/window value sums, oracle-twin
-robustness for missing JSON props.
+"""Round-4 items: fraction edge cases in hash sampling, order-independent
+session/window value sums, oracle-twin robustness for missing JSON props.
 """
 
 from __future__ import annotations
@@ -13,52 +12,6 @@ from pregel_golang_implementation_spark.operators.events import (
     sessionize,
 )
 from pregel_golang_implementation_spark.operators.sampling import hash_sample
-from pregel_golang_implementation_spark.operators.similarity import (
-    ann_topk,
-    cosine_topk,
-    knn_graph,
-)
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_topk_drops_null_sim_neighbors(spark):
-    """A zero-norm embedding has NULL cosine against everything (Spark
-    division by zero is NULL); it must never occupy a top-k rank — the
-    struct sort used by the two-level top-k would otherwise place NULL
-    ``-sim`` FIRST and rank the degenerate vector above every real one."""
-    emb = _emb(
-        spark,
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.9, 0.1]),
-            (3, [0.5, 0.5]),
-            (4, [0.0, 0.0]),  # zero-norm: NULL sim vs everything
-        ],
-    )
-    rows = cosine_topk(emb, query_ids=[1], k=3).collect()
-    neighbors = {r["neighbor_id"] for r in rows}
-    assert 4 not in neighbors
-    assert neighbors == {2, 3}
-    # real neighbors keep dense ranks starting at 1
-    assert sorted(r["rank"] for r in rows) == [1, 2]
-    # and a zero-norm QUERY simply produces no rows (never NULL-ranked junk)
-    assert cosine_topk(emb, query_ids=[4], k=3).count() == 0
-
-
-def test_knn_graph_and_ann_topk_drop_null_sims(spark):
-    emb = _emb(
-        spark,
-        [(i, [float(i), 1.0]) for i in range(1, 6)] + [(9, [0.0, 0.0])],
-    )
-    for frame in (
-        knn_graph(emb, k=3, bits=1),
-        ann_topk(emb, query_ids=[1, 2], k=3, bits=1),
-    ):
-        assert frame.filter(F.col("sim").isNull()).count() == 0
-        assert frame.filter(F.col("neighbor_id") == 9).count() == 0
 
 
 def test_hash_sample_full_and_empty_fractions(spark):

@@ -1,10 +1,9 @@
-"""Round-5 batch 2: terms (TF-IDF / bigrams / normalize), stratified
-sampling, funnel, assortativity, PQ codes, Luby MIS."""
+"""Round-5 batch 2: stratified sampling, funnel, assortativity, Luby
+MIS."""
 
 from __future__ import annotations
 
 import datetime
-import math
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -18,18 +17,9 @@ from pregel_golang_implementation_spark.operators.mis import (
     mis,
     mis_status,
 )
-from pregel_golang_implementation_spark.operators.quantization import (
-    pq_codebook,
-    pq_codes,
-)
 from pregel_golang_implementation_spark.operators.sampling import (
     hash_sample,
     stratified_sample,
-)
-from pregel_golang_implementation_spark.operators.terms import (
-    normalize_text,
-    tfidf_top_terms,
-    top_ngrams,
 )
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
 
@@ -39,52 +29,6 @@ def _docs(spark, rows):
         [(i, t, "en", f"src{i % 3}", len(t)) for i, t in enumerate(rows)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-
-
-# ----------------------------------------------------------------- terms
-
-def test_tfidf_prefers_rare_repeated_terms(spark):
-    docs = _docs(
-        spark,
-        [
-            "zebra zebra zebra common common",
-            "common filler words here",
-            "more common filler text",
-        ],
-    )
-    out = tfidf_top_terms(docs, k=1).collect()
-    top = {r["doc_id"]: r["term"] for r in out}
-    # 'zebra' (tf=3, df=1) dominates doc 0; every rank is 1
-    assert top[0] == "zebra"
-    assert all(r["rank"] == 1 for r in out)
-    # hand-check the score: 3 * (ln(4/2) + 1)
-    s = [r["score"] for r in out if r["doc_id"] == 0][0]
-    assert abs(s - round(3 * (math.log(4 / 2) + 1), 6)) < 1e-9
-
-
-def test_tfidf_tie_breaks_by_term_asc(spark):
-    docs = _docs(spark, ["bb aa", "cc dd"])
-    out = tfidf_top_terms(docs, k=2).collect()
-    d0 = [r["term"] for r in sorted(out, key=lambda r: r["rank"]) if r["doc_id"] == 0]
-    assert d0 == ["aa", "bb"]  # equal scores -> lexicographic
-
-
-def test_top_ngrams_counts_and_rank(spark):
-    docs = _docs(spark, ["a b a b", "a b c", "x"])
-    out = top_ngrams(docs, k=2).collect()
-    assert [(r["ngram"], r["cnt"], r["rank"]) for r in out] == [
-        ("a b", 3, 1),
-        ("b a", 1, 2),  # ties with 'b c' -> lexicographic
-    ]
-
-
-def test_normalize_text_canonicalizes(spark):
-    docs = _docs(spark, ["Hello,   World!!", "hello world", "different"])
-    out = {r["doc_id"]: (r["norm_hash"], r["n_norm_chars"]) for r in
-           normalize_text(docs).collect()}
-    assert out[0] == out[1]  # same canonical form -> same hash
-    assert out[0][1] == len("hello world")
-    assert out[2] != out[0]
 
 
 # -------------------------------------------------------------- sampling
@@ -164,38 +108,6 @@ def test_assortativity_matches_numpy(spark):
     want = np.corrcoef(x, y)[0, 1]
     assert abs(got - want) < 1e-6
 
-
-# ------------------------------------------------------------------- PQ
-
-def test_pq_codes_match_numpy_argmin(spark):
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(40, 8).astype(np.float32)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    m, ksub, dim = 2, 3, 8
-    codebook = np.array(pq_codebook(emb, ksub), dtype=np.float64)
-    out = {r["vec_id"]: (r["code_0"], r["code_1"]) for r in
-           pq_codes(emb, m=m, ksub=ksub, dim=dim).collect()}
-    sub = dim // m
-    for i, v in enumerate(vecs.astype(np.float64)):
-        for j in range(m):
-            d = np.round(
-                ((v[j * sub:(j + 1) * sub] - codebook[:, j * sub:(j + 1) * sub]) ** 2
-                 ).sum(axis=1), 6)
-            assert out[i][j] == int(np.argmin(d)), (i, j)
-
-
-def test_pq_codes_deterministic_under_repartition(spark):
-    rng = np.random.RandomState(3)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(8)], 0) for i in range(30)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    a = sorted(map(tuple, pq_codes(emb, m=2, ksub=2, dim=8).collect()))
-    b = sorted(map(tuple, pq_codes(emb.repartition(7), m=2, ksub=2, dim=8).collect()))
-    assert a == b
 
 
 # ------------------------------------------------------------------ MIS

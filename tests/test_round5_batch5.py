@@ -152,45 +152,6 @@ def test_seeded_spread_unreached_omitted(spark):
     assert got == {1: 5, 2: 5}
 
 
-# --------------------------------------------------------------- bm25
-
-def test_bm25_matches_hand_formula(spark):
-    import math
-
-    from pregel_golang_implementation_spark.operators.terms import bm25_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark spark shuffle"),
-            (2, "spark join"),
-            (3, "window join merge"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r["score"]
-        for r in bm25_topk(docs, ["spark"], k=3).collect()
-    }
-
-    def bm25(tf, df, dl, n=3, avgdl=8 / 3, k1=1.2, b=0.75):
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        return round(idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl)), 6)
-
-    assert got[1] == bm25(tf=2, df=2, dl=3)
-    assert got[2] == bm25(tf=1, df=2, dl=2)
-    assert 3 not in got  # no query term → no score
-    assert got[1] > got[2]  # higher tf wins
-
-
-def test_bm25_empty_query_raises(spark):
-    import pytest as _pytest
-
-    from pregel_golang_implementation_spark.operators.terms import bm25_topk
-
-    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="query_terms"):
-        bm25_topk(docs, [], k=3)
-
 
 # -------------------------------------------------------------- k-truss
 

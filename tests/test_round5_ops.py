@@ -1,19 +1,11 @@
-"""Round-5 new operators: k-core peeling and IVF approximate top-k."""
+"""Round-5 new operators: k-core peeling."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.kcore import kcore_peel
 from pregel_golang_implementation_spark.operators.connected_components import symmetrize
-from pregel_golang_implementation_spark.operators.similarity import (
-    cosine_topk,
-    ivf_assign,
-    ivf_centroids,
-    ivf_topk,
-)
 
 
 def _edges(spark, pairs):
@@ -54,64 +46,3 @@ def test_kcore_fixed_point_is_stable(spark):
     out6 = sorted(kcore_peel(_edges(spark, cyc), k=2, rounds=6).collect())
     assert out3 == out6
     assert {r["degree"] for r in out3} == {2}
-
-
-# ------------------------------------------------------------------- IVF
-
-def _emb_df(spark):
-    # three well-separated directions in R^4 + noise copies
-    base = {
-        0: [1.0, 0.0, 0.0, 0.0],
-        1: [0.0, 1.0, 0.0, 0.0],
-        2: [0.0, 0.0, 1.0, 0.0],
-    }
-    rows = []
-    vid = 0
-    for b in range(3):
-        for j in range(5):
-            vec = [x + 0.01 * ((vid * 7 + j) % 3) for x in base[b]]
-            rows.append((vid, vec))
-            vid += 1
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_ivf_centroids_deterministic(spark):
-    emb = _emb_df(spark)
-    a = [r["centroid_id"] for r in ivf_centroids(emb, 4).collect()]
-    b = [r["centroid_id"] for r in ivf_centroids(emb, 4).collect()]
-    assert a == b and len(a) == 4
-
-
-def test_ivf_assign_one_cell_per_vector(spark):
-    emb = _emb_df(spark)
-    asgn = ivf_assign(emb, num_centroids=4).collect()
-    assert len(asgn) == 15
-    cents = {r["centroid_id"] for r in ivf_centroids(emb, 4).collect()}
-    assert {r["cell"] for r in asgn} <= cents
-
-
-def test_ivf_topk_sims_are_exact_cosines(spark):
-    """IVF narrows the CANDIDATE set only — each reported sim must equal
-    the exact cosine of that (query, neighbor) pair."""
-    emb = _emb_df(spark)
-    out = ivf_topk(emb, [0, 5], k=3, num_centroids=4, nprobe=2, round_to=5).collect()
-    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
-
-    for r in out:
-        expect = round(cos(vecs[r["query_id"]], vecs[r["neighbor_id"]]), 5)
-        assert abs(r["sim"] - expect) < 1e-9
-        assert 1 <= r["rank"] <= 3
-
-
-def test_ivf_topk_full_probe_recovers_exact_topk(spark):
-    """With nprobe = num_centroids every cell is probed, so IVF must
-    reproduce the brute-force ranking exactly — recall loss can come only
-    from unprobed cells, never from the machinery."""
-    emb = _emb_df(spark)
-    ivf = ivf_topk(emb, [0, 7], k=3, num_centroids=4, nprobe=4, round_to=5)
-    exact = cosine_topk(emb, [0, 7], k=3, round_to=5)
-    assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, exact.collect()))

@@ -19,7 +19,7 @@ import pandas as pd
 import __spark_entry__ as E
 from pregel_golang_implementation_spark.session import get_spark
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

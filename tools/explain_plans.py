@@ -148,51 +148,7 @@ def main() -> None:
         ("ngram_jaccard verify with LSH pairs (predicate below the aggregate)", grab(verified))
     )
 
-    # 5. distributed top-k: partial top-k per (query, input-partition) then
-    # a k-rows-per-partition merge — NO Window partitioned by query_id
-    # anywhere (a per-query window is a single-reducer sort of every
-    # scored row for that query; r2 verdict #1).
-    from pregel_golang_implementation_spark.operators.similarity import (
-        cosine_topk,
-        srp_buckets,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    topk = cosine_topk(emb, query_ids=[0, 1, 2, 3, 4], k=5)
-    topk_plan = grab(topk)
-    assert "Window" not in topk_plan, "top-k must not plan a per-query Window"
-    sections.append(
-        ("cosine_topk (two-level distributed top-k — no per-query Window)", topk_plan)
-    )
-
-    # 6. SRP bucketing: driver-precomputed hyperplane literals, zip_with +
-    # ordered fold per bit — a pure projection: NO Exchange, no explode,
-    # no md5 of per-row constants.
-    srp_plan = grab(srp_buckets(emb, bits=8))
-    assert "Exchange" not in srp_plan, "srp_buckets must stay shuffle-free"
-    sections.append(("srp_buckets (zero-shuffle projection)", srp_plan))
-
-    # 7. IVF cell assignment: the codebook rides the plan as literals
-    # (same trick as the SRP hyperplanes) — assignment must plan as a
-    # pure projection with NO Exchange and no per-row Python.
-    from pregel_golang_implementation_spark.operators.similarity import ivf_assign
-
-    ivf_plan = grab(ivf_assign(emb, num_centroids=8))
-    assert "Exchange" not in ivf_plan, "ivf_assign must stay shuffle-free"
-    assert "BatchEvalPython" not in ivf_plan, "ivf_assign must not plan Python"
-    sections.append(("ivf_assign (zero-shuffle centroid assignment)", ivf_plan))
-
-    # 8. PQ encode: per-subspace codebook literals, squared-L2 argmin —
-    # the same inlined-literal discipline as SRP/IVF: zero Exchange,
-    # zero Python across the whole corpus pass.
-    from pregel_golang_implementation_spark.operators.quantization import pq_codes
-
-    pq_plan = grab(pq_codes(emb, m=4, ksub=4, dim=64))
-    assert "Exchange" not in pq_plan, "pq_codes must stay shuffle-free"
-    assert "BatchEvalPython" not in pq_plan, "pq_codes must not plan Python"
-    sections.append(("pq_codes (zero-shuffle PQ encode)", pq_plan))
-
-    # 9. LPA mode combine: must plan as partial+final HashAggregate
+    # 5. LPA mode combine: must plan as partial+final HashAggregate
     # pairs with NO Window (the r5 windowless argmax) — a window here
     # would reintroduce the per-id single-task sort on hub vertices.
     from pregel_golang_implementation_spark.plans.spec import combine_messages
