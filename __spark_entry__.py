@@ -27,18 +27,6 @@ from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
     symmetrize,
 )
-from pregel_golang_implementation_spark.operators.dedup import (
-    exact_duplicates,
-    lsh_bands,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    near_dup_clusters,
-    ngram_containment,
-    ngram_jaccard,
-    simhash,
-    simhash_near_dups,
-    word_shingles,
-)
 from pregel_golang_implementation_spark.operators.events import (
     event_window_stats,
     sessionize,
@@ -98,21 +86,17 @@ from pregel_golang_implementation_spark.sources.graphs import (
     temporal_edges_from_lineitem,
 )
 
-PART_OFFSET = 10_000_000
 PR_ITERS = 5
 CC_ITERS = 6
 SSSP_ITERS = 4
 LPA_ITERS = 2
 LPA4_ITERS = 4
-RESOLVE_ITERS = 6
-RESOLVE_THRESHOLD = 0.5
 KCORE_K = 5
 KCORE_ROUNDS = 3
 STRAT_FRACTIONS = {"src0": 0.8, "src1": 0.5, "src2": 0.25}
 STRAT_DEFAULT = 0.1
 FUNNEL_STEPS = ("view", "click", "purchase")
 MIS_ITERS = 4
-MIS_OUT = float(2**48)
 LP_K = 3
 LP_MAX_MID_DEG = 40
 HITS_ITERS = 3
@@ -367,71 +351,6 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_duplicates(_docs(spark, sf_dir)).select(
-        "content_hash",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("canonical_id").cast("long").alias("canonical_id"),
-    )
-
-
-def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = word_shingles(_docs(spark, sf_dir), n=3)
-    return minhash_signatures(sh, num_hashes=16, hash_fn="md5").select(
-        "doc_id", F.col("seed").cast("long").alias("seed"), "minhash"
-    )
-
-
-def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = word_shingles(_docs(spark, sf_dir), n=3)
-    sig = minhash_signatures(sh, num_hashes=16, hash_fn="md5")
-    return lsh_candidate_pairs(lsh_bands(sig, rows_per_band=4))
-
-
-def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ngram_jaccard(_docs(spark, sf_dir), shingle_n=3, threshold=0.05)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash(_docs(spark, sf_dir), bits=16)
-
-
-def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming near-dup pairs — banded candidates (pigeonhole:
-    max_hamming+1 bands → perfect recall), bit_count(XOR) verify.  The
-    oracle is the brute-force n² Hamming join: identical answers prove
-    the banding prunes work without losing pairs."""
-    out = simhash_near_dups(_docs(spark, sf_dir), bits=16, max_hamming=3)
-    return out.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-
-
-def q_jaccard_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-candidates-then-verify — the pair predicate sits BELOW the
-    shingle self-join (the scale path; all-pairs never materializes)."""
-    docs = _docs(spark, sf_dir)
-    sh = word_shingles(docs, n=3)
-    sig = minhash_signatures(sh, num_hashes=16, hash_fn="md5")
-    pairs = lsh_candidate_pairs(lsh_bands(sig, rows_per_band=4))
-    out = ngram_jaccard(docs, pairs=pairs, shingle_n=3)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end near-dup resolution: exact collapse → LSH candidates →
-    Jaccard verify → CC over the duplicate graph → canonical per cluster."""
-    out = near_dup_clusters(
-        _docs(spark, sf_dir),
-        threshold=RESOLVE_THRESHOLD,
-        max_supersteps=RESOLVE_ITERS,
-    )
-    return out.select(
-        "doc_id",
-        "cluster_id",
-        F.col("is_canonical").cast("long").alias("is_canonical"),
-    )
-
-
 def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (teleport to the min-orderkey vertex),
     PR_ITERS supersteps."""
@@ -508,21 +427,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "start_ts",
         "end_ts",
         "total_value",
-    )
-
-
-DECONTAM_BENCH_MAX_ID = 10  # doc_id < 10 plays the "benchmark suite"
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: asymmetric n-gram containment of each
-    'benchmark' doc (doc_id < 10) against the rest of the corpus."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") < DECONTAM_BENCH_MAX_ID)
-    corpus = docs.filter(F.col("doc_id") >= DECONTAM_BENCH_MAX_ID)
-    out = ngram_containment(corpus, bench, n=3)
-    return out.select(
-        "doc_id", "benchmark_id", F.round("containment", 6).alias("containment")
     )
 
 
@@ -867,8 +771,7 @@ def q_hll_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram shingle count — one scan + one 256-key aggregate, NO distinct
     shuffle; identical registers and estimate in any engine
     (operators/sketches.py)."""
-    sh = word_shingles(_docs(spark, sf_dir), n=3)
-    return hll_distinct(sh, "shingle")
+    return hll_distinct(_shingle_rows(_docs(spark, sf_dir), n=3), "shingle")
 
 
 def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -907,7 +810,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "checkpoint_resume": q_checkpoint_resume,
         "component_sizes": q_component_sizes,
         "degree_histogram": q_degree_histogram,
-        "simhash_near_dups": q_simhash_near_dups,
         "incremental_cc": q_incremental_cc,
         "sssp_4iter": q_sssp,
         "lpa_2iter": q_lpa,
@@ -918,14 +820,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triangle_count": q_triangles,
         "triangles_per_vertex": q_triangles_per_vertex,
         "kcore_peel_3": q_kcore,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signatures": q_minhash,
-        "lsh_candidate_pairs": q_lsh_pairs,
-        "ngram_jaccard": q_jaccard,
-        "simhash16": q_simhash,
-        "jaccard_candidates": q_jaccard_candidates,
-        "dedup_resolve": q_dedup_resolve,
-        "decontaminate": q_decontaminate,
         "event_window_stats": q_event_window_stats,
         "sessionize": q_sessionize,
         "hash_sample": q_hash_sample,
@@ -1184,6 +1078,31 @@ _CC2_ACTIVE_SQL = _materialize(
     + " SELECT s2.id FROM s2 JOIN s1 ON s2.id = s1.id WHERE s2.val < s1.val"
 )
 
+
+def _shingle_rows(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle) — the word n-grams of each document, the Spark
+    twin of ``_shingles_sql``.  Pure higher-order functions (transform
+    over an index sequence) — codegen, no UDF.  No distinct: its one
+    consumer, the HLL register max, is blind to duplicates.
+
+    The token array is materialized in its OWN projection before the
+    shingle expression consumes it: inlined, the `split()` re-evaluates
+    inside every `element_at` of the lambda (n+1 regex splits of the full
+    text per shingle) — measured 8.8× slower.  CollapseProject keeps the
+    two projections apart because the alias is referenced many times by a
+    non-cheap expression."""
+    t = F.col("_toks")
+    toked = docs.select("doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("_toks"))
+    shingle_arr = F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(t) - n),
+            lambda i: F.concat_ws(" ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", t)))
+    return toked.select("doc_id", F.explode(shingle_arr).alias("shingle"))
+
+
 def _shingles_sql(src: str = "documents") -> str:
     return (
         f"toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM {src}), "
@@ -1195,91 +1114,6 @@ def _shingles_sql(src: str = "documents") -> str:
 
 
 _SHINGLES = _shingles_sql("documents")
-
-_SIMHASH16_SQL = (
-    "WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok FROM documents), "
-    "h AS (SELECT doc_id, md5(tok) AS hh FROM toks), "
-    "vv AS (SELECT doc_id, unnest(generate_series(0, 15)) AS j, hh FROM h), "
-    "votes AS (SELECT doc_id, j, CASE WHEN substr(hh, j + 1, 1) IN "
-    "('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS vt FROM vv), "
-    "bitsum AS (SELECT doc_id, j, SUM(vt) AS s FROM votes GROUP BY 1, 2) "
-    "SELECT doc_id, CAST(SUM(CASE WHEN s >= 0 THEN POW(2, j) ELSE 0 END) AS BIGINT) AS simhash "
-    "FROM bitsum GROUP BY 1"
-)
-
-def _minhash_sql(src: str = "documents") -> str:
-    return (
-        _shingles_sql(src) + ", "
-        "sd AS (SELECT doc_id, shingle, unnest(generate_series(0, 15)) AS seed FROM sh), "
-        "sig AS (SELECT doc_id, seed, MIN(md5(seed::VARCHAR || '|' || shingle)) AS minhash "
-        "FROM sd GROUP BY 1, 2)"
-    )
-
-
-def _bands_sql(src: str = "documents") -> str:
-    return (
-        _minhash_sql(src) + ", "
-        "bands AS (SELECT doc_id, seed // 4 AS band, "
-        "md5(string_agg(lpad(seed::VARCHAR, 4, '0') || ':' || minhash, ',' "
-        "ORDER BY lpad(seed::VARCHAR, 4, '0') || ':' || minhash)) AS band_key "
-        "FROM sig GROUP BY 1, 2)"
-    )
-
-
-_MINHASH = _minhash_sql("documents")
-_BANDS = _bands_sql("documents")
-
-_CAND = (
-    "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-    "FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key "
-    "AND a.doc_id < b.doc_id)"
-)
-
-_VERIFY = (
-    "sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1), "
-    "inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter FROM cand c "
-    "JOIN sh a ON a.doc_id = c.doc_a "
-    "JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle GROUP BY 1, 2)"
-)
-
-
-def _dedup_resolve_sql(iters: int, threshold: float) -> str:
-    """Oracle twin of near_dup_clusters: exact collapse → LSH over
-    representatives → Jaccard verify → (exact ∪ verified) edges → `iters`
-    hash-min supersteps unrolled as chained CTEs."""
-    parts = [
-        "dh AS (SELECT doc_id, md5(text) AS h FROM documents)",
-        "grp AS (SELECT h, MIN(doc_id) AS rep FROM dh GROUP BY 1)",
-        "exact_edges AS (SELECT grp.rep AS src, dh.doc_id AS dst FROM dh "
-        "JOIN grp ON dh.h = grp.h WHERE dh.doc_id <> grp.rep)",
-        "reps AS (SELECT d.doc_id, d.text FROM documents d JOIN grp ON d.doc_id = grp.rep)",
-        _bands_sql("reps"),
-        _CAND,
-        _VERIFY,
-        f"ver AS (SELECT doc_a, doc_b FROM inter "
-        f"JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id "
-        f"WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= {threshold})",
-        "e0 AS (SELECT src, dst FROM exact_edges UNION SELECT doc_a, doc_b FROM ver)",
-        "u AS (SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0)",
-        "v AS (SELECT doc_id AS id FROM documents)",
-        "s0 AS (SELECT id, id AS val FROM v)",
-    ]
-    for k in range(1, iters + 1):
-        p = f"s{k - 1}"
-        parts.append(
-            f"m{k} AS (SELECT u.dst AS id, MIN(p.val) AS mv FROM {p} p "
-            f"JOIN u ON p.id = u.src GROUP BY u.dst)"
-        )
-        parts.append(
-            f"s{k} AS (SELECT {p}.id, LEAST({p}.val, COALESCE(m{k}.mv, {p}.val)) AS val "
-            f"FROM {p} LEFT JOIN m{k} ON {p}.id = m{k}.id)"
-        )
-    return _materialize(
-        "WITH "
-        + ", ".join(parts)
-        + f" SELECT id AS doc_id, CAST(val AS BIGINT) AS cluster_id, "
-        f"CAST(id = val AS BIGINT) AS is_canonical FROM s{iters}"
-    )
 
 
 def _stratified_sample_sql() -> str:
@@ -2068,53 +1902,6 @@ def oracle_sql() -> dict[str, str]:
             "GROUP BY 1"
         ),
         "kcore_peel_3": _kcore_sql(KCORE_K, KCORE_ROUNDS),
-        "dedup_exact": (
-            "SELECT md5(text) AS content_hash, COUNT(*) AS n_docs, "
-            "MIN(doc_id) AS canonical_id FROM documents GROUP BY 1"
-        ),
-        "minhash_signatures": (
-            f"WITH {_MINHASH} SELECT doc_id, seed AS seed, minhash FROM sig"
-        ),
-        "lsh_candidate_pairs": (
-            f"WITH {_BANDS} SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-            "FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key "
-            "AND a.doc_id < b.doc_id"
-        ),
-        "ngram_jaccard": (
-            f"WITH {_SHINGLES}, "
-            "sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1), "
-            "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter "
-            "FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2) "
-            "SELECT doc_a, doc_b, CAST(ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS DOUBLE) AS jaccard "
-            "FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id "
-            "WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= 0.05"
-        ),
-        "simhash16": _SIMHASH16_SQL,
-        # brute-force n² Hamming join — the banded Spark plan must return
-        # the identical pair set (pigeonhole recall proof under the hash)
-        "simhash_near_dups": (
-            f"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-            "CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming "
-            f"FROM ({_SIMHASH16_SQL}) a JOIN ({_SIMHASH16_SQL}) b ON a.doc_id < b.doc_id "
-            "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"
-        ),
-        "jaccard_candidates": (
-            f"WITH {_BANDS}, {_CAND}, {_VERIFY} "
-            "SELECT doc_a, doc_b, CAST(ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS DOUBLE) AS jaccard "
-            "FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id"
-        ),
-        "dedup_resolve": _dedup_resolve_sql(RESOLVE_ITERS, RESOLVE_THRESHOLD),
-        "decontaminate": (
-            f"WITH {_SHINGLES}, "
-            f"b AS (SELECT doc_id AS benchmark_id, shingle FROM sh WHERE doc_id < {DECONTAM_BENCH_MAX_ID}), "
-            f"c AS (SELECT doc_id, shingle FROM sh WHERE doc_id >= {DECONTAM_BENCH_MAX_ID}), "
-            "sizes AS (SELECT benchmark_id, COUNT(*) AS n_bench FROM b GROUP BY 1), "
-            "inter AS (SELECT c.doc_id, b.benchmark_id, COUNT(*) AS n_inter "
-            "FROM c JOIN b ON c.shingle = b.shingle GROUP BY 1, 2) "
-            "SELECT i.doc_id, i.benchmark_id, "
-            "CAST(ROUND(n_inter / n_bench, 6) AS DOUBLE) AS containment "
-            "FROM inter i JOIN sizes s ON i.benchmark_id = s.benchmark_id"
-        ),
         "hash_sample": (
             "SELECT doc_id, lang, source FROM documents "
             f"WHERE substr(md5('sample|' || doc_id::VARCHAR), 1, 4) < '{_hex_thr(SAMPLE_FRACTION)}'"

@@ -18,26 +18,8 @@ from pregel_golang_implementation_spark.operators.triangles import (
     triangle_count,
     triangles_per_vertex,
 )
-from pregel_golang_implementation_spark.operators.dedup import (
-    dedup_corpus,
-    exact_duplicates,
-    exact_representatives,
-    minhash_dedup,
-    near_dup_clusters,
-    ngram_jaccard,
-    oversized_buckets,
-    simhash,
-)
 
 __all__ = [
-    "dedup_corpus",
-    "exact_duplicates",
-    "exact_representatives",
-    "minhash_dedup",
-    "near_dup_clusters",
-    "ngram_jaccard",
-    "oversized_buckets",
-    "simhash",
     "pagerank",
     "pagerank_spec",
     "personalized_pagerank",

@@ -5,17 +5,16 @@ rank non-adjacent vertex pairs by how many neighbors they share.  On a
 link graph this drives "related pages"; on a co-occurrence graph,
 entity suggestion.
 
-Scale shape — the same discipline as the dedup (MinHash-LSH) family:
-candidate pairs are generated through WEDGES (two edges sharing a
-middle vertex), so the work is Σ_m deg(m)², which a hub middle
-detonates quadratically.  Middles above ``max_middle_degree`` are
-therefore excluded up front — the standard stop-word cut for this
+Scale shape: candidate pairs are generated through WEDGES (two edges
+sharing a middle vertex), so the work is Σ_m deg(m)², which a hub
+middle detonates quadratically.  Middles above ``max_middle_degree``
+are therefore excluded up front — the standard stop-word cut for this
 score: a vertex adjacent to millions says nothing about any specific
-pair's affinity, exactly like a shingle shared by every document
-(dedup.py's oversized-bucket cap).  The cut is NEVER silent: excluded
-middles are counted and reported via ``lp_report``.  Counting is one
-(a, b)-keyed aggregate with map-side combine; existing edges leave via
-an anti-join; the per-vertex top-k window partitions on the vertex id.
+pair's affinity, exactly like a shingle shared by every document.  The
+cut is NEVER silent: excluded middles are counted and reported via
+``lp_report``.  Counting is one (a, b)-keyed aggregate with map-side
+combine; existing edges leave via an anti-join; the per-vertex top-k
+window partitions on the vertex id.
 """
 
 from __future__ import annotations

@@ -7,8 +7,8 @@ co-citation graph, tokens sharing a window a co-occurrence graph — and
 it feeds every downstream operator in this repo (PageRank, CC, link
 prediction) that assumes an edge table already exists.
 
-Scale shape — the by-now-standard wedge discipline (dedup.py,
-link_prediction.py): pair generation is a self-join keyed by the
+Scale shape — the by-now-standard wedge discipline
+(link_prediction.py): pair generation is a self-join keyed by the
 container, so work is Σ_c size(c)² and one mega-container detonates it
 quadratically.  Containers above ``max_container_size`` are excluded up
 front (an order containing every part says nothing about any specific

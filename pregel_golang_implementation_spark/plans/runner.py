@@ -315,11 +315,13 @@ class PregelRunner:
             max_supersteps = spec.max_supersteps
         elif max_supersteps < 0:
             raise ValueError(f"max_supersteps must be >= 0, got {max_supersteps}")
-        # a fresh run's snapshots would interleave with another run's, and
-        # resume() would then restart from whichever step is highest
-        if self.checkpoint_dir and start_superstep == 0:
+        # a run may only write steps past every committed one: a fresh
+        # run's snapshots would interleave with another run's (resume()
+        # restarts from whichever step is highest), and a rewritten step
+        # keeps its old MANIFEST.json over the new, maybe partial, files
+        if self.checkpoint_dir:
             found = self.latest_checkpoint(self.checkpoint_dir)
-            if found is not None:
+            if found is not None and found[0] > start_superstep:
                 raise ValueError(
                     f"checkpoint_dir {self.checkpoint_dir!r} already holds a "
                     f"committed snapshot at step {found[0]}: resume() it or "

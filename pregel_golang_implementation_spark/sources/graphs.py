@@ -91,7 +91,7 @@ def synthetic_edges(
 
 def edges_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bipartite order↔part graph from the driver's lineitem table:
-    src=l_orderkey, dst=PART_OFFSET+l_partkey, weight=l_linenumber.
+    src=l_orderkey, dst=10_000_000 + l_partkey, weight=l_linenumber.
     Deterministic, DuckDB-expressible (for oracle_sql twins)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (

@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import json
 import os
+import signal
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from pregel_golang_implementation_spark.operators.connected_components import (
     symmetrize,
 )
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
+from tests.oracles import oracle_cc
 
 
 def _chain_edges(spark, n=12):
@@ -106,6 +109,24 @@ def test_fresh_run_refuses_a_used_checkpoint_dir(spark, tmp_path):
     assert sorted(r["id"] for r in snap.select("id").collect()) == list(range(13))
 
 
+def test_run_refuses_to_rewrite_committed_steps(spark, tmp_path):
+    """A run started at step k in a dir with committed steps past k must
+    fail before it writes: rewriting step k+1 would keep that step's old
+    MANIFEST.json over the new, maybe partial, parquet files."""
+    edges = _chain_edges(spark)
+    ck = str(tmp_path / "ck_rewrite")
+    PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1).run(
+        edges, max_supersteps=3
+    )
+    committed = PregelRunner.latest_checkpoint(ck)
+    assert committed[0] == 3
+    step1 = spark.read.parquet(os.path.join(ck, "step=000001", "state"))
+    runner = PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1)
+    with pytest.raises(ValueError, match="already holds.*step 3"):
+        runner.run(edges, state=step1, start_superstep=1)
+    assert PregelRunner.latest_checkpoint(ck) == committed
+
+
 def test_resume_without_checkpoint_dir_raises(spark):
     runner = PregelRunner(spark, cc_spec())
     with pytest.raises(ValueError, match="checkpoint_dir"):
@@ -138,3 +159,59 @@ def test_script_rejects_unsupported_resume(tmp_path, extra):
     assert proc.returncode == 2
     assert "resume" in proc.stderr
     assert "Traceback" not in proc.stderr
+
+
+def test_sigkill_mid_run_then_resume(spark, tmp_path):
+    """A real crash: SIGKILL the whole process group of a checkpointing CC
+    run (driver and JVM) once step 2 is committed, then resume here; the
+    labels must equal the union-find oracle's."""
+    pairs = [(i, i + 1) for i in range(39)] + [(100, 101), (101, 102)]
+    edges_path = str(tmp_path / "edges.parquet")
+    spark.createDataFrame(pairs, "src long, dst long").write.parquet(edges_path)
+    ck = tmp_path / "ck_kill"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    py_path = os.environ.get("PYTHONPATH")
+    env = dict(
+        os.environ,
+        PYTHONPATH=root + (os.pathsep + py_path if py_path else ""),
+        PYSPARK_SUBMIT_ARGS="--master local[2] --driver-memory 1g pyspark-shell",
+    )
+    with open(tmp_path / "child.log", "w") as log:
+        proc = subprocess.Popen(
+            [sys.executable, SCRIPT, "--algorithm", "cc", "--edges", edges_path,
+             "--out", str(tmp_path / "out"), "--checkpoint-dir", str(ck),
+             "--checkpoint-every", "1"],
+            stdout=log, stderr=subprocess.STDOUT, env=env, cwd=tmp_path,
+            start_new_session=True,
+        )
+    try:
+        deadline = time.monotonic() + 180
+        while not (ck / "step=000002" / "MANIFEST.json").exists():
+            assert proc.poll() is None, (
+                f"run exited ({proc.returncode}) before committing step 2:\n"
+                + (tmp_path / "child.log").read_text()[-3000:]
+            )
+            assert time.monotonic() < deadline, "step 2 not committed in 180 s"
+            time.sleep(0.2)
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=30)
+    finally:
+        if proc.poll() is None:
+            os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait(timeout=30)
+    deadline = time.monotonic() + 30
+    while True:  # the group is gone once its last member (the JVM) is
+        try:
+            os.killpg(proc.pid, 0)
+        except ProcessLookupError:
+            break
+        assert time.monotonic() < deadline, "killed run's JVM still alive"
+        time.sleep(0.2)
+
+    step, manifest = PregelRunner.latest_checkpoint(str(ck))
+    assert step >= 2 and manifest["counters"]["active_vertices"] > 0  # mid-run
+    res = PregelRunner(spark, cc_spec(), checkpoint_dir=str(ck), checkpoint_every=1).resume(
+        symmetrize(spark.read.parquet(edges_path))
+    )
+    assert res.converged
+    assert {r["id"]: r["value"] for r in res.state.collect()} == oracle_cc(pairs)

@@ -1,7 +1,9 @@
 """Registry checks that need no Spark session: ``__spark_entry__`` pairs
 every query with a DuckDB oracle (no query may lack its twin and no oracle
-may outlive its query), and every package module has a caller outside the
-tests (a module only its own tests import is dead code)."""
+may outlive its query), every name it defines or imports from the package
+is reached from a query, an oracle or ``entry()``, and every package module
+has a caller outside the tests (a module only its own tests import is dead
+code)."""
 
 from __future__ import annotations
 
@@ -58,3 +60,61 @@ def test_every_package_module_has_a_caller():
         )
     ]
     assert orphans == [], f"no caller outside tests/ imports {orphans}"
+
+
+def _bound_names(stmt: ast.stmt) -> set[str]:
+    """Names a module-level def, class, assignment or import binds."""
+    if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+        return {stmt.name}
+    if isinstance(stmt, ast.Assign):
+        return {n.id for t in stmt.targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return {(a.asname or a.name).split(".")[0] for a in stmt.names}
+    return set()
+
+
+def _loaded_names(node: ast.AST) -> set[str]:
+    return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+
+def _registry_values(tree: ast.Module, fn_name: str) -> list[ast.expr]:
+    fn = next(
+        s for s in tree.body if isinstance(s, ast.FunctionDef) and s.name == fn_name
+    )
+    ret = next(n for n in ast.walk(fn) if isinstance(n, ast.Return))
+    assert isinstance(ret.value, ast.Dict), f"{fn_name}() must return a dict literal"
+    return ret.value.values
+
+
+def test_every_entry_name_is_reached():
+    """Every module-level def and assignment in ``__spark_entry__.py``, and
+    every name it imports from the package, is reached from a registered
+    query, an oracle or ``entry()``.  A name only a deleted query used is
+    dead code, and this is where a cut that leaves one behind shows up."""
+    tree = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    deps: dict[str, set[str]] = {}  # bound name -> names its statement loads
+    checked: set[str] = set()
+    roots: list[ast.AST] = []
+    for stmt in tree.body:
+        names = _bound_names(stmt)
+        is_import = isinstance(stmt, (ast.Import, ast.ImportFrom))
+        for name in names:
+            deps.setdefault(name, set())
+            if not is_import:
+                deps[name] |= _loaded_names(stmt)
+        if not names:
+            roots.append(stmt)  # module docstring or other top-level code
+        elif not is_import or getattr(stmt, "module", "").startswith(PKG):
+            checked |= names
+    roots += _registry_values(tree, "queries") + _registry_values(tree, "oracle_sql")
+    roots += [s for s in tree.body if isinstance(s, ast.FunctionDef) and s.name == "entry"]
+
+    reached: set[str] = set()
+    todo = [name for root in roots for name in _loaded_names(root)]
+    while todo:
+        name = todo.pop()
+        if name in deps and name not in reached:
+            reached.add(name)
+            todo += deps[name]
+    unreached = sorted(checked - reached - {"queries", "oracle_sql", "entry"})
+    assert unreached == [], f"nothing in the contract reaches {unreached}"

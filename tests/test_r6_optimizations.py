@@ -7,65 +7,6 @@ original formulation value-for-value.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from pregel_golang_implementation_spark.operators.dedup import (
-    lsh_bands,
-    lsh_candidate_pairs,
-    minhash_bands,
-    minhash_signatures,
-    word_shingles,
-)
-
-SF_DOCS = "/root/testdata/sf0.001/documents.parquet"
-
-
-def _rows(df, cols):
-    return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-@pytest.mark.parametrize("hash_fn", ["md5", "xxhash"])
-def test_fused_bands_equal_signature_pipeline(spark, hash_fn):
-    """minhash_bands must reproduce lsh_bands(minhash_signatures(
-    word_shingles(...))) exactly: same (doc_id, band, band_key) set —
-    the fused path skips the shingle distinct (min is multiset-
-    invariant) and the unpivot/regroup, neither of which may change a
-    single band key."""
-    docs = spark.read.parquet(SF_DOCS)
-    sh = word_shingles(docs, n=3)
-    sig = minhash_signatures(sh, num_hashes=16, hash_fn=hash_fn)
-    want = _rows(lsh_bands(sig, rows_per_band=4), ["doc_id", "band", "band_key"])
-    got = _rows(
-        minhash_bands(docs, shingle_n=3, num_hashes=16, rows_per_band=4, hash_fn=hash_fn),
-        ["doc_id", "band", "band_key"],
-    )
-    assert got == want
-
-
-def test_fused_candidate_pairs_unchanged(spark):
-    """End-to-end: candidate pairs off the fused bands equal the pairs
-    off the original three-shuffle pipeline."""
-    docs = spark.read.parquet(SF_DOCS)
-    sh = word_shingles(docs, n=3)
-    sig = minhash_signatures(sh, num_hashes=16, hash_fn="md5")
-    want = _rows(
-        lsh_candidate_pairs(lsh_bands(sig, rows_per_band=4)), ["doc_a", "doc_b"]
-    )
-    got = _rows(
-        lsh_candidate_pairs(
-            minhash_bands(docs, shingle_n=3, num_hashes=16, rows_per_band=4)
-        ),
-        ["doc_a", "doc_b"],
-    )
-    assert got == want
-
-
-def test_minhash_bands_rejects_uneven_bands(spark):
-    docs = spark.read.parquet(SF_DOCS)
-    with pytest.raises(ValueError):
-        minhash_bands(docs, num_hashes=16, rows_per_band=5)
-
 
 def test_adaptive_partitioning_resolves_and_matches_explicit(spark):
     """r6: with num_partitions=None the runner sizes the layout from the

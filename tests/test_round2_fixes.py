@@ -1,6 +1,5 @@
 """Round-2 hardening tests: cache hygiene, scale-safe id assignment,
-candidate-predicate pushdown, bucket caps, end-to-end near-dup
-resolution."""
+personalized and weighted PageRank, incremental CC."""
 
 from __future__ import annotations
 
@@ -9,17 +8,6 @@ import pytest
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
     symmetrize,
-)
-from pregel_golang_implementation_spark.operators.dedup import (
-    lsh_bands,
-    lsh_candidate_pairs,
-    minhash_dedup,
-    minhash_signatures,
-    near_dup_clusters,
-    dedup_corpus,
-    ngram_jaccard,
-    oversized_buckets,
-    word_shingles,
 )
 from pregel_golang_implementation_spark.operators.sssp import sssp_spec
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
@@ -102,101 +90,6 @@ def test_vertex_ids_plan_has_no_global_sort(spark, executed_plans):
     for plan in plans:
         assert "Window" not in plan
         assert "SinglePartition" not in plan
-
-
-# ------------------------------------------------- jaccard pair pushdown
-
-def test_jaccard_pairs_pushdown_equivalence_and_plan(spark):
-    docs = spark.createDataFrame(
-        [
-            (0, "a b c d e f g h"),
-            (1, "a b c d e f g x"),
-            (2, "a b c d z z z z"),
-            (3, "q r s t u v w y"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame([(0, 1), (0, 3)], "doc_a long, doc_b long")
-    full = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ngram_jaccard(docs, shingle_n=2).collect()
-    }
-    restricted = ngram_jaccard(docs, pairs=pairs, shingle_n=2)
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in restricted.collect()}
-    # same values as the all-pairs run, restricted to the candidate set
-    # ((0,3) shares no shingle → no row on either path)
-    assert set(got) == {(0, 1)}
-    assert got[(0, 1)] == pytest.approx(full[(0, 1)])
-    # the pair predicate sits below the aggregate: the pushed-down shape
-    # introduces semi-joins of the shingle table to the candidate doc sets
-    plan = restricted._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan
-
-
-# ------------------------------------------------------- LSH bucket caps
-
-def test_lsh_bucket_cap_skips_megacluster_and_reports(spark):
-    # 10 byte-identical docs share every band: uncapped → 45 pairs/bucket
-    docs = spark.createDataFrame(
-        [(i, "same text everywhere repeated for everyone") for i in range(10)]
-        + [(100, "completely different content right here")],
-        "doc_id long, text string",
-    )
-    sig = minhash_signatures(word_shingles(docs, n=3), num_hashes=16)
-    bands = lsh_bands(sig, rows_per_band=4)
-    uncapped = lsh_candidate_pairs(bands).count()
-    assert uncapped == 45  # 10 choose 2
-    capped = lsh_candidate_pairs(bands, max_bucket_size=5)
-    assert capped.count() == 0
-    dropped = oversized_buckets(bands, max_bucket_size=5).collect()
-    assert len(dropped) == 4  # 16 hashes / 4 rows-per-band
-    assert all(r["n_docs"] == 10 for r in dropped)
-
-
-def test_collapse_exact_prevents_quadratic_pairs(spark):
-    """A 1000-doc exact-dup cluster must never reach the banding join:
-    with collapse_exact the pipeline sees one representative, and the
-    candidate set stays tiny instead of ~500k pairs."""
-    rows = [(i, "identical crawl page body text shared by all") for i in range(1000)]
-    rows += [
-        (2000, "a genuinely different document about graphs"),
-        (2001, "a genuinely different document about graph"),  # near dup of 2000
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_dedup(docs, collapse_exact=True, max_bucket_size=50)
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert (0, 1) not in got  # exact dups collapsed before banding
-    assert len(got) <= 3  # only representative-level candidates survive
-
-
-# --------------------------------------------- end-to-end near-dup resolve
-
-def test_near_dup_clusters_end_to_end(spark):
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog today"),
-        (1, "the quick brown fox jumps over the lazy dog today"),  # exact dup
-        (2, "the quick brown fox jumps over the lazy cat today"),  # near dup
-        (3, "an entirely unrelated report about spark shuffles"),
-        (4, "an entirely unrelated report about spark shuffles"),  # exact dup of 3
-        (5, "nothing like anything else in this tiny corpus"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-        for r in near_dup_clusters(docs, threshold=0.3).collect()
-    }
-    assert out[0] == (0, True)
-    assert out[1] == (0, False)  # exact dup folded in
-    assert out[2] == (0, False)  # near dup verified + clustered
-    assert out[3] == (3, True) and out[4] == (3, False)
-    assert out[5] == (5, True)
-    clusters = spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in out.items()],
-        "doc_id long, cluster_id long, is_canonical boolean",
-    )
-    kept = sorted(r["doc_id"] for r in dedup_corpus(docs, clusters).collect())
-    assert kept == [0, 3, 5]
-
 
 
 # ------------------------------------------------- personalized PageRank

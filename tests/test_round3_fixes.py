@@ -1,82 +1,11 @@
-"""Round-3 items: benchmark decontamination, default-safe near-dup caps,
-weighted/personalized PageRank validation.
+"""Round-3 items: weighted/personalized PageRank validation, hash
+sampling and sessionization edge cases.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from pregel_golang_implementation_spark.operators.dedup import ngram_containment
-
-
-def _df(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_ngram_containment_planted(spark):
-    """A benchmark doc fully quoted inside a big corpus doc must score
-    containment 1.0 even though Jaccard is tiny; partial overlap scores
-    the overlap fraction; disjoint docs produce no row."""
-    bench_text = "the quick brown fox jumps over the lazy dog"
-    benchmarks = _df(spark, [(0, bench_text)])
-    filler = " ".join(f"w{i}" for i in range(60))
-    corpus = _df(
-        spark,
-        [
-            # full quote buried in filler → every benchmark 3-gram present
-            (100, filler + " " + bench_text + " " + filler),
-            # only the first 5 words → 3 of the 7 benchmark 3-grams
-            (101, "the quick brown fox jumps " + filler),
-            # disjoint
-            (102, filler),
-        ],
-    )
-    got = {
-        (r["doc_id"], r["benchmark_id"]): r["containment"]
-        for r in ngram_containment(corpus, benchmarks, n=3).collect()
-    }
-    assert got[(100, 0)] == pytest.approx(1.0)
-    assert got[(101, 0)] == pytest.approx(3 / 7)
-    assert (102, 0) not in got
-
-
-def test_ngram_containment_asymmetric_vs_jaccard(spark):
-    """Containment is per-benchmark-denominator: the same overlap scores
-    differently against a small and a large benchmark doc."""
-    a = "alpha beta gamma delta"  # 2 3-grams
-    b = "alpha beta gamma delta epsilon zeta eta theta"  # 6 3-grams
-    benchmarks = _df(spark, [(0, a), (1, b)])
-    corpus = _df(spark, [(100, "alpha beta gamma delta " + " ".join(f"x{i}" for i in range(20)))])
-    got = {
-        (r["doc_id"], r["benchmark_id"]): r["containment"]
-        for r in ngram_containment(corpus, benchmarks, n=3).collect()
-    }
-    assert got[(100, 0)] == pytest.approx(1.0)
-    assert got[(100, 1)] == pytest.approx(2 / 6)
-
-
-def test_ngram_containment_plan_broadcasts_benchmark(spark):
-    """Scale shape: BOTH joins (shingle intersect, denominator sizes)
-    broadcast the tiny benchmark side — the corpus is never shuffled on
-    shingle, and no sort-merge join appears."""
-    docs = spark.range(200).selectExpr(
-        "id AS doc_id", "concat('w', id, ' w', id+1, ' w', id+2, ' w', id+3) AS text"
-    )
-    out = ngram_containment(
-        docs.filter("doc_id >= 10"), docs.filter("doc_id < 10"), n=3
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_ngram_containment_threshold(spark):
-    benchmarks = _df(spark, [(0, "a b c d e f")])
-    corpus = _df(spark, [(100, "a b c zzz"), (101, "a b c d e f")])
-    got = ngram_containment(corpus, benchmarks, n=3, threshold=0.9).collect()
-    assert [(r["doc_id"], r["benchmark_id"]) for r in got] == [(101, 0)]
 
 
 def test_weighted_pagerank_nonpositive_weights(spark):
@@ -171,35 +100,3 @@ def test_sessionize_gap_boundaries(spark):
         for r in sessionize(events, gap_minutes=30).collect()
     }
     assert got == {(1, 1): (2, 3.0), (1, 2): (1, 4.0), (2, 1): (1, 8.0)}
-
-
-def test_near_dup_default_cap_reports_dropped(spark, caplog):
-    """The default-capped composition must surface capped coverage (never
-    silent) and, when nothing is capped, match the uncapped result."""
-    import logging
-
-    from pregel_golang_implementation_spark.operators.dedup import near_dup_clusters
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = _df(
-        spark,
-        [(i, base + f" tail{i}") for i in range(8)] + [(100, "totally different words here")],
-    )
-    with caplog.at_level(logging.WARNING):
-        capped = near_dup_clusters(docs, threshold=0.3, max_bucket_size=2)
-        capped.count()
-    assert any("skipped" in r.message for r in caplog.records)
-
-    caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        default = {
-            (r["doc_id"], r["cluster_id"])
-            for r in near_dup_clusters(docs, threshold=0.3).collect()
-        }
-    assert not any("skipped" in r.message for r in caplog.records)
-    uncapped = {
-        (r["doc_id"], r["cluster_id"])
-        for r in near_dup_clusters(docs, threshold=0.3, max_bucket_size=None).collect()
-    }
-    assert default == uncapped
-    assert any(c == 0 and d != 0 for d, c in default)  # the near-dups clustered

@@ -5,7 +5,6 @@ session/window value sums, oracle-twin robustness for missing JSON props.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.events import (
     event_window_stats,
@@ -146,42 +145,3 @@ def test_degree_ordered_triangles_bound_hub_wedges(spark):
     }
     assert pv[hub] == n_tri  # hub corners every triangle
     assert pv[leaves[0]] == 1 and pv[leaves[1]] == 2
-
-
-# --------------------------------------------------- simhash near-dups
-
-
-def test_simhash_banding_has_perfect_recall(spark):
-    """Pigeonhole guarantee: with max_hamming+1 bands, every pair within
-    max_hamming differing bits shares >=1 whole band — the banded plan
-    must return exactly the brute-force n² Hamming join's pairs."""
-    from pregel_golang_implementation_spark.operators.dedup import (
-        simhash,
-        simhash_near_dups,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(i, base + f" tail{i % 7}") for i in range(40)] + [
-        (100, base),
-        (101, base + " x"),
-        (102, "completely different text about graph engines at scale"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = simhash(docs, bits=16)
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_ha"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_hb"))
-    brute = (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-    )
-    want = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in brute.collect()}
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_near_dups(docs, bits=16, max_hamming=3).collect()
-    }
-    assert got == want and len(want) > 0

@@ -128,27 +128,7 @@ def main() -> None:
         )
     )
 
-    # 4. ngram_jaccard with candidate pairs: the pair predicate sits BELOW
-    # the shingle self-join and the n_inter aggregate (semi-joins to the
-    # candidate doc sets + pairs-driven join) — an all-pairs co-occurrence
-    # blow-up can no longer materialize.
-    from pregel_golang_implementation_spark.operators.dedup import (
-        lsh_bands,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard,
-        word_shingles,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sig = minhash_signatures(word_shingles(docs, n=3), num_hashes=16)
-    pairs = lsh_candidate_pairs(lsh_bands(sig, rows_per_band=4))
-    verified = ngram_jaccard(docs, pairs=pairs, shingle_n=3)
-    sections.append(
-        ("ngram_jaccard verify with LSH pairs (predicate below the aggregate)", grab(verified))
-    )
-
-    # 5. LPA mode combine: must plan as partial+final HashAggregate
+    # 4. LPA mode combine: must plan as partial+final HashAggregate
     # pairs with NO Window (the r5 windowless argmax) — a window here
     # would reintroduce the per-id single-task sort on hub vertices.
     from pregel_golang_implementation_spark.plans.spec import combine_messages
