@@ -8,6 +8,9 @@ the standard published treatment: redistribute uniformly each superstep via
 a scalar global aggregate — never a driver-side collect of state.
 
 Scale notes:
+  - the graph is laid out once: the runner's one edge shuffle (hash by
+    src) also carries the dedup and 1/outdeg (``rank_flow``), and one
+    more job checkpoints the vertex set and observes N.
   - 1/outdeg is baked into the edge weight once, so the per-superstep
     message expression is a single multiply inside whole-stage codegen.
   - the dangling mass is one scalar per superstep, piggybacked on the
@@ -18,7 +21,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import contextlib
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
@@ -116,118 +121,46 @@ def personalized_pagerank_spec(damping: float = 0.85, tol: float = 1e-6) -> Algo
     )
 
 
-def personalized_pagerank(
-    spark: SparkSession,
-    edges: DataFrame,
-    source_ids: list[int],
-    damping: float = 0.85,
-    tol: float = 1e-6,
-    max_supersteps: int = 100,
-    **runner_kwargs,
-) -> PregelResult:
-    """Personalized PageRank from a source set (uniform teleport over it).
-    Result state: (id, value=rank); ranks sum to 1 (±fp error).
-
-    Every source id must exist in the edge-derived vertex set: a missing
-    source would silently shrink the teleport vector below 1 and the ranks
-    would no longer sum to 1 despite this docstring's claim — checked with
-    one cheap isin count over the vertices and raised loudly instead."""
-    if not source_ids:
-        raise ValueError(
-            "personalized_pagerank needs a non-empty source_ids — the "
-            "teleport vector must sum to 1"
-        )
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, False, cache=True)
-    try:
-        srcs = sorted({int(s) for s in source_ids})
-        present = vertices.filter(F.col("id").isin(srcs)).count()
-        if present != len(srcs):
-            raise ValueError(
-                f"personalized_pagerank: {len(srcs) - present} of {len(srcs)} "
-                "source_ids are not vertices of the graph — the teleport vector "
-                "would sum below 1; pass only ids that appear in the edge table"
-            )
-        k = float(len(srcs))
-        vertices = vertices.withColumn(
-            "p",
-            F.when(F.col("id").isin(srcs), F.lit(1.0 / k)).otherwise(F.lit(0.0)),
-        )
-        spec = personalized_pagerank_spec(damping=damping, tol=tol)
-        spec.max_supersteps = max_supersteps
-        runner = PregelRunner(spark, spec, **runner_kwargs)
-        return runner.run(pr_edges, vertices=vertices)
-    finally:
-        for c in caches:
-            c.unpersist()
-
-
-def _build_pagerank_graph(
-    edges: DataFrame, weighted: bool, cache: bool
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Shared builder for ``prepare_pagerank_graph``.  ``cache=True``
-    persists the deduped edge list and the vertex frame — the prep
-    lineage has THREE consumers (pr_edges, the caller's vertex count,
-    and the runner's state init), and uncached each one re-runs the
-    source scan + dedup shuffle (measured: 6.3s of a 16.7s warm sf0.1
-    PageRank was prep recomputation, r6 profile).  Returns the list of
-    persisted frames for the caller to unpersist after the runner has
-    materialized its own edge cache and init state."""
-    caches: list[DataFrame] = []
-    # ONE exchange for the whole prep chain (guide §2.4 "two operations
-    # keyed the same way can share one exchange"): hash(src) satisfies
-    # the (src, dst) clustering the dedup/collapse aggregate needs, the
-    # src-keyed outdeg aggregate, AND the pr_edges join — so after this
-    # repartition none of them shuffles again.  Values are unchanged
-    # (same aggregates, same keys).
+def rank_flow(edges: DataFrame, weighted: bool) -> DataFrame:
+    """(src, dst, weight) hash-partitioned by src → the PageRank edge
+    list: duplicate edges collapsed, weight = the fraction of src's rank
+    shipped along the edge.  Keyed by src (the dedup's (src, dst) keys
+    include it, the out-degree window is partitioned by it), so neither
+    step shuffles again — the one place the weight formula lives."""
+    per_src = Window.partitionBy("src")
     if weighted:
-        e = (
-            edges.select(
-                F.col("src").cast("long"),
-                F.col("dst").cast("long"),
-                F.col("weight").cast("double").alias("_w"),
-            )
-            .repartition("src")
-            .groupBy("src", "dst")
-            .agg(F.sum("_w").alias("_w"))
-        )
-        if cache:
-            e = e.persist()
-            caches.append(e)
-        pos = e.filter(F.col("_w") > 0)
-        outdeg = pos.groupBy("src").agg(F.sum("_w").alias("_wsum"))
-        pr_edges = pos.join(outdeg, "src").select(
-            "src", "dst", (F.col("_w") / F.col("_wsum")).alias("weight")
-        )
+        e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("_w")).filter(F.col("_w") > 0)
+        weight = F.col("_w") / F.sum("_w").over(per_src)
     else:
-        e = (
-            edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-            .repartition("src")
-            .dropDuplicates(["src", "dst"])
-        )
-        if cache:
-            e = e.persist()
-            caches.append(e)
-        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        pr_edges = e.join(outdeg, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("weight")
-        )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(outdeg.select(F.col("src").alias("id"), F.lit(True).alias("_has_out")), "id", "left")
-        .select("id", F.col("_has_out").isNull().alias("is_dangling"))
-    )
-    if cache:
-        vertices = vertices.persist()
-        caches.append(vertices)
-    return pr_edges, vertices, caches
+        e = edges.select("src", "dst").dropDuplicates()
+        weight = F.lit(1.0) / F.count(F.lit(1)).over(per_src)
+    return e.select("src", "dst", weight.alias("weight"))
+
+
+def _vertex_set(pr_edges: DataFrame, edges: DataFrame, weighted: bool) -> DataFrame:
+    """vertices(id, is_dangling) as one aggregate: a vertex is dangling
+    unless it is the src of a PageRank edge.  A weighted graph also keeps
+    the endpoints of the edges ``rank_flow`` dropped (collapsed weight
+    ≤ 0), which then count as dangling, so the raw ``edges`` join in."""
+    ends = [
+        pr_edges.select(F.col("src").alias("id"), F.lit(False).alias("is_dangling")),
+        pr_edges.select(F.col("dst").alias("id"), F.lit(True).alias("is_dangling")),
+    ]
+    if weighted:
+        ends += [
+            edges.select(F.col(c).cast("long").alias("id"), F.lit(True).alias("is_dangling"))
+            for c in ("src", "dst")
+        ]
+    out = ends[0]
+    for part in ends[1:]:
+        out = out.union(part)
+    return out.groupBy("id").agg(F.bool_and("is_dangling").alias("is_dangling"))
 
 
 def prepare_pagerank_graph(
     edges: DataFrame, weighted: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    """Normalize a directed edge list for PageRank.
+    """Normalize a directed edge list for PageRank, lazily.
 
     Returns (pr_edges, vertices):
       pr_edges(src, dst, weight) — duplicate edges collapsed; weight is the
@@ -245,8 +178,39 @@ def prepare_pagerank_graph(
     marked dangling (its mass redistributes), exactly like a vertex that
     never had out-edges; the vertex itself stays in the graph.
     """
-    pr_edges, vertices, _ = _build_pagerank_graph(edges, weighted, cache=False)
-    return pr_edges, vertices
+    cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
+    if weighted:
+        cols.append(F.col("weight").cast("double"))
+    pr_edges = rank_flow(edges.select(*cols).repartition("src"), weighted)
+    return pr_edges, _vertex_set(pr_edges, edges, weighted)
+
+
+@contextlib.contextmanager
+def _pagerank_graph(
+    spark: SparkSession, edges: DataFrame, weighted: bool, runner_kwargs: dict, *aggs: Column
+):
+    """Lay the PageRank graph out once for a runner: yields ``(runner,
+    layout, vertices, row)``, where one job checkpointed the vertex set
+    and observed N (``row["_n"]``) and ``aggs`` over it.  The runner's
+    spec is set once N is known.  Both the layout and the vertex
+    checkpoint are released on the way out: the result state is a
+    checkpoint of its own, and the init barrier copied the vertices."""
+    if weighted and "weight" not in edges.columns:
+        # the layout would default it to 1.0, silently unweighting the run
+        raise ValueError("weighted PageRank needs a weight column")
+    runner = PregelRunner(spark, None, **runner_kwargs)  # the spec needs N
+    lay = runner.layout(edges, lambda e: rank_flow(e, weighted))
+    try:
+        vertices, row = runner.checkpoint(
+            _vertex_set(lay.edges, edges, weighted), lay,
+            F.count(F.lit(1)).alias("_n"), *aggs,
+        )
+        try:
+            yield runner, lay, vertices, row
+        finally:
+            PregelRunner.release(vertices)
+    finally:
+        lay.unpersist()
 
 
 def pagerank(
@@ -264,18 +228,53 @@ def pagerank(
     instead of uniformly over out-edges.
     Result state: (id, value=rank, ...); ranks sum to 1 (±fp error).
     """
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, weighted, cache=True)
-    try:
-        n = vertices.count()
-        spec = pagerank_spec(n, damping=damping, tol=tol)
-        spec.max_supersteps = max_supersteps
-        runner = PregelRunner(spark, spec, **runner_kwargs)
-        # run() materializes its own edge cache and init state, after which
-        # nothing the caller holds references the prep caches
-        return runner.run(pr_edges, vertices=vertices)
-    finally:
-        for c in caches:
-            c.unpersist()
+    with _pagerank_graph(spark, edges, weighted, runner_kwargs) as (runner, lay, vertices, row):
+        runner.spec = pagerank_spec(row["_n"], damping=damping, tol=tol)
+        runner.spec.max_supersteps = max_supersteps
+        return runner.run(lay, vertices=vertices)
+
+
+def personalized_pagerank(
+    spark: SparkSession,
+    edges: DataFrame,
+    source_ids: list[int],
+    damping: float = 0.85,
+    tol: float = 1e-6,
+    max_supersteps: int = 100,
+    **runner_kwargs,
+) -> PregelResult:
+    """Personalized PageRank from a source set (uniform teleport over it).
+    Result state: (id, value=rank); ranks sum to 1 (±fp error).
+
+    Every source id must exist in the edge-derived vertex set: a missing
+    source would silently shrink the teleport vector below 1 and the ranks
+    would no longer sum to 1 despite this docstring's claim — the present
+    sources are counted on the job that builds the vertex set, and a
+    shortfall is raised loudly instead."""
+    if not source_ids:
+        raise ValueError(
+            "personalized_pagerank needs a non-empty source_ids — the "
+            "teleport vector must sum to 1"
+        )
+    srcs = sorted({int(s) for s in source_ids})
+    is_source = F.col("id").isin(srcs)
+    present = F.count(F.when(is_source, F.lit(1))).alias("_present")
+    with _pagerank_graph(spark, edges, False, runner_kwargs, present) as (
+        runner, lay, vertices, row,
+    ):
+        if row["_present"] != len(srcs):
+            raise ValueError(
+                f"personalized_pagerank: {len(srcs) - row['_present']} of {len(srcs)} "
+                "source_ids are not vertices of the graph — the teleport vector "
+                "would sum below 1; pass only ids that appear in the edge table"
+            )
+        k = float(len(srcs))
+        vertices = vertices.withColumn(
+            "p", F.when(is_source, F.lit(1.0 / k)).otherwise(F.lit(0.0))
+        )
+        runner.spec = personalized_pagerank_spec(damping=damping, tol=tol)
+        runner.spec.max_supersteps = max_supersteps
+        return runner.run(lay, vertices=vertices)
 
 
 def incremental_pagerank(
@@ -300,9 +299,8 @@ def incremental_pagerank(
     recurrence from that seed (what the oracle unrolls); running to
     convergence yields the standard PageRank.
     """
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, False, cache=True)
-    try:
-        n = vertices.count()
+    with _pagerank_graph(spark, edges, False, runner_kwargs) as (runner, lay, vertices, row):
+        n = row["_n"]
         seeded = vertices.join(
             prior_ranks.select("id", F.col("value").alias("_p")), "id", "left"
         ).select(
@@ -311,10 +309,5 @@ def incremental_pagerank(
             F.lit(True).alias("active"),
             F.col("is_dangling"),
         )
-        runner = PregelRunner(
-            spark, pagerank_spec(n, damping=damping, tol=tol), **runner_kwargs
-        )
-        return runner.run(pr_edges, state=seeded, max_supersteps=max_supersteps)
-    finally:
-        for c in caches:
-            c.unpersist()
+        runner.spec = pagerank_spec(n, damping=damping, tol=tol)
+        return runner.run(lay, state=seeded, max_supersteps=max_supersteps)

@@ -39,9 +39,10 @@ import math
 import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_messages
@@ -88,6 +89,27 @@ class PregelResult:
         return sum(m.messages_sent for m in self.metrics)
 
 
+@dataclass(frozen=True)
+class Layout:
+    """Edges laid out for the loop by ``PregelRunner.layout``: cached
+    ``(src, dst, weight)``, hash-partitioned by src into
+    ``num_partitions`` and sorted within partitions.  ``fingerprint`` is
+    the order-free sum of ``xxhash64(src, dst, weight)`` mod 2^64; with
+    ``num_edges`` it names the graph in a checkpoint's manifest."""
+
+    edges: DataFrame
+    num_partitions: int
+    num_edges: int
+    fingerprint: int
+
+    @property
+    def graph(self) -> dict:
+        return {"edges": self.num_edges, "fingerprint": self.fingerprint}
+
+    def unpersist(self) -> None:
+        self.edges.unpersist()
+
+
 class PregelRunner:
     def __init__(
         self,
@@ -125,43 +147,78 @@ class PregelRunner:
     MIN_PARTITIONS = 8
     BROADCAST_FRONTIER_MAX = 100_000  # frontiers up to this size are broadcast
 
-    def _prepare_edges(self, edges: DataFrame) -> DataFrame:
+    def layout(
+        self,
+        edges: DataFrame,
+        transform: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> Layout:
+        """Lay the edges out for the loop: the one place edges are
+        shuffled.  ``(src, dst, weight)`` is hash-partitioned by ``src``;
+        ``transform``, if given, then reshapes it using only that
+        clustering (a per-src aggregate or window adds no exchange) and
+        must return the same three columns.  One Spark job persists the
+        result and observes its size and fingerprint.  The caller owns
+        the returned layout and releases it with ``Layout.unpersist``."""
         cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
         if "weight" in edges.columns:
             cols.append(F.col("weight").cast("double"))
         else:
             cols.append(F.lit(1.0).alias("weight"))
         e = edges.select(*cols)
-        # The layout is sorted within partitions so the cached edge order
-        # is a function of the DATA, not of shuffle-fetch interleaving:
-        # every float message-sum accumulates map-side in edge order,
-        # regardless of how the CALLER's prep plan happened to order rows.
-        # Bit-identical float runs of the same graph (resume vs cold)
-        # also need the reduce side to merge the partial sums in a fixed
-        # order, which holds in local mode only — tests pin float
-        # bit-identity there and nowhere else.
-        # One per-partition sort, once per run, amortized over every
-        # superstep; the per-step joins are hash-based and don't need it.
-        order = e.columns  # total order over every column ⇒ ties can't reorder
-        staged = None
-        n = self.num_partitions
-        if n is None:
-            # size the layout to the data (scale-adaptive note in
-            # __init__) WITHOUT running the edge lineage twice: cache the
-            # un-laid-out edges, count them to pick the partition count,
-            # then shuffle FROM the cache into the final layout and drop
-            # the staging cache — the lineage executes exactly once.
-            e = staged = e.persist()
-            n_edges = staged.count()
-            n = min(
-                self._conf_partitions,
-                max(self.MIN_PARTITIONS, math.ceil(n_edges / self.EDGES_PER_PARTITION)),
-            )
-        e = e.repartition(n, "src").sortWithinPartitions(*order).persist()
-        e.count()  # materialize once; every superstep reuses this layout
-        if staged is not None:
-            staged.unpersist()
-        return e
+        with self._loop_conf():
+            staged = None
+            n = self.num_partitions
+            if n is None:
+                # size the layout to the data (scale-adaptive note in
+                # __init__) WITHOUT running the edge lineage twice: cache
+                # the un-laid-out edges, count them to pick the partition
+                # count, then shuffle FROM the cache into the layout and
+                # drop the staging cache — the lineage executes once.
+                e = staged = e.persist()
+                n = min(
+                    self._conf_partitions,
+                    max(self.MIN_PARTITIONS, math.ceil(staged.count() / self.EDGES_PER_PARTITION)),
+                )
+            e = e.repartition(n, "src")
+            if transform is not None:
+                e = transform(e)
+            # The layout is sorted within partitions so the cached edge
+            # order is a function of the DATA, not of shuffle-fetch
+            # interleaving: every float message-sum accumulates map-side
+            # in edge order.  Bit-identical float runs of the same graph
+            # (resume vs cold) also need the reduce side to merge the
+            # partial sums in a fixed order, which holds in local mode
+            # only — tests pin float bit-identity there and nowhere else.
+            # A total order over every column, so ties can't reorder.
+            e = e.sortWithinPartitions(*e.columns).persist()
+            # materialize once, observing the size and an order-free
+            # fingerprint on the same job; the 64-bit hash is summed as
+            # two 32-bit halves so no partial sum can overflow a long
+            h = F.xxhash64("src", "dst", "weight")
+            row = e.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.shiftright(h, 32)).alias("hi"),
+                F.sum(h.bitwiseAND(0xFFFFFFFF)).alias("lo"),
+            ).collect()[0]
+            if staged is not None:
+                staged.unpersist()
+        fingerprint = ((int(row["hi"] or 0) << 32) + int(row["lo"] or 0)) % (1 << 64)
+        return Layout(e, n, int(row["n"]), fingerprint)
+
+    @contextlib.contextmanager
+    def _laid_out(self, edges: DataFrame | Layout):
+        """``edges`` as a Layout: a caller's Layout as it is (the caller
+        owns it), raw edges laid out here and released on the way out —
+        a long-lived session runs many jobs through many runners, and
+        leaked edge caches evict useful blocks."""
+        if isinstance(edges, Layout):
+            yield edges
+            return
+        lay = self.layout(edges)
+        try:
+            yield lay
+        finally:
+            lay.unpersist()
 
     @staticmethod
     def vertices_from_edges(edges: DataFrame) -> DataFrame:
@@ -194,13 +251,25 @@ class PregelRunner:
         re-shuffle state, and it cuts the lineage every step."""
         return frame.observe(obs, *aggs).select(*cols).localCheckpoint(eager=True)
 
-    def _release(self, barrier: DataFrame) -> None:
+    @staticmethod
+    def release(barrier: DataFrame) -> None:
         """Drop a dead barrier's blocks now rather than at the JVM's next
         GC; a barrier's logical plan is the LogicalRDD over its checkpoint.
         (``RDD.unpersist`` would do the same but logs a lost-lineage
         warning for every checkpointed RDD, i.e. once per superstep.)"""
         rdd = barrier._jdf.queryExecution().logical().rdd()
-        self.spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+        barrier.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+
+    def checkpoint(self, frame: DataFrame, layout: Layout, *aggs: Column) -> tuple[DataFrame, Row]:
+        """``frame`` stored as one eager localCheckpoint with ``aggs``
+        observed on that same job, under the loop's settings for
+        ``layout``: how an operator derives a per-graph input (a vertex
+        set and its size) from a layout in one job.  The caller releases
+        the checkpoint with ``release`` once nothing reads it."""
+        obs = Observation("checkpoint")
+        with self._loop_conf(layout.num_partitions):
+            out = self._barrier(frame, obs, list(aggs), frame.columns)
+        return out, obs.get
 
     # ------------------------------------------------------------- superstep
 
@@ -258,40 +327,35 @@ class PregelRunner:
         # superstep (A/B on 19M edges, local[16]: literal ~3s/step
         # steady vs column 5-33s/step)
         gcols = {k: F.lit(float(g[k] or 0.0)) for k in spec.global_aggs}
-        new_value = spec.apply_fn(F.col("value"), F.col("msg"), gcols)
-        out = joined.select(
+        old, msg = F.col("value"), F.col("msg")
+        new = spec.apply_fn(old, msg, gcols).cast("double")
+        # one projection: each DataFrame call is analysed on the spot, so
+        # value, active and delta are built as one select over the join
+        return joined.select(
             F.col("id"),
             *[F.col(c) for c in spec.static_cols],
-            F.col("value").alias("_prev"),
-            new_value.cast("double").alias("value"),
-            F.col("msg").alias("_msg"),
+            new.alias("value"),
+            spec.active_fn(old, new, msg).alias("active"),
+            # inf-inf would be NaN; equal values (incl. ±inf) are delta 0
+            F.when(new.eqNullSafe(old), F.lit(0.0)).otherwise(F.abs(new - old)).alias("_delta"),
         )
-        out = out.withColumn(
-            "active", spec.active_fn(F.col("_prev"), F.col("value"), F.col("_msg"))
-        )
-        # inf-inf would be NaN; equal values (incl. ±inf) are delta 0
-        out = out.withColumn(
-            "_delta",
-            F.when(F.col("value").eqNullSafe(F.col("_prev")), F.lit(0.0)).otherwise(
-                F.abs(F.col("value") - F.col("_prev"))
-            ),
-        )
-        return out.drop("_msg")
 
     # ------------------------------------------------------------------ run
 
     @contextlib.contextmanager
-    def _loop_conf(self):
-        """Run the loop with AQE off (so a barrier is one job and keeps its
+    def _loop_conf(self, num_partitions: int | None = None):
+        """Run with AQE off (so a barrier is one job and keeps its
         partitioning) and restore the caller's settings on the way out.
-        ``run`` also pins the shuffle partitions to the resolved layout,
-        so the message combine lands co-partitioned with state.  The
-        settings are session-wide: another thread's job on the same
-        session during a run sees them too."""
+        Given a layout's ``num_partitions``, the shuffle partitions are
+        pinned to it, so the message combine lands co-partitioned with
+        state.  The settings are session-wide: another thread's job on
+        the same session during a run sees them too."""
         conf = self.spark.conf
         keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
         saved = {k: conf.get(k) for k in keys}
         conf.set("spark.sql.adaptive.enabled", "false")
+        if num_partitions is not None:
+            conf.set("spark.sql.shuffle.partitions", str(num_partitions))
         try:
             yield
         finally:
@@ -300,7 +364,7 @@ class PregelRunner:
 
     def run(
         self,
-        edges: DataFrame,
+        edges: DataFrame | Layout,
         vertices: DataFrame | None = None,
         state: DataFrame | None = None,
         start_superstep: int = 0,
@@ -309,7 +373,8 @@ class PregelRunner:
         """Run the BSP loop to convergence (no active vertices — the
         reference's all-workers-SEND_EMPTY condition, Master.go:1044-1063)
         or to ``max_supersteps`` (``None`` ⇒ the spec's cap; 0 runs no
-        superstep)."""
+        superstep).  ``edges`` is raw edges, laid out for this run and
+        released after it, or a caller's ``Layout``, used as it is."""
         spec = self.spec
         if max_supersteps is None:
             max_supersteps = spec.max_supersteps
@@ -327,35 +392,23 @@ class PregelRunner:
                     f"committed snapshot at step {found[0]}: resume() it or "
                     "use an empty dir"
                 )
-        with self._loop_conf():
-            edges = self._prepare_edges(edges)
-            # this run's partition count: the layout's, read back from it
-            n = edges.rdd.getNumPartitions()
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        # the result state is a checkpoint of its own, so it never
+        # depends on the layout's blocks
+        with self._laid_out(edges) as lay, self._loop_conf(lay.num_partitions):
             if state is None and vertices is None:
-                # derive vertices from the PREPARED (cached, partitioned)
-                # edge table, not the raw input: the distinct reads the
-                # edge cache instead of re-running the source scan lineage
-                vertices = self.vertices_from_edges(edges)
-            try:
-                return self._run_loop(
-                    edges, vertices, state, start_superstep, max_supersteps, n
-                )
-            finally:
-                # a long-lived session runs many jobs through many runners
-                # — leaked edge caches accumulate dead blocks and evict
-                # useful ones.  The result state is a checkpoint of its
-                # own, so it never depends on these blocks.
-                edges.unpersist()
+                # derive vertices from the laid-out (cached, partitioned)
+                # edges, not the raw input: the distinct reads the edge
+                # cache instead of re-running the source scan lineage
+                vertices = self.vertices_from_edges(lay.edges)
+            return self._run_loop(lay, vertices, state, start_superstep, max_supersteps)
 
     def _run_loop(
         self,
-        edges: DataFrame,
+        lay: Layout,
         vertices: DataFrame | None,
         state: DataFrame | None,
         start_superstep: int,
         max_steps: int,
-        num_partitions: int,
     ) -> PregelResult:
         spec = self.spec
         global_cols = [c.alias(k) for k, c in spec.global_aggs.items()]
@@ -366,7 +419,7 @@ class PregelRunner:
         # globals that superstep 1 applies
         obs = Observation(f"superstep_{start_superstep}")
         state = self._barrier(
-            state.repartition(num_partitions, "id"), obs,
+            state.repartition(lay.num_partitions, "id"), obs,
             [F.count(F.lit(1)).alias("_n"), *global_cols], state.columns,
         )
         g = {k: obs.get[k] for k in spec.global_aggs}
@@ -391,12 +444,12 @@ class PregelRunner:
             t0 = time.monotonic()
             obs = Observation(f"superstep_{step}")
             msg_obs = Observation(f"msgs_{step}")
-            full = self._one_superstep(state, edges, g, prev_active, msg_obs)
+            full = self._one_superstep(state, lay.edges, g, prev_active, msg_obs)
             new_state = self._barrier(full, obs, agg_cols, state_cols)
             wall = time.monotonic() - t0
             row = obs.get
             g = {k: row[k] for k in spec.global_aggs}
-            self._release(state)  # the previous barrier's blocks — now dead
+            self.release(state)  # the previous barrier's blocks — now dead
             state = new_state
 
             m = SuperstepMetrics(
@@ -415,7 +468,7 @@ class PregelRunner:
             if self.checkpoint_dir and self.checkpoint_every and (
                 step % self.checkpoint_every == 0
             ):
-                self._write_checkpoint(state, step, metrics, num_partitions)
+                self._write_checkpoint(state, step, metrics, lay)
                 last_ckpt_step = step
 
             if converged:
@@ -424,7 +477,7 @@ class PregelRunner:
         # a run that made no superstep (e.g. a resume with 0 steps left)
         # leaves the committed snapshot and its history as they were
         if self.checkpoint_dir and metrics and last_ckpt_step != step:
-            self._write_checkpoint(state, step, metrics, num_partitions)
+            self._write_checkpoint(state, step, metrics, lay)
         return PregelResult(
             state=state, supersteps=step - start_superstep, converged=converged,
             metrics=metrics,
@@ -437,7 +490,7 @@ class PregelRunner:
         state: DataFrame,
         step: int,
         metrics: list[SuperstepMetrics],
-        num_partitions: int,
+        lay: Layout,
     ) -> None:
         """Durable snapshot + manifest (replaces the master's verticesValue
         map, Master.go:28, and MASTER_SYNC replication, Master.go:810-821).
@@ -460,7 +513,8 @@ class PregelRunner:
             "algorithm": self.spec.name,
             "params": self.spec.params,
             "superstep": step,
-            "num_partitions": num_partitions,
+            "num_partitions": lay.num_partitions,
+            "graph": lay.graph,
             "static_cols": list(self.spec.static_cols),
             "partition_lineage": lineage,
             "counters": metrics[-1].to_dict() if metrics else {},
@@ -485,11 +539,14 @@ class PregelRunner:
                 best = (manifest["superstep"], manifest)
         return best
 
-    def resume(self, edges: DataFrame, max_supersteps: int | None = None) -> PregelResult:
+    def resume(
+        self, edges: DataFrame | Layout, max_supersteps: int | None = None
+    ) -> PregelResult:
         """Resume from the last committed checkpoint (reference semantics:
         restart from the last completed superstep's values; in-flight
         messages are pure functions of state so re-scatter is free —
-        Worker.go:641-654, SURVEY.md §4.4)."""
+        Worker.go:641-654, SURVEY.md §4.4).  ``edges`` is taken as in
+        ``run`` and must lay out to the graph the manifest names."""
         if self.checkpoint_dir is None:
             raise ValueError("resume() needs a checkpoint_dir to resume from")
         found = self.latest_checkpoint(self.checkpoint_dir)
@@ -523,7 +580,16 @@ class PregelRunner:
         # run()'s first barrier lays the snapshot out by hash(id), inside
         # the loop's AQE-off scope
         path = os.path.join(self.checkpoint_dir, f"step={step:06d}", "state")
-        return runner.run(
-            edges, state=self.spark.read.parquet(path), start_superstep=step,
-            max_supersteps=max_supersteps,
-        )
+        with runner._laid_out(edges) as lay:
+            # the snapshot is only meaningful on the graph it was computed
+            # on; a manifest that names no graph cannot vouch for one
+            if manifest.get("graph") != lay.graph:
+                raise ValueError(
+                    f"checkpoint at {self.checkpoint_dir!r} was written for a "
+                    f"different graph: manifest has {manifest.get('graph')}, "
+                    f"the edges lay out to {lay.graph}"
+                )
+            return runner.run(
+                lay, state=self.spark.read.parquet(path), start_superstep=step,
+                max_supersteps=max_supersteps,
+            )

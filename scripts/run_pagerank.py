@@ -65,7 +65,9 @@ def main() -> None:
 
     if args.resume:
         runner = PregelRunner(spark, cc_spec(args.max_supersteps), **kw)
-        res = runner.resume(symmetrize(edges))
+        # the edges connected_components lays out: resume checks the
+        # snapshot's graph fingerprint against them
+        res = runner.resume(symmetrize(edges, dedup=False))
     elif args.algorithm == "pagerank":
         res = pagerank(spark, edges, damping=args.damping, tol=args.tol,
                        max_supersteps=args.max_supersteps, **kw)

@@ -127,6 +127,33 @@ def test_run_refuses_to_rewrite_committed_steps(spark, tmp_path):
     assert PregelRunner.latest_checkpoint(ck) == committed
 
 
+def test_resume_refuses_a_different_graph(spark, tmp_path):
+    """A snapshot names the graph it was computed on: the manifest holds
+    the laid-out edge count and an order-free fingerprint, and resume()
+    refuses edges that lay out to another graph of the same size, and a
+    manifest that names no graph."""
+    ck = str(tmp_path / "ck_graph")
+    chain_a = _chain_edges(spark)  # ids 0..12
+    PregelRunner(spark, cc_spec(), checkpoint_dir=ck, checkpoint_every=1).run(
+        chain_a, max_supersteps=2
+    )
+    step, manifest = PregelRunner.latest_checkpoint(ck)
+    chain_b = symmetrize(spark.createDataFrame(  # ids 100..112, also 24 edges
+        [(i, i + 1, 1.0) for i in range(100, 112)], "src long, dst long, weight double"
+    ))
+    runner = PregelRunner(spark, cc_spec(), checkpoint_dir=ck)
+    with pytest.raises(ValueError, match="different graph"):
+        runner.resume(chain_b)
+    assert PregelRunner.latest_checkpoint(ck) == (step, manifest)
+    assert manifest["graph"]["edges"] == 24
+
+    del manifest["graph"]
+    with open(os.path.join(ck, f"step={step:06d}", "MANIFEST.json"), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="different graph"):
+        runner.resume(chain_a)
+
+
 def test_resume_without_checkpoint_dir_raises(spark):
     runner = PregelRunner(spark, cc_spec())
     with pytest.raises(ValueError, match="checkpoint_dir"):

@@ -70,7 +70,7 @@ def test_edge_layout_order_is_deterministic(spark):
 
     def layout():
         runner = PregelRunner(spark, pagerank_spec(n))
-        e = runner._prepare_edges(pr_edges)
+        e = runner.layout(pr_edges).edges
         rows = [
             tuple(r)
             for r in e.withColumn("p", F.spark_partition_id())

@@ -34,14 +34,14 @@ def test_runner_releases_edge_cache(spark):
     edges = _chain_edges(spark)
     runner = PregelRunner(spark, cc_spec())
     captured = {}
-    orig = runner._prepare_edges
+    orig = runner.layout
 
     def capture(e):
-        df = orig(e)
-        captured["edges"] = df
-        return df
+        lay = orig(e)
+        captured["edges"] = lay.edges
+        return lay
 
-    runner._prepare_edges = capture
+    runner.layout = capture
     res = runner.run(edges)
     lvl = captured["edges"].storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "edge cache leaked after run()"

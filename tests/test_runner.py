@@ -2,7 +2,8 @@
 exact per-step metrics against hand-computed counts, the ``max_supersteps``
 cap (including 0) on both ``run`` and ``resume``, the caller's session
 settings restored, dead barrier blocks released, the partition count
-resolved per run, and the message combine:
+resolved per run, the PageRank operator's job budget, a superstep plan
+that reads the cached edge layout, and the message combine:
 hand-computed inboxes and the map-side partial aggregate that absorbs
 inbox skew."""
 
@@ -198,11 +199,14 @@ def test_reused_runner_sizes_each_graph(spark, monkeypatch):
     assert runner.num_partitions is None
 
 
-def _pagerank_inputs(spark):
-    raw = spark.createDataFrame(
+def _pagerank_raw(spark):
+    return spark.createDataFrame(
         [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)], "src long, dst long"
     )
-    pr_edges, vertices = prepare_pagerank_graph(raw)
+
+
+def _pagerank_inputs(spark):
+    pr_edges, vertices = prepare_pagerank_graph(_pagerank_raw(spark))
     return pr_edges, vertices, vertices.count()
 
 
@@ -245,6 +249,74 @@ def test_one_job_per_superstep_and_conf_restored(spark, tmp_path):
     with pytest.raises(AnalysisException):
         PregelRunner(spark, cc_spec()).run(no_dst)
     assert conf() == caller
+
+
+def test_pagerank_operator_job_budget_and_conf_restored(spark):
+    """``operators.pagerank`` lays its graph out once: a k-step run on a
+    materialized input submits the edge layout, the vertex set, the
+    initial state and one job per superstep, and hands the caller's AQE
+    and shuffle-partition settings back."""
+    from pregel_golang_implementation_spark.operators.pagerank import pagerank
+
+    sc = spark.sparkContext
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    caller = {key: spark.conf.get(key) for key in keys}
+    assert caller["spark.sql.adaptive.enabled"] == "true"
+    raw = _pagerank_raw(spark).localCheckpoint(eager=True)
+    k = 4
+    sc.setJobGroup("pagerank-operator-budget", "k-step pagerank operator")
+    try:
+        res = pagerank(spark, raw, tol=0.0, max_supersteps=k)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.supersteps == k
+    assert len(sc.statusTracker().getJobIdsForGroup("pagerank-operator-budget")) <= k + 3
+    assert {key: spark.conf.get(key) for key in keys} == caller
+
+
+def _plan_outside_cache(description: str) -> tuple[list[str], dict[int, str]]:
+    """A formatted physical plan as (tree lines outside every
+    InMemoryRelation subtree, node number -> that node's details)."""
+    body = description.split("== Physical Plan ==\n", 1)[1]
+    tree, details = body.split("\n\n", 1)
+    nodes = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", details, re.S | re.M)
+    }
+    kept, cached_at = [], None
+    for line in tree.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in line else None
+        if cached_at is None:
+            kept.append(line)
+    return kept, nodes
+
+
+def test_superstep_reruns_no_layout_lineage(spark, executed_plans):
+    """A PageRank superstep reads the laid-out edges from the cache and
+    shuffles only the messages: outside the cached relation its plan
+    holds one Exchange, hash(id) over the combine's partial sum, and the
+    scatter join scans the edges through InMemoryTableScan.  A layout
+    the step plan fails to match in the cache, or one that lost its
+    hash(src) partitioning, shows up here as a second Exchange."""
+    from pregel_golang_implementation_spark.operators.pagerank import pagerank
+
+    raw = _pagerank_raw(spark).localCheckpoint(eager=True)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plans = executed_plans(lambda: pagerank(spark, raw, tol=0.0, max_supersteps=1))
+    steps = [p for p in plans if "partial_sum(msg" in p]
+    assert len(steps) == 1, plans
+    tree, nodes = _plan_outside_cache(steps[0])
+    exchanges = [i for i, line in enumerate(tree) if "Exchange" in line]
+    assert len(exchanges) == 1, tree
+    node = int(re.search(r"\((\d+)\)", tree[exchanges[0]]).group(1))
+    child = int(re.search(r"\((\d+)\)", tree[exchanges[0] + 1]).group(1))
+    assert re.search(rf"hashpartitioning\(id#\d+L, {n}\)", nodes[node]), nodes[node]
+    assert "partial_sum(msg" in nodes[child], nodes[child]
+    scans = [line for line in tree if "InMemoryTableScan" in line]
+    assert len(scans) == 1, tree
 
 
 def test_dead_barrier_blocks_are_released(spark):

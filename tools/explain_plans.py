@@ -22,6 +22,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.pagerank import (
+    rank_flow,
     pagerank_spec,
     prepare_pagerank_graph,
 )
@@ -47,12 +48,14 @@ def main() -> None:
     scan = li.filter(F.col("l_orderkey") < 1000).select("l_orderkey", "l_partkey")
     sections.append(("pruned+pushed parquet scan", grab(scan)))
 
-    # 2. one Pregel superstep (scatter join + combine agg + apply join)
+    # 2. one Pregel superstep (scatter join + combine agg + apply join),
+    # on the graph laid out as operators.pagerank lays it out
     edges = edges_from_lineitem(spark, sf_dir)
     pr_edges, vertices = prepare_pagerank_graph(edges)
     n = vertices.count()
     runner = PregelRunner(spark, pagerank_spec(n))
-    e = runner._prepare_edges(pr_edges)
+    lay = runner.layout(edges, lambda e: rank_flow(e, False))
+    e = lay.edges
     state = runner._init_state(vertices)
     state.count()  # materialize the cache exactly as the runner's first
     # action does — an unmaterialized cache makes AQE's initial plan
@@ -76,7 +79,7 @@ def main() -> None:
     sections.append(
         ("one PageRank superstep (scatter ⋈ + combine agg + apply ⋈)", step_plan)
     )
-    e.unpersist()
+    lay.unpersist()
 
     # 3. scale-safe vertex-id assignment: one range-partitioned pass,
     # checkpointed, then a projection adding per-partition offsets — NO
