@@ -22,6 +22,7 @@ Scale notes:
 from __future__ import annotations
 
 import contextlib
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -126,35 +127,34 @@ def rank_flow(edges: DataFrame, weighted: bool) -> DataFrame:
     list: duplicate edges collapsed, weight = the fraction of src's rank
     shipped along the edge.  Keyed by src (the dedup's (src, dst) keys
     include it, the out-degree window is partitioned by it), so neither
-    step shuffles again — the one place the weight formula lives."""
+    step shuffles again — the one place the weight formula lives.
+
+    Weighted: an edge whose collapsed weight is ≤ 0 (or null) has no
+    rank-flow interpretation — dividing by a ≤ 0 weight sum would send
+    NaN/Inf through every rank — so it gets weight 0 and carries no
+    rank.  It stays in the list, which keeps its endpoints vertices of
+    the graph (see ``_vertex_set``)."""
     per_src = Window.partitionBy("src")
     if weighted:
-        e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("_w")).filter(F.col("_w") > 0)
-        weight = F.col("_w") / F.sum("_w").over(per_src)
+        e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("_w"))
+        w = F.when(F.col("_w") > 0, F.col("_w"))
+        weight = F.coalesce(w / F.sum(w).over(per_src), F.lit(0.0))
     else:
         e = edges.select("src", "dst").dropDuplicates()
         weight = F.lit(1.0) / F.count(F.lit(1)).over(per_src)
     return e.select("src", "dst", weight.alias("weight"))
 
 
-def _vertex_set(pr_edges: DataFrame, edges: DataFrame, weighted: bool) -> DataFrame:
-    """vertices(id, is_dangling) as one aggregate: a vertex is dangling
-    unless it is the src of a PageRank edge.  A weighted graph also keeps
-    the endpoints of the edges ``rank_flow`` dropped (collapsed weight
-    ≤ 0), which then count as dangling, so the raw ``edges`` join in."""
-    ends = [
-        pr_edges.select(F.col("src").alias("id"), F.lit(False).alias("is_dangling")),
-        pr_edges.select(F.col("dst").alias("id"), F.lit(True).alias("is_dangling")),
-    ]
-    if weighted:
-        ends += [
-            edges.select(F.col(c).cast("long").alias("id"), F.lit(True).alias("is_dangling"))
-            for c in ("src", "dst")
-        ]
-    out = ends[0]
-    for part in ends[1:]:
-        out = out.union(part)
-    return out.groupBy("id").agg(F.bool_and("is_dangling").alias("is_dangling"))
+def _vertex_set(pr_edges: DataFrame) -> DataFrame:
+    """vertices(id, is_dangling) as one aggregate over ``rank_flow``'s
+    edges: every endpoint is a vertex, dangling unless it is the src of
+    an edge that carries rank (weight > 0)."""
+    return (
+        pr_edges.select(F.col("src").alias("id"), (F.col("weight") <= 0).alias("is_dangling"))
+        .union(pr_edges.select(F.col("dst").alias("id"), F.lit(True).alias("is_dangling")))
+        .groupBy("id")
+        .agg(F.bool_and("is_dangling").alias("is_dangling"))
+    )
 
 
 def prepare_pagerank_graph(
@@ -170,45 +170,50 @@ def prepare_pagerank_graph(
         so the same spec/dangling treatment applies unchanged)
       vertices(id, is_dangling)
 
-    Weighted path: rank flow is a probability split, so edges whose
-    collapsed weight is ≤ 0 are dropped — a negative or zero weight has no
-    rank-flow interpretation, and dividing by a ≤ 0 weight sum would send
-    NaN/Inf (0.0/0.0, x/0.0) silently through every downstream rank.  A
-    source whose entire outflow is dropped keeps no out-edges and is
-    marked dangling (its mass redistributes), exactly like a vertex that
-    never had out-edges; the vertex itself stays in the graph.
+    Weighted path: rank flow is a probability split, so an edge whose
+    collapsed weight is ≤ 0 carries no rank (weight 0, ``rank_flow``).  A
+    source whose entire outflow is non-positive is marked dangling (its
+    mass redistributes), exactly like a vertex that never had out-edges;
+    the vertex itself stays in the graph.
     """
     cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
     if weighted:
         cols.append(F.col("weight").cast("double"))
     pr_edges = rank_flow(edges.select(*cols).repartition("src"), weighted)
-    return pr_edges, _vertex_set(pr_edges, edges, weighted)
+    return pr_edges, _vertex_set(pr_edges)
 
 
 @contextlib.contextmanager
 def _pagerank_graph(
-    spark: SparkSession, edges: DataFrame, weighted: bool, runner_kwargs: dict, *aggs: Column
+    spark: SparkSession,
+    edges: DataFrame,
+    weighted: bool,
+    runner_kwargs: dict,
+    make_spec: Callable[[int], AlgorithmSpec],
+    *aggs: Column,
 ):
     """Lay the PageRank graph out once for a runner: yields ``(runner,
     layout, vertices, row)``, where one job checkpointed the vertex set
-    and observed N (``row["_n"]``) and ``aggs`` over it.  The runner's
-    spec is set once N is known.  Both the layout and the vertex
-    checkpoint are released on the way out: the result state is a
-    checkpoint of its own, and the init barrier copied the vertices."""
+    and observed N (``row["_n"]``) and ``aggs`` over it, and the runner's
+    spec is ``make_spec(N)``.  The runner's run releases the vertex
+    checkpoint once its initial state is stored; the layout is released
+    on the way out, as the result state is a checkpoint of its own."""
     if weighted and "weight" not in edges.columns:
         # the layout would default it to 1.0, silently unweighting the run
         raise ValueError("weighted PageRank needs a weight column")
-    runner = PregelRunner(spark, None, **runner_kwargs)  # the spec needs N
+    # laying out and checkpointing read no spec; it is set below, once N
+    # is known and before the runner is handed out
+    runner = PregelRunner(spark, None, **runner_kwargs)
     lay = runner.layout(edges, lambda e: rank_flow(e, weighted))
     try:
         vertices, row = runner.checkpoint(
-            _vertex_set(lay.edges, edges, weighted), lay,
-            F.count(F.lit(1)).alias("_n"), *aggs,
+            _vertex_set(lay.edges), lay, F.count(F.lit(1)).alias("_n"), *aggs,
         )
         try:
+            runner.spec = make_spec(row["_n"])
             yield runner, lay, vertices, row
         finally:
-            PregelRunner.release(vertices)
+            PregelRunner.release(vertices)  # if no run released it
     finally:
         lay.unpersist()
 
@@ -228,10 +233,11 @@ def pagerank(
     instead of uniformly over out-edges.
     Result state: (id, value=rank, ...); ranks sum to 1 (±fp error).
     """
-    with _pagerank_graph(spark, edges, weighted, runner_kwargs) as (runner, lay, vertices, row):
-        runner.spec = pagerank_spec(row["_n"], damping=damping, tol=tol)
-        runner.spec.max_supersteps = max_supersteps
-        return runner.run(lay, vertices=vertices)
+    spec = lambda n: pagerank_spec(n, damping=damping, tol=tol)  # noqa: E731
+    with _pagerank_graph(spark, edges, weighted, runner_kwargs, spec) as (
+        runner, lay, vertices, _,
+    ):
+        return runner.run(lay, vertices=vertices, max_supersteps=max_supersteps)
 
 
 def personalized_pagerank(
@@ -259,7 +265,8 @@ def personalized_pagerank(
     srcs = sorted({int(s) for s in source_ids})
     is_source = F.col("id").isin(srcs)
     present = F.count(F.when(is_source, F.lit(1))).alias("_present")
-    with _pagerank_graph(spark, edges, False, runner_kwargs, present) as (
+    spec = lambda n: personalized_pagerank_spec(damping=damping, tol=tol)  # noqa: E731
+    with _pagerank_graph(spark, edges, False, runner_kwargs, spec, present) as (
         runner, lay, vertices, row,
     ):
         if row["_present"] != len(srcs):
@@ -272,9 +279,7 @@ def personalized_pagerank(
         vertices = vertices.withColumn(
             "p", F.when(is_source, F.lit(1.0 / k)).otherwise(F.lit(0.0))
         )
-        runner.spec = personalized_pagerank_spec(damping=damping, tol=tol)
-        runner.spec.max_supersteps = max_supersteps
-        return runner.run(lay, vertices=vertices)
+        return runner.run(lay, vertices=vertices, max_supersteps=max_supersteps)
 
 
 def incremental_pagerank(
@@ -299,7 +304,10 @@ def incremental_pagerank(
     recurrence from that seed (what the oracle unrolls); running to
     convergence yields the standard PageRank.
     """
-    with _pagerank_graph(spark, edges, False, runner_kwargs) as (runner, lay, vertices, row):
+    spec = lambda n: pagerank_spec(n, damping=damping, tol=tol)  # noqa: E731
+    with _pagerank_graph(spark, edges, False, runner_kwargs, spec) as (
+        runner, lay, vertices, row,
+    ):
         n = row["_n"]
         seeded = vertices.join(
             prior_ranks.select("id", F.col("value").alias("_p")), "id", "left"
@@ -309,5 +317,4 @@ def incremental_pagerank(
             F.lit(True).alias("active"),
             F.col("is_dangling"),
         )
-        runner.spec = pagerank_spec(n, damping=damping, tol=tol)
         return runner.run(lay, state=seeded, max_supersteps=max_supersteps)

@@ -50,6 +50,14 @@ from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine
 STATE_SCHEMA_DOC = "state(id: long, value: double, active: boolean, *static)"
 
 
+def sum64(c: Column) -> Column:
+    """The exact sum of a long column at any row count: a decimal(28,0)
+    sum widens to decimal(38,0), where a long sum (ANSI mode) raises on
+    overflow past 2^63 — about 4e9 hashes.  Fold it mod 2^64 on the
+    driver for an order-free 64-bit digest."""
+    return F.sum(c.cast("decimal(28,0)"))
+
+
 @dataclass
 class SuperstepMetrics:
     """Per-superstep counters (north_rule: messages sent, active vertices,
@@ -94,8 +102,10 @@ class Layout:
     """Edges laid out for the loop by ``PregelRunner.layout``: cached
     ``(src, dst, weight)``, hash-partitioned by src into
     ``num_partitions`` and sorted within partitions.  ``fingerprint`` is
-    the order-free sum of ``xxhash64(src, dst, weight)`` mod 2^64; with
-    ``num_edges`` it names the graph in a checkpoint's manifest."""
+    the order-free sum of ``xxhash64(src, dst, weight)`` over the INPUT
+    edges (before the layout's transform) mod 2^64; with ``num_edges``,
+    the laid-out edge count, it names the graph in a checkpoint's
+    manifest."""
 
     edges: DataFrame
     num_partitions: int
@@ -122,7 +132,7 @@ class PregelRunner:
         self.spark = spark
         self.spec = spec
         # None ⇒ SCALE-ADAPTIVE: resolved from the edge count at
-        # _prepare_edges time as min(conf, max(8, ⌈edges / 75k⌉)) — the
+        # layout time as min(conf, max(8, ⌈edges / 75k⌉)) — the
         # configured shuffle partitioning is an UPPER bound chosen for the
         # cluster, and a small graph (or a shrunken residual/dup graph)
         # paying one task per configured partition spends more wall on
@@ -140,6 +150,10 @@ class PregelRunner:
         self.num_partitions = num_partitions
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
+        # per-graph inputs stored by checkpoint(): the next run releases
+        # them once its initial state is stored, so they are not pinned
+        # through every superstep
+        self._inputs: list[DataFrame] = []
 
     # ----------------------------------------------------------------- setup
 
@@ -179,7 +193,11 @@ class PregelRunner:
                     self._conf_partitions,
                     max(self.MIN_PARTITIONS, math.ceil(staged.count() / self.EDGES_PER_PARTITION)),
                 )
-            e = e.repartition(n, "src")
+            # the graph's fingerprint, observed on the input edges as
+            # they enter the layout: it depends on the input alone, not
+            # on the float sums a transform may take in shuffle order
+            fp = Observation()
+            e = e.repartition(n, "src").observe(fp, sum64(F.xxhash64(*e.columns)).alias("fp"))
             if transform is not None:
                 e = transform(e)
             # The layout is sorted within partitions so the cached edge
@@ -191,19 +209,12 @@ class PregelRunner:
             # only — tests pin float bit-identity there and nowhere else.
             # A total order over every column, so ties can't reorder.
             e = e.sortWithinPartitions(*e.columns).persist()
-            # materialize once, observing the size and an order-free
-            # fingerprint on the same job; the 64-bit hash is summed as
-            # two 32-bit halves so no partial sum can overflow a long
-            h = F.xxhash64("src", "dst", "weight")
-            row = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.shiftright(h, 32)).alias("hi"),
-                F.sum(h.bitwiseAND(0xFFFFFFFF)).alias("lo"),
-            ).collect()[0]
+            # materialize once; the fingerprint is observed on this job
+            num_edges = e.count()
             if staged is not None:
                 staged.unpersist()
-        fingerprint = ((int(row["hi"] or 0) << 32) + int(row["lo"] or 0)) % (1 << 64)
-        return Layout(e, n, int(row["n"]), fingerprint)
+        fingerprint = int(fp.get["fp"] or 0) % (1 << 64)
+        return Layout(e, n, num_edges, fingerprint)
 
     @contextlib.contextmanager
     def _laid_out(self, edges: DataFrame | Layout):
@@ -264,11 +275,14 @@ class PregelRunner:
         """``frame`` stored as one eager localCheckpoint with ``aggs``
         observed on that same job, under the loop's settings for
         ``layout``: how an operator derives a per-graph input (a vertex
-        set and its size) from a layout in one job.  The caller releases
-        the checkpoint with ``release`` once nothing reads it."""
+        set and its size) from a layout in one job.  The runner's next
+        run releases the checkpoint once its initial state, which copies
+        it, is stored; a caller that runs nothing releases it with
+        ``release`` (releasing twice is harmless)."""
         obs = Observation("checkpoint")
         with self._loop_conf(layout.num_partitions):
             out = self._barrier(frame, obs, list(aggs), frame.columns)
+        self._inputs.append(out)
         return out, obs.get
 
     # ------------------------------------------------------------- superstep
@@ -423,6 +437,8 @@ class PregelRunner:
             [F.count(F.lit(1)).alias("_n"), *global_cols], state.columns,
         )
         g = {k: obs.get[k] for k in spec.global_aggs}
+        while self._inputs:  # copied into the initial state — now dead
+            self.release(self._inputs.pop())
         prev_active = -1  # unknown → don't broadcast on step 1
 
         metrics: list[SuperstepMetrics] = []

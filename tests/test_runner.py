@@ -2,8 +2,9 @@
 exact per-step metrics against hand-computed counts, the ``max_supersteps``
 cap (including 0) on both ``run`` and ``resume``, the caller's session
 settings restored, dead barrier blocks released, the partition count
-resolved per run, the PageRank operator's job budget, a superstep plan
-that reads the cached edge layout, and the message combine:
+resolved per run, the layout's graph fingerprint, the PageRank
+operator's job budget and vertex-set release, a superstep plan that
+reads the cached edge layout, and the message combine:
 hand-computed inboxes and the map-side partial aggregate that absorbs
 inbox skew."""
 
@@ -14,6 +15,7 @@ from collections import Counter, defaultdict
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.connected_components import (
     cc_spec,
@@ -23,8 +25,9 @@ from pregel_golang_implementation_spark.operators.label_propagation import lpa_s
 from pregel_golang_implementation_spark.operators.pagerank import (
     pagerank_spec,
     prepare_pagerank_graph,
+    rank_flow,
 )
-from pregel_golang_implementation_spark.plans.runner import PregelRunner
+from pregel_golang_implementation_spark.plans.runner import PregelRunner, sum64
 from pregel_golang_implementation_spark.plans.spec import (
     COMBINERS,
     AlgorithmSpec,
@@ -272,6 +275,56 @@ def test_pagerank_operator_job_budget_and_conf_restored(spark):
     assert res.supersteps == k
     assert len(sc.statusTracker().getJobIdsForGroup("pagerank-operator-budget")) <= k + 3
     assert {key: spark.conf.get(key) for key in keys} == caller
+
+
+def test_layout_fingerprint_is_the_input_hash_sum(spark):
+    """A layout's fingerprint is Σ xxhash64(src, dst, weight) over the
+    INPUT edges mod 2^64, whatever their order or partitioning and
+    before the transform collapses them into float sums; ``num_edges``
+    counts the laid-out edges.  The sum stays exact past 2^63, where a
+    long sum raises under ANSI mode."""
+    raw = spark.createDataFrame(
+        [(0, 1, 0.1), (0, 1, 0.2), (0, 2, 0.3), (1, 2, 0.7), (2, 0, 1.0)],
+        "src long, dst long, weight double",
+    )
+    hashes = [r[0] for r in raw.select(F.xxhash64("src", "dst", "weight")).collect()]
+    runner = PregelRunner(spark, cc_spec())
+    for frame in (raw, raw.orderBy(F.desc("src")).repartition(3)):
+        lay = runner.layout(frame, lambda e: rank_flow(e, True))
+        try:
+            assert lay.fingerprint == sum(hashes) % (1 << 64)
+            assert lay.num_edges == 4
+        finally:
+            lay.unpersist()
+
+    extremes = [2**63 - 1] * 4 + [-(2**63)]
+    big = spark.createDataFrame([(h,) for h in extremes], "h long")
+    assert int(big.agg(sum64(F.col("h"))).first()[0]) == sum(extremes)
+
+
+def test_pagerank_vertex_set_released_after_init(spark, monkeypatch):
+    """The vertex-set checkpoint is copied into the initial state, so its
+    blocks are dropped before the first superstep runs."""
+    from pregel_golang_implementation_spark.operators.pagerank import pagerank
+
+    jsc = spark.sparkContext._jsc
+    seen = {}
+    checkpoint, step = PregelRunner.checkpoint, PregelRunner._one_superstep
+
+    def capture(self, frame, layout, *aggs):
+        out, row = checkpoint(self, frame, layout, *aggs)
+        seen["vertices"] = out._jdf.queryExecution().logical().rdd().id()
+        return out, row
+
+    def probe(self, *args):
+        seen.setdefault("persisted", set(jsc.getPersistentRDDs().keySet()))
+        return step(self, *args)
+
+    monkeypatch.setattr(PregelRunner, "checkpoint", capture)
+    monkeypatch.setattr(PregelRunner, "_one_superstep", probe)
+    res = pagerank(spark, _pagerank_raw(spark), tol=0.0, max_supersteps=2)
+    assert res.supersteps == 2
+    assert seen["vertices"] not in seen["persisted"]
 
 
 def _plan_outside_cache(description: str) -> tuple[list[str], dict[int, str]]:

@@ -22,11 +22,9 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.pagerank import (
-    rank_flow,
+    _pagerank_graph,
     pagerank_spec,
-    prepare_pagerank_graph,
 )
-from pregel_golang_implementation_spark.plans.runner import PregelRunner
 from pregel_golang_implementation_spark.session import get_spark
 from pregel_golang_implementation_spark.sources.graphs import edges_from_lineitem
 
@@ -51,25 +49,23 @@ def main() -> None:
     # 2. one Pregel superstep (scatter join + combine agg + apply join),
     # on the graph laid out as operators.pagerank lays it out
     edges = edges_from_lineitem(spark, sf_dir)
-    pr_edges, vertices = prepare_pagerank_graph(edges)
-    n = vertices.count()
-    runner = PregelRunner(spark, pagerank_spec(n))
-    lay = runner.layout(edges, lambda e: rank_flow(e, False))
-    e = lay.edges
-    state = runner._init_state(vertices)
-    state.count()  # materialize the cache exactly as the runner's first
-    # action does — an unmaterialized cache makes AQE's initial plan
-    # insert a defensive Exchange on the state side that execution
-    # never runs
-    # the messages-sent counter rides a CollectMetrics Observation on the
-    # PRE-shuffle message frame, so the only per-superstep exchange ships
-    # (id, msg) rows with no count partial
-    from pyspark.sql import Observation
+    with _pagerank_graph(spark, edges, False, {}, pagerank_spec) as (
+        runner, lay, vertices, _,
+    ):
+        state = runner._init_state(vertices)
+        state.count()  # materialize the cache exactly as the runner's first
+        # action does — an unmaterialized cache makes AQE's initial plan
+        # insert a defensive Exchange on the state side that execution
+        # never runs
+        # the messages-sent counter rides a CollectMetrics Observation on the
+        # PRE-shuffle message frame, so the only per-superstep exchange ships
+        # (id, msg) rows with no count partial
+        from pyspark.sql import Observation
 
-    step = runner._one_superstep(
-        state, e, {"dangling_mass": 0.0}, -1, Observation("msgs")
-    )
-    step_plan = grab(step)
+        step = runner._one_superstep(
+            state, lay.edges, {"dangling_mass": 0.0}, -1, Observation("msgs")
+        )
+        step_plan = grab(step)
     assert "CollectMetrics" in step_plan, (
         "a superstep must count messages via a pre-shuffle CollectMetrics"
     )
@@ -79,7 +75,6 @@ def main() -> None:
     sections.append(
         ("one PageRank superstep (scatter ⋈ + combine agg + apply ⋈)", step_plan)
     )
-    lay.unpersist()
 
     # 3. scale-safe vertex-id assignment: one range-partitioned pass,
     # checkpointed, then a projection adding per-partition offsets — NO
